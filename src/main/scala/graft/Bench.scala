@@ -16,6 +16,16 @@ import org.apache.spark.sql.SparkSession
   * cost for exactly this reason.
   */
 object Bench {
+  /** The storage sweep run before every cold measurement: every memo
+    * ([[graft.util.Memo.resetAll]]), the SQL cache, and every persistent
+    * RDD still registered with the context. */
+  def sweep(spark: SparkSession): Unit = {
+    graft.util.Memo.resetAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc() // nudge ContextCleaner for anything only reachable via GC
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -25,19 +35,6 @@ object Bench {
     // a previous run's leftovers)
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def sweep(): Unit = {
-      graft.er.ER.resetMemo()
-      graft.kg.GraphMetrics.resetMemo()
-      graft.kg.Graphs.resetMemo()
-      graft.kg.Rdf.resetMemo()
-      graft.dedup.Dedup.resetStores()
-      graft.queries.Incremental.resetStores()
-      graft.streaming.Streaming.resetStaging()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc() // nudge ContextCleaner for anything only reachable via GC
-    }
 
     // one untimed JVM warm-up (classloading, codegen, shuffle machinery)
     // so the first query's cold number measures the QUERY, not the JVM —
@@ -65,7 +62,7 @@ object Bench {
       else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
 
     val detailed = selected.map { case (name, fn) =>
-      sweep()
+      sweep(spark)
       val cold = timed(name) { fn(spark, sfDir).count() }
       // warm reps reuse whatever the query itself caches/memoizes —
       // that is the definition of warm; the sweep runs only before cold

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Memo
 
 /** Deduplication + similarity search over `documents`/`embeddings`
   * (SURVEY §2.D) — the LLM-training-data operators. The reference's
@@ -78,18 +79,12 @@ object Dedup {
   /** Shingle memo: FIVE consumers (ngram_jaccard, minhash_lsh,
     * clusters, incremental, the incremental store build) each re-ran
     * the explode+distinct per invocation; one eager pinned checkpoint
-    * per (session, dir), freed by [[resetStores]] (Bench's sweep) —
-    * the kg-side edgesMemo pattern. */
-  private val shinglesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * per (session, dir) ([[Memo.frames]]), freed by [[resetStores]]
+    * (Bench's sweep). */
+  private val shinglesMemo = Memo.frames[(SparkSession, String)](this)
 
   private[graft] def shingles(spark: SparkSession, dir: String): DataFrame =
-    shinglesMemo.getOrElseUpdate((spark, dir), {
-      val sh = shinglesRaw(spark, dir)
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      graft.util.Checkpoints.pin(sh)
-      sh
-    })
+    shinglesMemo((spark, dir))(shinglesRaw(spark, dir))
 
   private val shinglesSql =
     """(SELECT DISTINCT doc_id,
@@ -327,16 +322,17 @@ object Dedup {
     * is exactly what lets the probe co-partition). Returns the two
     * table names. [[resetStores]] drops the memo + tables so Bench's
     * cold measurement pays the build honestly. */
-  private val storeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+  private val storeMemo = Memo[(SparkSession, String), (String, String)](this) {
+    case ((spark, _), (hashT, sigT)) =>
+      spark.sql(s"DROP TABLE IF EXISTS $hashT")
+      spark.sql(s"DROP TABLE IF EXISTS $sigT")
+  }
 
   private[graft] def incrementalStores(spark: SparkSession, dir: String): (String, String) =
-    storeMemo.getOrElseUpdate((spark, dir), {
+    storeMemo((spark, dir)) {
       graft.functions.GraftFunctions.registerAll(spark)
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val hashT = s"graft_hashstore_$tag"
-      val sigT = s"graft_sigstore_$tag"
+      val hashT = graft.util.Scale.tableName("hashstore", dir)
+      val sigT = graft.util.Scale.tableName("sigstore", dir)
       val hist = col("doc_id") % 5 =!= 0
       graft.util.Scale.writeBucketed(
         Tables.documents(spark, dir).filter(hist)
@@ -345,23 +341,12 @@ object Dedup {
       graft.util.Scale.writeBucketed(
         bandKeys(shingles(spark, dir).filter(hist)), sigT, "key", 8)
       (hashT, sigT)
-    })
+    }
 
-  /** Drop the memoized incremental-dedup stores and their tables (next
-    * call rebuilds — Bench cold honesty, mirrors [[graft.er.ER
-    * .resetMemo]]). */
-  def resetStores(): Unit = {
-    storeMemo.foreach { case ((spark, _), (hashT, sigT)) =>
-      spark.sql(s"DROP TABLE IF EXISTS $hashT")
-      spark.sql(s"DROP TABLE IF EXISTS $sigT")
-    }
-    storeMemo.clear()
-    shinglesMemo.values.foreach { sh =>
-      graft.util.Checkpoints.unpin(sh)
-      graft.util.Checkpoints.free(sh)
-    }
-    shinglesMemo.clear()
-  }
+  /** Drop the memoized incremental-dedup stores and their tables, and
+    * the shingle checkpoints (next call rebuilds — Bench cold honesty,
+    * mirrors [[graft.er.ER.resetMemo]]). */
+  def resetStores(): Unit = Memo.reset(this)
 
   /** The signature-store probe: the batch's band keys equi-join the
     * PERSISTED store on `key` — merge-hinted so the plan is the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.util.Scale
+import graft.util.{Memo, Scale}
 
 /** Entity resolution & linking (SURVEY §2.B) — the reference's
   * `apps/entity-resolver/index.Rmd` + `data-gathering/misc/
@@ -295,7 +295,7 @@ object ER {
     * FREE the storage blocks explicitly instead of leaking them until
     * GC (the round-2 bench leak: cleared map, live blocks). */
   private val ccMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    Memo[(SparkSession, String), DataFrame](this)((_, comp) => comp.unpersist(blocking = false))
 
   /** Machine match-graph EDGES `(a, b)` — the fuzzy-match pipeline's
     * output pairs, memoized as an eager serialized checkpoint and
@@ -305,45 +305,34 @@ object ER {
     * checkpoint — the edge set is the same frame both consumers read,
     * so it is memoized once like the component map itself; Bench's
     * sweep frees it before every cold measurement). Pinned so a
-    * consumer's freeAll cannot reap memo-owned blocks. */
-  private val machineEdgesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * consumer's freeAll cannot reap memo-owned blocks.
+    *
+    * The build is eager, like every [[Memo.frames]] memo: the first
+    * caller pays the whole fuzzy-matching pipeline (about 6 s) once
+    * per session, even one that only plans a query (e.g. `.explain`
+    * of er_confirmed_merges) and never runs it. */
+  private val machineEdgesMemo = Memo.frames[(SparkSession, String)](this)
 
   private def machineEdges(spark: SparkSession, dir: String): DataFrame =
-    machineEdgesMemo.getOrElseUpdate((spark, dir), {
-      val e = erFuzzyMatch(spark, dir)
-        .select(col("id_a").as("a"), col("id_b").as("b"))
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      graft.util.Checkpoints.pin(e)
-      e
-    })
-
-  /** Drop memoized component maps AND free their storage blocks.
-    * Bench calls this before every cold measurement so each query is
-    * measured at its standalone cost; pipelines (and Verify) keep the
-    * shared result. */
-  def resetMemo(): Unit = {
-    ccMemo.values.foreach(_.unpersist(blocking = false))
-    ccMemo.clear()
-    machineEdgesMemo.values.foreach { df =>
-      graft.util.Checkpoints.unpin(df)
-      graft.util.Checkpoints.free(df)
+    machineEdgesMemo((spark, dir)) {
+      erFuzzyMatch(spark, dir).select(col("id_a").as("a"), col("id_b").as("b"))
     }
-    machineEdgesMemo.clear()
-    cascadeMemo.clear() // localCheckpoint RDDs free via ContextCleaner
-    regMemo.foreach { case ((spark, _), t) => spark.sql(s"DROP TABLE IF EXISTS $t") }
-    regMemo.clear()
-  }
+
+  /** Drop every ER memo (component maps, match edges, link cascade,
+    * registry tables) AND free their storage. Bench calls this before
+    * every cold measurement so each query is measured at its
+    * standalone cost; pipelines (and Verify) keep the shared result. */
+  def resetMemo(): Unit = Memo.reset(this)
 
   private def componentsOf(spark: SparkSession, dir: String): DataFrame =
-    ccMemo.getOrElseUpdate((spark, dir), {
+    ccMemo((spark, dir)) {
       val edges = machineEdges(spark, dir)
       val vertices = Tables.part(spark, dir).select(col("p_partkey").as("id"))
       val comp = graft.kg.Components.connectedComponents(edges, vertices)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       comp.count() // materialize now: both consumers read blocks, not lineage
       comp
-    })
+    }
 
   /** er_connected_components — cluster ids over the fuzzy-match edge
     * set (comp = min member id, singletons included) via DataFrame
@@ -409,21 +398,20 @@ object ER {
     * fallback probes by block key, which is low-cardinality — that
     * path goes through the salted join like every block pairing here,
     * never through a bucket layout that would serialize per block.) */
-  private val regMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val regMemo = Memo[(SparkSession, String), String](this) {
+    case ((spark, _), t) => spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
 
   private[graft] def registryTable(spark: SparkSession, dir: String): String =
-    regMemo.getOrElseUpdate((spark, dir), {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val t = s"graft_er_registry_$tag"
+    regMemo((spark, dir)) {
+      val t = Scale.tableName("er_registry", dir)
       val reg = Tables.part(spark, dir)
         .filter(col("p_partkey") % 5 =!= 0)
         .select(col("p_partkey").as("id"), norm(col("p_name")).as("norm"))
         .groupBy(col("norm")).agg(min(col("id")).as("canonical_id"))
       Scale.writeBucketed(reg, t, "norm", 8)
       t
-    })
+    }
 
   /** er_incremental — continuous-ingest entity resolution: a new batch
     * of mentions (part ids ≡ 0 mod 5) resolves against the PERSISTED
@@ -698,13 +686,14 @@ object ER {
     * jobs at build time), and two gated queries plus every
     * plan-walking spec construct it — memoize the finished frame per
     * (session, input) so the 4-stage materialization happens once.
-    * The frames are localCheckpointed; their RDDs free via the
-    * ContextCleaner once [[resetMemo]] drops the reference. */
-  private val cascadeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * The frame reads only its own stage checkpoints, so [[resetMemo]]
+    * frees every one of them. */
+  private val cascadeMemo = Memo[(SparkSession, String), DataFrame](this) {
+    (_, cascade) => graft.util.Checkpoints.freeAll(cascade)
+  }
 
   def erLinkCascade(spark: SparkSession, dir: String): DataFrame =
-    cascadeMemo.getOrElseUpdate((spark, dir), buildLinkCascade(spark, dir))
+    cascadeMemo((spark, dir))(buildLinkCascade(spark, dir))
 
   private def buildLinkCascade(spark: SparkSession, dir: String): DataFrame = {
     val books = Tables.part(spark, dir)

@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import Triples.{sqlCte => T, NS}
 
 /** Graph-metric and property-path completers over the statement store
@@ -65,36 +66,25 @@ object GraphMetrics {
     * has_part self-join + weight census per invocation (~1.5 s of the
     * statements union, the fanned DISTINCT branch and the pair
     * aggregation every time). One eager checkpoint per (session, dir),
-    * the ccMemo/censusMemo pattern: pinned so consumers' existing
+    * a [[Memo.frames]] memo: pinned so consumers' existing
     * free()/freeAll() calls are no-ops on it, freed by [[resetMemo]]
     * (Bench's sweep) before every cold measurement. */
-  private val edgesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val edgesMemo = Memo.frames[(SparkSession, String)](this)
 
   private[kg] def edges(spark: SparkSession, dir: String): DataFrame =
-    edgesMemo.getOrElseUpdate((spark, dir), {
-      val e = KGQueries.kgCooccur(spark, dir).select(col("p1"), col("p2"))
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      graft.util.Checkpoints.pin(e)
-      e
-    })
+    edgesMemo((spark, dir))(KGQueries.kgCooccur(spark, dir).select(col("p1"), col("p2")))
 
   /** Undirected statement-graph edge memo (both directions exploded,
     * hash-partitioned on the BFS join key `a` — localCheckpoint
     * preserves the partitioning, so every hop join is exchange-free on
     * the edge side): kg_khop rebuilt this frame on every invocation.
     * Same lifecycle as [[edgesMemo]]. */
-  private val statementEdgesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val statementEdgesMemo = Memo.frames[(SparkSession, String)](this)
 
   private[kg] def statementEdges(spark: SparkSession, dir: String): DataFrame =
-    statementEdgesMemo.getOrElseUpdate((spark, dir), {
-      val e = new TripleStore(spark, Triples.statements(spark, dir)).edges
-        .repartition(col("a"))
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      graft.util.Checkpoints.pin(e)
-      e
-    })
+    statementEdgesMemo((spark, dir)) {
+      new TripleStore(spark, Triples.statements(spark, dir)).edges.repartition(col("a"))
+    }
 
   /** kg_clustering_coeff — local clustering coefficient per node of
     * the co-occurrence network, as the exact rational
@@ -450,31 +440,17 @@ object GraphMetrics {
     * dir) however many times the queries run, and [[resetMemo]]
     * (called by Bench before cold measurements) frees the blocks
     * explicitly. */
-  private val censusMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame, Int)]
+  private val censusMemo =
+    Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame, Int)](this) {
+      case (_, (und, adj, settled, _)) => Seq(und, adj, settled).foreach(graft.util.Checkpoints.free)
+    }
 
   private def spForwardMemo(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, Int) =
-    censusMemo.getOrElseUpdate((spark, dir), spForward(spark, dir))
+    censusMemo((spark, dir))(spForward(spark, dir))
 
-  /** Drop memoized forward sweeps AND free their checkpoint blocks. */
-  def resetMemo(): Unit = {
-    censusMemo.values.foreach { case (und, adj, settled, _) =>
-      graft.util.Checkpoints.free(und)
-      graft.util.Checkpoints.free(adj)
-      graft.util.Checkpoints.free(settled)
-    }
-    censusMemo.clear()
-    edgesMemo.values.foreach { e =>
-      graft.util.Checkpoints.unpin(e)
-      graft.util.Checkpoints.free(e)
-    }
-    edgesMemo.clear()
-    statementEdgesMemo.values.foreach { e =>
-      graft.util.Checkpoints.unpin(e)
-      graft.util.Checkpoints.free(e)
-    }
-    statementEdgesMemo.clear()
-  }
+  /** Drop memoized forward sweeps and edge sets AND free their
+    * checkpoint blocks. */
+  def resetMemo(): Unit = Memo.reset(this)
 
   /** kg_sp_census — the INTEGER-EXACT half of Brandes as its own
     * oracle-gated query: all-sources BFS distances and σ shortest-path

@@ -4,6 +4,8 @@ import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
+
 /** GraphX bridge (SURVEY §2.F) — the reference's `analysis/network`
   * capability (statements → network, neighbor expansion, degree /
   * component structure) as library API over the triple store.
@@ -71,18 +73,14 @@ object Graphs {
     * harness sweeps call [[resetMemo]] before cold timings. GraphX
     * caches lineage-backed RDDs (MEMORY_ONLY), so an external
     * unpersist degrades to recompute, never wrong results. */
-  private val graphMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Graph[Unit, Unit]]
+  private val graphMemo =
+    Memo[(SparkSession, String), Graph[Unit, Unit]](this)((_, g) => g.unpersist(blocking = false))
 
   def statementsGraph(spark: SparkSession, dir: String): Graph[Unit, Unit] =
-    graphMemo.getOrElseUpdate((spark, dir),
-      fromStatements(Triples.statements(spark, dir)))
+    graphMemo((spark, dir))(fromStatements(Triples.statements(spark, dir)))
 
   /** Drop memoized statement graphs and free their cached RDDs. */
-  def resetMemo(): Unit = {
-    graphMemo.values.foreach(_.unpersist(blocking = false))
-    graphMemo.clear()
-  }
+  def resetMemo(): Unit = Memo.reset(this)
 
   /** Pin a frame to EXACTLY n partitions before the RDD handoff.
     * `coalesce` alone only shrinks — when the upstream plan ends in a

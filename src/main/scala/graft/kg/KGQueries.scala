@@ -215,21 +215,18 @@ object KGQueries {
     * undirected entity graph, with hop distance (min). Frontier BFS:
     * visited is anti-joined out so each hop only expands new nodes.
     *
-    * Edge materialization: the DIRECTED `(s, o_id)` pair frame — two
-    * longs per statement, half the undirected edge count — is
-    * checkpointed once, and each hop derives both directions from it
-    * with an in-memory explode. Every hop after the first then costs a
-    * frontier join against checkpoint blocks instead of re-deriving
-    * the full statements union from the base tables (round 1 measured
-    * the OTHER extremes: eagerly exploding the full 2× undirected edge
-    * set cost 19 s, fully-lazy edges paid ~2 statement scans; the
-    * half-frame checkpoint beats both). At scale, recurring expansions
-    * should read a bucketed-by-`a` edge layout
+    * Edge materialization: the full undirected edge frame is
+    * checkpointed once, hash-partitioned on the hop join key `a` — the
+    * memoized [[GraphMetrics.statementEdges]] frame, built once per
+    * (session, dir). Every hop then costs a frontier join against
+    * checkpoint blocks that exchanges only the frontier side, instead
+    * of re-deriving the statements from the base tables. At scale,
+    * recurring expansions should read a bucketed-by-`a` edge layout
     * ([[graft.util.Scale.writeBucketed]], plan-asserted in ScaleSpec)
     * instead of materializing the graph per query.
     *
-    * Delegates to [[TripleStore.khop]] so the pair-checkpoint
-    * lifecycle lives in exactly one place. */
+    * Delegates to [[TripleStore.khop]] so the hop loop lives in
+    * exactly one place. */
   def kgKhop(spark: SparkSession, dir: String): DataFrame = {
     val st = Triples.statements(spark, dir)
     val seeds = pat(st, "label").filter(col("o_val") === "ASIA")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.util.Exact.dayStr
+import graft.util.Memo
 import Triples.NS
 
 /** RDF text serialization of the statement store — the reference's
@@ -407,34 +408,25 @@ object Rdf {
     * scan + two broadcast prefix sides) on top of the body scan, so
     * an unmaterialized round trip re-executed the whole statement
     * render per consumer. The checkpoint is MEMOIZED per (session,
-    * input dir) with a deterministic reclaim hook — [[resetMemo]], the
-    * ER.cascadeMemo pattern — so repeated imports on a long-lived
-    * driver reuse one materialization instead of accumulating storage
-    * blocks until GC (round-9 ADVICE). Bench's sweep resets it so cold
-    * numbers stay honest. */
-  private val linesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    * input dir, format) with a deterministic reclaim hook —
+    * [[resetMemo]] frees its blocks — so repeated imports on a
+    * long-lived driver reuse one materialization instead of
+    * accumulating storage blocks until GC (round-9 ADVICE). Bench's
+    * sweep resets it so cold numbers stay honest.
+    *
+    * The checkpoint is PINNED ([[Memo.frames]]) so a consumer running
+    * the documented freeAll-after-draining convention on a derived
+    * import result cannot free the memo's blocks out from under the
+    * next kgImport* call in the same session (round-10 ADVICE). */
+  private val linesMemo = Memo.frames[(SparkSession, String, String)](this)
 
-  /** Memoize + checkpoint + PIN: the checkpoint is registered with
-    * [[graft.util.Checkpoints.pin]] so a consumer running the
-    * documented freeAll-after-draining convention on a derived import
-    * result cannot free the memo's blocks out from under the next
-    * kgImport* call in the same session (round-10 ADVICE). */
   private def memoLines(spark: SparkSession, dir: String, fmt: String,
       render: => DataFrame): DataFrame =
-    linesMemo.getOrElseUpdate((spark, dir, fmt), {
-      val cp = render.transform(graft.util.Checkpoints.compact(_, eager = true))
-      graft.util.Checkpoints.pin(cp)
-      cp
-    })
+    linesMemo((spark, dir, fmt))(render)
 
-  /** Drop the memoized rendered-lines checkpoints; their RDDs free
-    * via the ContextCleaner once unreferenced (unpinned first so
-    * sweepers may unpersist them immediately). */
-  def resetMemo(): Unit = {
-    linesMemo.values.foreach(graft.util.Checkpoints.unpin)
-    linesMemo.clear()
-  }
+  /** Drop the memoized rendered-lines checkpoints and free their
+    * blocks. */
+  def resetMemo(): Unit = Memo.reset(this)
 
   def kgImportTtl(spark: SparkSession, dir: String): DataFrame =
     parseTtl(kgExportTtl(spark, dir)) // the export IS the memoized lines frame

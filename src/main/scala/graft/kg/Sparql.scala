@@ -1026,16 +1026,15 @@ object Sparql {
   /** Per-endpoint store-materialization plan over every SERVICE body
     * of `body` (recursively — services inside OPTIONALs, UNION
     * branches, and other services' bodies): collected constant
-    * predicates (through that endpoint's dialect map), total
-    * outer-store site count, and free-predicate site count.
+    * predicates (through that endpoint's dialect map) and total
+    * outer-store site count.
     * Resolution mirrors the sub-compile's `pred()` but NEVER throws:
     * an unresolvable name is skipped (that site keeps the raw store;
     * the sub-compile raises its own loud error if the site is
     * actually reached). */
   private def serviceStorePlan(body: Body, graphs: Map[String, ServiceGraph])
-      : Map[String, (Set[String], Int, Int)] = {
+      : Map[String, (Set[String], Int)] = {
     val sites = scala.collection.mutable.Map.empty[String, Int]
-    val freeSites = scala.collection.mutable.Map.empty[String, Int]
     val preds = scala.collection.mutable.Map.empty[String, Set[String]]
     def resolvePred(g: ServiceGraph, p: String): Option[String] =
       if (p == "a") g.predAliases.get("a")
@@ -1052,9 +1051,6 @@ object Sparql {
     def walkService(ep: String, b: Body): Unit = {
       graphs.get(ep).foreach { g =>
         val pats = collectPats(b)
-        val valued = collectVals(b).collect {
-          case ValuesBlock(Seq(v), _) => v
-        }.toSet
         val valuePreds = collectVals(b).collect {
           case ValuesBlock(Seq(v), rows)
             if pats.exists(p => p.p.startsWith("?") && p.p.drop(1) == v) => rows.flatMap {
@@ -1070,8 +1066,6 @@ object Sparql {
         }
         val lbl = if (hasLbl(b)) Seq("label") else Nil
         sites(ep) = sites.getOrElse(ep, 0) + outerStoreSites(b)
-        freeSites(ep) = freeSites.getOrElse(ep, 0) +
-          pats.count(p => p.p.startsWith("?") && !valued(p.p.drop(1)))
         preds(ep) = preds.getOrElse(ep, Set.empty) ++ fixed ++ valuePreds ++ lbl
       }
       walkBody(b) // nested SERVICE blocks inside this body
@@ -1081,9 +1075,7 @@ object Sparql {
       (b.optionals ++ b.unions.flatten).foreach(walkBody)
     }
     walkBody(body)
-    sites.toMap.map { case (ep, n) =>
-      ep -> (preds.getOrElse(ep, Set.empty), n, freeSites.getOrElse(ep, 0))
-    }
+    sites.toMap.map { case (ep, n) => ep -> (preds.getOrElse(ep, Set.empty), n) }
   }
 
   def compileOn(spark: SparkSession, statements: DataFrame, q: Query,
@@ -1352,7 +1344,7 @@ object Sparql {
     // populated and skip the walk) — see [[ServiceStoreMaterializeSites]]
     val svcShared: Map[String, SharedStore] =
       if (svcStores.nonEmpty || graphs.isEmpty) svcStores
-      else serviceStorePlan(q.body, graphs).flatMap { case (ep, (ps, sites, _)) =>
+      else serviceStorePlan(q.body, graphs).flatMap { case (ep, (ps, sites)) =>
         if (sites >= ServiceStoreMaterializeSites && ps.nonEmpty)
           Some(ep -> SharedStore(ps,
             graphs(ep).statements.filter(col("p").isin(ps.toSeq: _*))
@@ -1365,10 +1357,10 @@ object Sparql {
     // service scan to it — fixed-predicate and path scans then read
     // the FULL relation instead of their branch-pruned derivations and
     // the task count doubled (kg_sparql_companions 548 → 1163 tasks).
-    // Round 13 shares BOTH tiers with the routing that attempt lacked:
-    // fixed/path/covered-VALUES scans read the per-endpoint PRUNED
-    // checkpoint, and only free-predicate scans (which must see every
-    // row anyway) read the shared RAW one — see [[SharedStore]].
+    // Round 13 shares only the PRUNED tier, with the routing that
+    // attempt lacked: fixed/path/covered-VALUES scans read the
+    // per-endpoint pruned checkpoint, and free-predicate scans keep
+    // the derived store — see [[SharedStore]].
 
     /** A sequence-path pattern compiled to the step+closure plans:
       * non-star steps are equi-joins (BGP expansion — bag semantics,
@@ -1521,9 +1513,9 @@ object Sparql {
       // every listed predicate is materialized there (they are — the
       // collection includes VALUES lists); unrestricted scans keep the
       // raw store, that IS their semantics
-      var df = predValues.get(pv) match {
-        case Some(preds) if preds.forall(sharedCovered.contains) => sharedStore.get.pruned
-        case Some(preds) if preds.forall(localPreds.contains) && prunedStore.isDefined =>
+      var df = (predValues.get(pv), sharedStore) match {
+        case (Some(preds), Some(store)) if preds.forall(store.preds.contains) => store.pruned
+        case (Some(preds), _) if preds.forall(localPreds.contains) && prunedStore.isDefined =>
           prunedStore.get
         case _ => st
       }

@@ -62,8 +62,8 @@ final class TripleStore(val spark: SparkSession, val statements: DataFrame) {
   def edges: DataFrame =
     // both directions from one statements pass (explode), not a
     // two-scan union — any consumer that leaves this lazy pays one
-    // statements scan per use, never two (khop builds its own
-    // checkpointed pair frame instead of using this)
+    // statements scan per use, never two ([[khop]] checkpoints this
+    // frame once, pre-partitioned on `a`, when ≥ 2 hops reuse it)
     statements.filter(col("o_id").isNotNull)
       .select(explode(array(
         struct(col("s").as("a"), col("o_id").as("b")),
@@ -72,16 +72,16 @@ final class TripleStore(val spark: SparkSession, val statements: DataFrame) {
 
   /** k-hop neighborhood with min hop distance (frontier BFS; the
     * frontier is anti-joined against visited so each hop only expands
-    * new nodes — sparse at every step). The directed `(s, o_id)` pair
-    * frame — two longs per statement, half the undirected edge count —
-    * is checkpointed once and both directions derive from it per hop
-    * with an in-memory explode, so no hop re-derives the statements
-    * from their source; the pair blocks are freed once the hops are
-    * materialized (see [[KGQueries.kgKhop]] for the measured
-    * alternatives). The checkpoint only pays when ≥ 2 hops reuse it —
-    * for k ≤ 1 the single consumer keeps the pair frame lazy.
-    * Recurring expansions at scale should read a bucketed-by-source
-    * edge layout instead ([[graft.util.Scale.writeBucketed]]). */
+    * new nodes — sparse at every step). For k ≥ 2 the full
+    * undirected [[edges]] frame is checkpointed once, hash-partitioned
+    * on the join key `a`, so no hop re-derives the statements from
+    * their source and every hop join exchanges only the frontier side;
+    * its blocks are freed once the hops are materialized (see
+    * [[KGQueries.kgKhop]] for the measured alternatives). For k ≤ 1
+    * the single consumer keeps the edge frame lazy. A caller may pass
+    * a prebuilt memo frame instead (the overload below). Recurring
+    * expansions at scale should read a bucketed-by-source edge layout
+    * instead ([[graft.util.Scale.writeBucketed]]). */
   def khop(seeds: DataFrame, k: Int): DataFrame = khop(seeds, k, None)
 
   /** [[khop]] with a caller-provided undirected edge frame (a memoized

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.util.Exact
+import graft.util.{Exact, Memo}
 
 /** Incremental view maintenance (SURVEY §2.C): the continuous-
   * aggregation production shape — a per-customer revenue view is kept
@@ -45,25 +45,21 @@ object Incremental {
   /** The persisted per-customer partial-aggregate store over
     * HISTORICAL orders, built once per (session, dir) and re-read as
     * a bucketed managed table. */
-  private val storeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val storeMemo = Memo[(SparkSession, String), String](this) {
+    case ((spark, _), t) => spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
 
   private[graft] def aggStoreTable(spark: SparkSession, dir: String): String =
-    storeMemo.getOrElseUpdate((spark, dir), {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val t = s"graft_aggstore_$tag"
+    storeMemo((spark, dir)) {
+      val t = graft.util.Scale.tableName("aggstore", dir)
       graft.util.Scale.writeBucketed(
         partials(Tables.orders(spark, dir).filter(!isBatch)), t, "o_custkey", NBuckets)
       t
-    })
+    }
 
-  /** Drop the memoized agg store (Bench cold honesty — mirrors
-    * [[graft.dedup.Dedup.resetStores]]). */
-  def resetStores(): Unit = {
-    storeMemo.foreach { case ((spark, _), t) => spark.sql(s"DROP TABLE IF EXISTS $t") }
-    storeMemo.clear()
-  }
+  /** Drop the memoized agg store and its table (Bench cold honesty —
+    * mirrors [[graft.dedup.Dedup.resetStores]]). */
+  def resetStores(): Unit = Memo.reset(this)
 
   /** q_incremental_agg — merge the new batch's partial aggregate into
     * the persisted view: full-outer co-located SMJ on `o_custkey`,

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.sources.Tables
 import graft.util.Exact._
+import graft.util.Memo
 
 /** Structured Streaming (SURVEY §2.E): tumbling-window aggregation
   * with a watermark and custom sessionization state, replayed
@@ -149,29 +150,22 @@ object Streaming {
     * carry user_id = -1 / event_type = "sentinel", filtered by every
     * query; timestamps are the deterministic max(ts)+3h/+6h), so the
     * cap changes listing cost, not results. */
-  private val stagedSrc = new java.util.concurrent.ConcurrentHashMap[String, (String, Timestamp)]()
+  private val stagedSrc = Memo[String, (String, Timestamp)](this)((_, v) => dropStaging(v._1))
 
   /** Staged documents dir per dataset (the [[streamQuality]] source —
     * stateless ingest needs no max-ts aggregate, just the files). */
-  private val stagedDocs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedDocs = Memo[String, String](this)((_, st) => dropStaging(st))
 
-  /** Drop all memoized staging dirs (next replay re-stages). The
-    * `_sent` side dirs hold the pre-rendered sentinel part files
-    * ([[renderSentinels]]) and live/die with their staging dir. */
-  def resetStaging(): Unit = {
-    stagedSrc.values.forEach { p =>
-      deleteRecursively(java.nio.file.Paths.get(p._1))
-      deleteRecursively(java.nio.file.Paths.get(p._1 + "_sent"))
-    }
-    stagedSrc.clear()
-    stagedDocs.values.forEach(p => deleteRecursively(java.nio.file.Paths.get(p)))
-    stagedDocs.clear()
-    stagedCdcLog.values.forEach { p =>
-      deleteRecursively(java.nio.file.Paths.get(p))
-      deleteRecursively(java.nio.file.Paths.get(p + "_sent"))
-    }
-    stagedCdcLog.clear()
+  /** Delete a staging dir and its `_sent` side dir, which holds the
+    * pre-rendered sentinel part files ([[renderSentinels]]) and
+    * lives/dies with its staging dir. */
+  private def dropStaging(st: String): Unit = {
+    deleteRecursively(java.nio.file.Paths.get(st))
+    deleteRecursively(java.nio.file.Paths.get(st + "_sent"))
   }
+
+  /** Drop all memoized staging dirs (next replay re-stages). */
+  def resetStaging(): Unit = Memo.reset(this)
 
   /** Render one-row sentinel parquet part files ONCE per staging (the
     * sentinel content is a pure function of the staged max(ts) /
@@ -228,7 +222,7 @@ object Streaming {
     val prev = sinkDirs.put(key, java.nio.file.Paths.get(sinkDir))
     if (prev != null) deleteRecursively(prev)
 
-    val (staging, maxTs) = stagedSrc.computeIfAbsent(dir, _ => {
+    val (staging, maxTs) = stagedSrc(dir) {
       val st = Files.createTempDirectory("graft_stream_src").toString
       try {
         val events = Tables.events(spark, dir)
@@ -251,13 +245,12 @@ object Streaming {
         (st, mx)
       } catch { case e: Throwable =>
         // a staging/render failure must not orphan the half-written
-        // dirs: computeIfAbsent won't memoize on throw, so
+        // dirs: a memo build that throws stores nothing, so
         // resetStaging could never reap them
-        deleteRecursively(java.nio.file.Paths.get(st))
-        deleteRecursively(java.nio.file.Paths.get(st + "_sent"))
+        dropStaging(st)
         throw e
       }
-    })
+    }
     // reap the PREVIOUS replay's sentinels now, while no query is
     // running (single-replay-at-a-time constraint above): this run's
     // query must see its own sentinels as NEW files, and the staging
@@ -437,7 +430,7 @@ object Streaming {
     * op at sequence s carries ts = base + s hours. */
   private val cdcBaseUs = 1700000000000000L
   private val cdcSchema = Encoders.product[CdcEv].schema
-  private val stagedCdcLog = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedCdcLog = Memo[String, String](this)((_, st) => dropStaging(st))
 
   private def cdcEmit(key: Long, evs: Iterator[CdcEv],
       state: org.apache.spark.sql.streaming.GroupState[CdcState]): Iterator[CdcOut] = {
@@ -485,7 +478,7 @@ object Streaming {
     sinkReaper
     val prev = sinkDirs.put("stream_cdc", java.nio.file.Paths.get(sinkDir))
     if (prev != null) deleteRecursively(prev)
-    val staging = stagedCdcLog.computeIfAbsent(dir, _ => {
+    val staging = stagedCdcLog(dir) {
       val st = Files.createTempDirectory("graft_stream_cdclog").toString
       try {
         graft.queries.Incremental.cdcLog(sess, dir)
@@ -501,11 +494,10 @@ object Streaming {
         }
         st
       } catch { case e: Throwable =>
-        deleteRecursively(java.nio.file.Paths.get(st)) // see fileReplay
-        deleteRecursively(java.nio.file.Paths.get(st + "_sent"))
+        dropStaging(st) // see fileReplay
         throw e
       }
-    })
+    }
     locally { // reap the previous replay's sentinels (fileReplay rule)
       val listing = Files.list(java.nio.file.Paths.get(staging))
       try listing.filter(_.getFileName.toString.startsWith("sentinel-"))
@@ -560,7 +552,7 @@ object Streaming {
     sinkReaper
     val prev = sinkDirs.put("stream_quality", java.nio.file.Paths.get(sinkDir))
     if (prev != null) deleteRecursively(prev)
-    val staging = stagedDocs.computeIfAbsent(dir, _ => {
+    val staging = stagedDocs(dir) {
       val st = Files.createTempDirectory("graft_stream_docs").toString
       Tables.documents(sess, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
@@ -568,7 +560,7 @@ object Streaming {
         // and the file source parallelizes by file (see fileReplay)
         .repartition(8).write.mode("append").parquet(st)
       st
-    })
+    }
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),

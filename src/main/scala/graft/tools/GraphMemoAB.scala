@@ -25,25 +25,19 @@ object GraphMemoAB {
     val dir = sys.env.getOrElse("GRAFT_SF", "/root/testdata/sf0.1")
     val reps = args.headOption.flatMap(_.toIntOption).getOrElse(3)
 
-    def sweep(): Unit = {
-      graft.kg.Graphs.resetMemo()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     def time(n: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     // JVM warm-up so rep 1 doesn't absorb classloading/codegen
-    time("kg_degree"); sweep()
+    time("kg_degree"); graft.Bench.sweep(spark)
 
     val rows = (1 to reps).map { r =>
-      sweep()
+      graft.Bench.sweep(spark)
       val aPr = time("kg_pagerank")
       val aSp = time("kg_shortest_path") // memo HIT: graph already built
-      sweep()
+      graft.Bench.sweep(spark)
       val bPr = time("kg_pagerank")
       graft.kg.Graphs.resetMemo() // isolate: force the round-11 rebuild
       val bSp = time("kg_shortest_path")

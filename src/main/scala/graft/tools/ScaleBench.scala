@@ -22,18 +22,6 @@ object ScaleBench {
     require(names.nonEmpty && names.forall(SparkEntry.queries.contains),
       s"unknown: ${names.filterNot(SparkEntry.queries.contains).mkString(",")}")
 
-    def sweep(): Unit = {
-      graft.er.ER.resetMemo()
-      graft.kg.GraphMetrics.resetMemo()
-      graft.kg.Graphs.resetMemo()
-      graft.kg.Rdf.resetMemo()
-      graft.dedup.Dedup.resetStores()
-      graft.queries.Incremental.resetStores()
-      graft.streaming.Streaming.resetStaging()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     def time(n: String, dir: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
@@ -52,10 +40,10 @@ object ScaleBench {
     // one untimed warm-up so the first query doesn't absorb JVM init
     time(names.head, small)
     names.foreach { n =>
-      sweep()
+      graft.Bench.sweep(spark)
       val sCold = time(n, small)
       val sWarm = median((1 to reps).map(_ => time(n, small)))
-      sweep()
+      graft.Bench.sweep(spark)
       val bCold = time(n, big)
       val bWarm = median((1 to reps).map(_ => time(n, big)))
       println(f"SCALE $n%-26s small cold=$sCold%7.2f warm=$sWarm%7.2f | " +

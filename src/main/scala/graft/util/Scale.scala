@@ -72,6 +72,15 @@ object Scale {
 
   private val inputFilesWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** Managed-table name for a memoized per-dataset table of `kind`:
+    * `graft_<kind>_<first 8 hex digits of md5(dir)>`, so every input
+    * dir gets its own table in the session catalog. */
+  def tableName(kind: String, dir: String): String = {
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    s"graft_${kind}_$tag"
+  }
+
   /** Write `df` as a bucketed+sorted managed table (parquet).
     *
     * Self-healing against stale locations: `mode("overwrite")` only

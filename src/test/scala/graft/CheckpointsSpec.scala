@@ -48,24 +48,30 @@ class CheckpointsSpec extends SparkSpec {
 
   test("repeated census/betweenness calls share one memoized sweep; resetMemo frees it") {
     import graft.kg.GraphMetrics
+    // compared as RDD id sets, not counts: at any GC during the calls
+    // the ContextCleaner may unpersist earlier suites' garbage, which
+    // made a count comparison fail at random
+    def liveIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     GraphMetrics.resetMemo()
-    val baseline0 = live
+    val baseline0 = liveIds
     val c1 = GraphMetrics.kgSpCensus(spark, sf).count()
-    val afterFirst = live
-    assert(afterFirst > baseline0, "first census must materialize the sweep")
+    val afterFirst = liveIds
+    val sweep = afterFirst -- baseline0
+    assert(sweep.nonEmpty, "first census must materialize the sweep")
     // second call and the betweenness consumer reuse the memo — no new
     // sweep checkpoints appear however many times either runs
     val c2 = GraphMetrics.kgSpCensus(spark, sf).count()
     assert(c1 == c2)
-    assert(live == afterFirst, "second census call created new sweep blocks")
+    assert((liveIds -- afterFirst).isEmpty && sweep.subsetOf(liveIds),
+      "second census call created new sweep blocks")
     val eb = GraphMetrics.kgEdgeBetweenness(spark, sf)
     eb.count()
     Checkpoints.freeAll(eb) // frees the per-call contrib checkpoints
-    assert(live <= afterFirst,
-      s"betweenness leaked per-call blocks: $afterFirst -> $live")
+    assert((liveIds -- afterFirst).isEmpty,
+      s"betweenness leaked per-call blocks: ${liveIds -- afterFirst}")
     GraphMetrics.resetMemo()
-    assert(live <= baseline0,
-      s"resetMemo left sweep blocks live: baseline $baseline0 -> $live")
+    assert((liveIds -- baseline0).isEmpty,
+      s"resetMemo left sweep blocks live: ${liveIds -- baseline0}")
   }
 
   test("freeAll skips memo-pinned leaves; unpin releases them") {
@@ -97,6 +103,74 @@ class CheckpointsSpec extends SparkSpec {
     assert(Rdf.kgImportTtl(spark, sf).count() == n,
       "second import in the same session must reuse live memo blocks")
     Rdf.resetMemo()
+  }
+
+  test("Memo.resetAll reclaims every memo's blocks, tables and staging dirs") {
+    import org.apache.spark.graphx.Graph
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.DataFrame
+    import graft.util.Memo
+    // one entry in every memo of the seven owners
+    def buildAll(): Unit = {
+      er.ER.erConnectedComponents(spark, sf).count() // component map + match edges
+      er.ER.erLinkCascade(spark, sf).count()
+      er.ER.erIncremental(spark, sf).count() // registry table
+      kg.GraphMetrics.kgClusteringCoeff(spark, sf).count() // co-occurrence edges
+      kg.GraphMetrics.kgSpCensus(spark, sf).count()
+      kg.KGQueries.kgKhop(spark, sf).count() // statement edges
+      kg.Graphs.statementsGraph(spark, sf)
+      kg.Rdf.kgExportNt(spark, sf).count()
+      dedup.Dedup.dedupIncremental(spark, sf).count() // shingles + stores
+      queries.Incremental.qIncrementalAgg(spark, sf).count()
+      streaming.Streaming.streamWindowAgg(spark, sf).count()
+      streaming.Streaming.streamQuality(spark, sf).count()
+      streaming.Streaming.streamCdc(spark, sf).count()
+    }
+    Memo.resetAll()
+    buildAll()
+    val memos = Memo.registered
+    assert(memos.map(_.owner).distinct.size == 7, s"owners: ${memos.map(_.owner).distinct}")
+    memos.foreach(m => assert(m.values.nonEmpty, s"a ${m.owner} memo holds no entry"))
+
+    // what each entry holds: the persistent RDDs first reached from its
+    // frames and graphs, its table names, its staging dirs
+    val persistent = spark.sparkContext.getPersistentRDDs.keySet
+    def roots(r: RDD[_]): Set[Int] =
+      if (persistent(r.id)) Set(r.id) else r.dependencies.flatMap(d => roots(d.rdd)).toSet
+    def held(v: Any): Seq[Any] = v match {
+      case df: DataFrame     => roots(df.rdd).toSeq
+      case g: Graph[_, _]    => (roots(g.vertices) ++ roots(g.edges)).toSeq
+      case d: String if new java.io.File(d).isAbsolute => Seq(new java.io.File(d))
+      case t: String         => Seq(t)
+      case p: Product        => p.productIterator.flatMap(held).toSeq
+      case _                 => Nil
+    }
+    val before = memos.map(m => m -> m.values).toMap
+    val all = before.values.flatten.flatMap(held).toSeq
+    before.foreach { case (m, vs) => vs.foreach(v =>
+      assert(held(v).nonEmpty, s"a ${m.owner} memo entry holds nothing to reclaim: $v")) }
+    val rdds = all.collect { case id: Int => id }
+    val tables = all.collect { case t: String => t }
+    val dirs = all.collect { case d: java.io.File => d }
+    assert(dirs.forall(_.isDirectory), s"staging dirs missing before reset: $dirs")
+    assert(tables.forall(t => spark.catalog.tableExists(t)), s"memo tables missing: $tables")
+
+    Memo.resetAll()
+    val left = spark.sparkContext.getPersistentRDDs.keySet
+    assert(rdds.filter(left).isEmpty, s"memo RDDs still persisted: ${rdds.filter(left)}")
+    assert(tables.filter(t => spark.catalog.tableExists(t)).isEmpty, "memo tables not dropped")
+    assert(dirs.filter(d => d.exists || new java.io.File(d.getPath + "_sent").exists).isEmpty,
+      "staging dirs not deleted")
+
+    // the next call rebuilds rather than returning the released value
+    buildAll()
+    memos.foreach { m =>
+      val olds = before(m)
+      m.values.foreach(v => assert(!olds.exists(_.asInstanceOf[AnyRef] eq v.asInstanceOf[AnyRef]),
+        s"a ${m.owner} memo returned a released value"))
+    }
+    assert(tables.forall(t => spark.catalog.tableExists(t)), "memo tables not rebuilt")
+    Memo.resetAll()
   }
 
   test("free is a no-op on derived frames and only frees checkpoint roots") {
