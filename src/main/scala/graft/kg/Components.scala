@@ -3,13 +3,12 @@ package graft.kg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** DataFrame-native graph algorithms: connected components via
-  * alternating large-star / small-star rounds (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14 — public
-  * algorithm) and fixed-iteration PageRank. Used for the reference's
-  * duplicate-cluster step (`apps/entity-resolver/index.Rmd`
-  * confirmed-merge groups) and the `analysis/network` centrality
-  * structure.
+/** DataFrame-native connected components via alternating large-star /
+  * small-star rounds (Kiveris et al., "Connected Components in
+  * MapReduce and Beyond", SoCC'14 — public algorithm). Used for the
+  * reference's duplicate-cluster step (`apps/entity-resolver/index.Rmd`
+  * confirmed-merge groups) and dedup clustering; graft's only
+  * connected-components engine (the GraphX wrapper was deleted).
   *
   * Why not GraphX here: Pregel pays per-superstep scheduling plus
   * vertex-program overhead that dominates on sparse match graphs
@@ -20,6 +19,12 @@ import org.apache.spark.sql.functions._
   * Catalyst/Tungsten (whole-stage codegen, AQE), and every round's
   * state is just an edge DataFrame — the shape that survives a 100 TB
   * edge set on 1000 executors.
+  *
+  * The crossover runs the other way for PageRank: a DataFrame
+  * fixed-iteration PageRank used to live here and lost to Pregel (10
+  * iterations over the full entity graph: 23 s vs 13 s at sf0.1,
+  * because each iteration paid a shuffle pair + checkpoint), so it was
+  * deleted and kg_pagerank runs on [[Graphs.integerPageRankMemo]].
   *
   * Semantics: component id = MIN vertex id in the component (matches
   * GraphX `connectedComponents` and the recursive-CTE oracle).
@@ -94,59 +99,5 @@ object Components {
     vertices.select(col("id").cast("long").as("id"))
       .join(stars, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-  }
-
-  /** Fixed-iteration PageRank over directed `edges` `(src, dst)` —
-    * the exact semantics of GraphX's `staticPageRank` (initial rank
-    * 1.0; per iteration `rank = resetProb + (1-resetProb) · Σ
-    * incoming rank/outdeg`; dangling mass not redistributed; ranks
-    * unnormalized; multi-edges each carry weight), spec-checked
-    * against it to 1e-6. Each iteration is one equi-join of the rank
-    * table against the (checkpointed, weighted) edge list plus one
-    * map-side-partial aggregation on dst.
-    *
-    * Measured honestly (SURVEY §5): unlike connected components, this
-    * does NOT beat GraphX — 10 fixed iterations over the full entity
-    * graph ran 23 s here vs Pregel's 13 s at sf0.1, because Pregel
-    * amortizes its setup across cached specialized joins while this
-    * loop pays a shuffle pair + checkpoint per iteration. Offered as
-    * the pure-DataFrame alternative (no RDD/GraphX dependency);
-    * kg_pagerank itself stays on [[Graphs.staticPageRank]]. */
-  def staticPageRank(edges: DataFrame, numIter: Int, resetProb: Double = 0.15,
-      normalize: Boolean = true): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .transform(graft.util.Checkpoints.compact(_, eager = true))
-    val vertices = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id")))
-      .distinct()
-      .transform(graft.util.Checkpoints.compact(_, eager = true))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val weighted = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .transform(graft.util.Checkpoints.compact(_, eager = true))
-    var ranks = vertices.withColumn("rank", lit(1.0))
-    for (_ <- 0 until numIter) {
-      val msgs = weighted.join(ranks, col("src") === col("id"))
-        .groupBy(col("dst")).agg(sum(col("rank") * col("w")).as("msg"))
-      val stepped = vertices.join(msgs, col("id") === col("dst"), "left_outer")
-        .select(col("id"),
-          (lit(resetProb) + lit(1 - resetProb) * coalesce(col("msg"), lit(0.0))).as("rank"))
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      // free the superseded iteration (no-op on the initial derived
-      // frame — Checkpoints.free only touches bare checkpoint roots)
-      graft.util.Checkpoints.free(ranks)
-      ranks = stepped
-    }
-    // GraphX (Spark 3+) normalizes the final rank sum to the vertex
-    // count, restoring the mass lost through dangling vertices —
-    // mirror it so scores are interchangeable (avg rank = 1.0).
-    // normalize = false yields the RAW iterated ranks, the comparison
-    // frame for the integer fixed-point twin
-    // ([[Graphs.integerPageRankMemo]]), which cannot normalize
-    // without reintroducing an IEEE global sum.
-    if (!normalize) return ranks
-    val stats = ranks.agg(sum(col("rank")), count(lit(1))).head()
-    val correction = stats.getLong(1).toDouble / stats.getDouble(0)
-    ranks.select(col("id"), (col("rank") * lit(correction)).as("rank"))
   }
 }

@@ -6,12 +6,17 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Memo
 
-/** GraphX bridge (SURVEY §2.F) — the reference's `analysis/network`
-  * capability (statements → network, neighbor expansion, degree /
-  * component structure) as library API over the triple store.
+/** GraphX bridge (SURVEY §2.F) — the iterative half of the
+  * reference's `analysis/network` capability (statements → network,
+  * centrality, neighbor distances) as library API over the triple
+  * store: PageRank ([[integerPageRankMemo]], kg_pagerank) and BFS
+  * distances ([[distancesMemo]], kg_shortest_path). One engine per
+  * algorithm: degree (kg_degree), connected components
+  * ([[Components]]) and closure ([[TripleStore.closure]]) run on the
+  * DataFrame engine, which wins where there is little iteration.
   *
   * Namespaced long entity ids ARE GraphX `VertexId`s — no re-keying
-  * pass. Edge-centric Pregel algorithms (CC, PageRank) are the right
+  * pass. Edge-centric Pregel algorithms (PageRank, BFS) are the right
   * shape for huge sparse graphs: state is per-vertex, messages flow
   * along co-partitioned edges.
   *
@@ -19,42 +24,34 @@ import graft.util.Memo
   * NEVER frees them on its own — on a long-running driver (or a bench
   * suite) every leaked graph pins executor storage until the session
   * dies. Every public entry point here therefore materializes its
-  * (small) result frame and unpersists the graph(s) before returning;
-  * callers get a plain DataFrame with no live RDD behind it.
+  * (small) result frame and unpersists its derived graphs before
+  * returning; callers get a plain DataFrame with no live RDD behind
+  * it, and the memoized base graph is freed by [[resetMemo]].
   */
 object Graphs {
 
   /** Entity graph from the o_id statements (attr-free edges — see the
-    * narrowing note in the body).
-    * `numPartitions` sizes the Pregel shuffles: per-superstep overhead
-    * scales with partition count, so size it to edge volume on a
-    * cluster (∝ edge bytes / 128 MB). Default (`0`) = clamp the
-    * context's parallelism to [8, 64]: measured at sf0.1 local[32],
-    * matching the core count beats the old hard-coded 8 by ~12% on
-    * PageRank/degrees, and the clamp keeps tiny local runs from
-    * paying per-partition superstep overhead.
+    * narrowing note in the body), its edges pinned to the context's
+    * parallelism clamped to [8, 64] partitions. Pregel per-superstep
+    * scheduling overhead scales with partition count: measured at
+    * sf0.1 local[32], matching the core count beats the old hard-coded
+    * 8 by ~12% on PageRank/degrees, and the clamp keeps tiny local runs
+    * from paying per-partition superstep overhead. (On a cluster the
+    * count would track edge volume, ∝ edge bytes / 128 MB, instead.)
     *
     * Callers own the returned graph's storage: call
-    * `graph.unpersist()` once results are extracted (the query-facing
-    * helpers below do this automatically). */
-  /** Pregel edge-partition clamp: per-superstep scheduling overhead
-    * scales with partition count, so track core count within [8, 64]
-    * (one tuning site for every GraphX entry point). */
-  private def clampPartitions(sc: org.apache.spark.SparkContext): Int =
-    math.min(64, math.max(8, sc.defaultParallelism))
-
-  def fromStatements(st: DataFrame, numPartitions: Int = 0): Graph[Unit, Unit] = {
-    val n =
-      if (numPartitions > 0) numPartitions
-      else clampPartitions(st.sparkSession.sparkContext)
+    * `graph.unpersist()` once results are extracted ([[statementsGraph]]
+    * does this when its memo is reset). */
+  def fromStatements(st: DataFrame): Graph[Unit, Unit] = {
+    val n = math.min(64, math.max(8, st.sparkSession.sparkContext.defaultParallelism))
     // Edge attr is Unit, NOT the predicate string: no algorithm here
-    // (CC, PageRank, BFS) reads it, and carrying it would put one
+    // (PageRank, BFS) reads it, and carrying it would put one
     // Java String per edge into the cached edge partitions — measured
     // at sf0.1, every Pregel superstep re-read ~250 MB of cached edges
     // where the attr-free graph holds ~60 MB (guide §2.3: narrower
     // types — cache and shuffle fewer bytes). Predicate-conditioned
-    // traversals filter the statements FRAME first and build their own
-    // graph; none needs a per-edge attr after construction.
+    // traversals filter the statements FRAME and run on the DataFrame
+    // fixpoint ([[TripleStore.closure]]), so no graph needs the attr.
     val edges = exactlyN(st.filter(col("o_id").isNotNull)
       .select(col("s"), col("o_id")), n)
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
@@ -106,46 +103,6 @@ object Graphs {
     out
   }
 
-  def connectedComponents(spark: SparkSession, st: DataFrame): DataFrame = {
-    val sess = spark; import sess.implicits._
-    val g = fromStatements(st)
-    val cc = g.connectedComponents()
-    extracting(cc, g) { cc.vertices.toDF("id", "comp") }
-  }
-
-  def degrees(spark: SparkSession, st: DataFrame): DataFrame = {
-    val sess = spark; import sess.implicits._
-    val g = fromStatements(st)
-    extracting(g) { g.degrees.toDF("id", "degree") }
-  }
-
-  def pageRank(spark: SparkSession, st: DataFrame, tol: Double = 0.001): DataFrame = {
-    val sess = spark; import sess.implicits._
-    val g = fromStatements(st)
-    val rg = g.pageRank(tol)
-    extracting(rg, g) { rg.vertices.toDF("id", "rank") }
-  }
-
-  /** Fixed-iteration PageRank: deterministic step count (no
-    * convergence probe), the variant to prefer for reproducible
-    * pipeline output and bounded cost at scale. */
-  def staticPageRank(spark: SparkSession, st: DataFrame, numIter: Int = 10): DataFrame = {
-    val sess = spark; import sess.implicits._
-    val g = fromStatements(st)
-    val rg = g.staticPageRank(numIter)
-    extracting(rg, g) { rg.vertices.toDF("id", "rank") }
-  }
-
-  /** [[staticPageRank]] over the MEMOIZED statements graph (the
-    * former kg_pagerank entry, kept as the float scale path): only
-    * the derived rank graph is freed; the base graph stays cached
-    * for the session's other GraphX entries. */
-  def staticPageRankMemo(spark: SparkSession, dir: String, numIter: Int = 10): DataFrame = {
-    val sess = spark; import sess.implicits._
-    val rg = statementsGraph(spark, dir).staticPageRank(numIter)
-    extracting(rg) { rg.vertices.toDF("id", "rank") }
-  }
-
   /** Fixed-point scale for [[integerPageRankMemo]]: rank 1.0 = 10¹².
     * Headroom bound: unnormalized PageRank mass is conserved-or-lost,
     * so every intermediate (a rank, a message sum) is ≤ V·S; with
@@ -155,12 +112,15 @@ object Graphs {
   val PrScale: Long = 1000000000000L
 
   /** Integer fixed-point static PageRank over the MEMOIZED statements
-    * graph — the round-12 [R]→[O] conversion of kg_pagerank. The
-    * float version is rows-only forever: per-vertex rank is an IEEE
-    * SUM of incoming contributions whose addition order depends on
-    * shuffle partitioning, and hub in-degree is unbounded. This twin
-    * replaces every float op with an INTEGER one, all exactly
-    * associative/commutative and therefore order-independent:
+    * graph — the round-12 [R]→[O] conversion of kg_pagerank, and
+    * graft's only PageRank (the GraphX float `staticPageRank` wrappers
+    * and the DataFrame twin were deleted; see kg_pagerank for the
+    * measured engine choice). Float PageRank is rows-only forever:
+    * per-vertex rank is an IEEE SUM of incoming contributions whose
+    * addition order depends on shuffle partitioning, and hub in-degree
+    * is unbounded. This engine replaces every float op with an INTEGER
+    * one, all exactly associative/commutative and therefore
+    * order-independent:
     *
     *   - rank is a scaled Int64 (1.0 = [[PrScale]] = S);
     *   - an edge contribution is `rank div outdeg` (floor division —
@@ -181,9 +141,10 @@ object Graphs {
     * Every value is deterministic bit-for-bit under any partitioning,
     * so DuckDB replays the 10 iterations as unrolled CTEs in HUGEINT
     * (kg_random_walk pattern) and the driver hash-gates it.
-    * Agreement with float PageRank is spec-bounded: the per-edge
-    * floor quantization propagates as err ≤ (indeg·S⁻¹)/(1−0.85),
-    * ≪ 1e-6 at spec scale (GraphsSpec). Structure mirrors GraphX's
+    * Agreement with float PageRank is spec-bounded against GraphX's
+    * own unnormalized `PageRank.runWithOptions`: the per-edge floor
+    * quantization propagates as err ≤ (indeg·S⁻¹)/(1−0.85), ≪ 1e-6
+    * at spec scale (GraphsSpec). Structure mirrors GraphX's
     * own PageRank loop (aggregateMessages + outerJoinVertices, all
     * vertices updated every round — dangling vertices still decay),
     * reference: org.apache.spark.graphx.lib.PageRank.runWithOptions. */
@@ -238,29 +199,22 @@ object Graphs {
   }
 
   /** Edge-centric BFS shortest-path distances from a (small) seed set
-    * over the UNDIRECTED entity graph — the Pregel twin of
-    * [[TripleStore.distances]] (result-identical, spec-checked).
-    * Per-vertex state is one int; a superstep relaxes `dist+1` across
-    * both directions of every edge and only improved vertices message
-    * on — so a superstep is one co-partitioned message shuffle over
-    * cached RDDs, where a DataFrame BFS hop pays join + distinct +
-    * anti-join + checkpoint + count. BFS-to-exhaustion runs
-    * eccentricity-many rounds (7 on the test topology), which is why
-    * Pregel wins here (measured at sf0.1: 5.8 s vs 11.9 s warm; the
-    * residual cost is the statements-scan graph build both engines
-    * pay) while the 2-hop kg_khop stays on the DataFrame engine. Seeds are a
+    * over the UNDIRECTED MEMOIZED statements graph — the
+    * kg_shortest_path entry; only the derived BFS graphs are freed, the
+    * base graph stays cached. Per-vertex state is one int; a superstep
+    * relaxes `dist+1` across both directions of every edge and only
+    * improved vertices message on — so a superstep is one
+    * co-partitioned message shuffle over cached RDDs, where a DataFrame
+    * BFS hop pays join + distinct + anti-join + checkpoint + count.
+    * BFS-to-exhaustion runs eccentricity-many rounds (7 on the test
+    * topology), which is why Pregel won here (measured at sf0.1: 5.8 s
+    * vs 11.9 s warm for the DataFrame BFS, since deleted; the residual
+    * cost is the statements-scan graph build both engines paid) while
+    * the 2-hop kg_khop stays on the DataFrame engine. Seeds are a
     * query-sized set (collected to the driver, like every seed set in
     * the suite — never data-sized). */
-  def distances(spark: SparkSession, st: DataFrame, seeds: DataFrame): DataFrame =
-    distancesOn(spark, fromStatements(st), seeds, ownsGraph = true)
-
-  /** [[distances]] over the MEMOIZED statements graph (the
-    * kg_shortest_path entry) — base graph stays cached. */
-  def distancesMemo(spark: SparkSession, dir: String, seeds: DataFrame): DataFrame =
-    distancesOn(spark, statementsGraph(spark, dir), seeds, ownsGraph = false)
-
-  private def distancesOn(spark: SparkSession, g: Graph[Unit, Unit],
-      seeds: DataFrame, ownsGraph: Boolean): DataFrame = {
+  def distancesMemo(spark: SparkSession, dir: String, seeds: DataFrame): DataFrame = {
+    val g = statementsGraph(spark, dir)
     val sess = spark; import sess.implicits._
     val seedIds = seeds.select(col("node").cast("long"))
       .collect().map(_.getLong(0)).toSet
@@ -276,62 +230,16 @@ object Graphs {
         else Iterator.empty
       },
       math.min)
-    val freed: Seq[Graph[_, _]] =
-      if (ownsGraph) Seq(res, g, init) else Seq(res, init)
-    extracting(freed: _*) {
+    extracting(res, init) {
       val reached = res.vertices.filter(_._2 != Int.MaxValue).toDF("node", "dist")
       // Graph.fromEdges materializes only edge ENDPOINTS: a seed with
       // no entity edge (literal-only node) never becomes a vertex, but
-      // the contract (and the DataFrame twin + the oracle) emits every
-      // seed at distance 0 — add the missing ones back
+      // the contract (and the oracle) emits every seed at distance 0 —
+      // add the missing ones back
       val isolated = seeds.select(col("node")).distinct()
         .join(reached.select("node"), Seq("node"), "left_anti")
         .withColumn("dist", lit(0))
       reached.unionAll(isolated)
-    }
-  }
-
-  /** Edge-centric transitive closure (SPARQL `p+` for DEEP graphs):
-    * every vertex accumulates the set of vertices reachable from it;
-    * each superstep, a vertex pushes `{self} ∪ reach(self)` backwards
-    * along in-edges to sources that don't know it yet, until no set
-    * grows. Result-identical to the DataFrame fixpoint
-    * ([[TripleStore.closure]], spec-checked on the test graph).
-    *
-    * When to prefer which (measured in GraphsSpec, SURVEY §5): both
-    * need O(depth) rounds, but a Pregel superstep is one co-partitioned
-    * message shuffle over cached RDDs while a fixpoint round is a
-    * join + distinct + anti-join + checkpoint + count — so on deep
-    * skinny hierarchies (depth ≫ per-vertex reach) Pregel's cheaper
-    * round wins, while on shallow/bushy graphs (the common KG shape,
-    * depth ≤ ~4) the DataFrame fixpoint wins on setup cost and keeps
-    * Catalyst/AQE. The per-vertex SET state also means Pregel degrades
-    * when reach sets approach graph size — the fixpoint's flat pair
-    * table is the safe shape there. */
-  def closure(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val sess = spark; import sess.implicits._
-    // closure pays O(depth) supersteps — exactly the workload the
-    // shared clamp exists for
-    val n = clampPartitions(spark.sparkContext)
-    val eRdd = exactlyN(edges.select(col("a").cast("long"), col("b").cast("long"))
-      .filter(col("a").isNotNull && col("b").isNotNull), n) // same contract as fromStatements
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val g = Graph.fromEdges[Set[Long], Unit](eRdd, Set.empty[Long])
-    val done = g.pregel(Set.empty[Long])(
-      (_, attr, msg) => attr ++ msg,
-      triplet => {
-        // ship only the elements the source doesn't know yet — vprog
-        // merges with ++, so this is result-identical and keeps the
-        // per-superstep message volume ∝ NEW facts, not full sets
-        val fresh = (triplet.dstAttr + triplet.dstId) -- triplet.srcAttr
-        if (fresh.isEmpty) Iterator.empty
-        else Iterator((triplet.srcId, fresh))
-      },
-      _ ++ _)
-    extracting(done, g) {
-      done.vertices
-        .flatMap { case (id, rs) => rs.iterator.map(r => (id, r)) }
-        .toDF("s", "reach")
     }
   }
 }

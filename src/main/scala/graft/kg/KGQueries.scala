@@ -326,15 +326,16 @@ object KGQueries {
     * bounds it, so the oracle's recursion cap of 11 carries
     * comfortable margin.
     *
-    * Engine choice, measured at sf0.1 (both implementations kept and
-    * spec-proven identical): eccentricity-many rounds make this the
-    * deep-iteration case — Pregel [[Graphs.distances]] 5.8 s warm vs
-    * the DataFrame fixpoint [[TripleStore.distances]] 11.9 s (even
-    * with the edge set checkpointed pre-partitioned on the join key),
-    * because a superstep is one message shuffle while a fixpoint hop
-    * is join + distinct + anti-join + checkpoint + count. Same
-    * crossover logic as kg_pagerank (iterations favor Pregel) vs
-    * er_connected_components (few rounds favor DataFrame). */
+    * Engine choice, measured at sf0.1: eccentricity-many rounds make
+    * this the deep-iteration case — Pregel BFS 5.8 s warm vs a
+    * DataFrame frontier fixpoint 11.9 s (even with the edge set
+    * checkpointed pre-partitioned on the join key), because a
+    * superstep is one message shuffle while a fixpoint hop is join +
+    * distinct + anti-join + checkpoint + count. The Pregel engine
+    * ([[Graphs.distancesMemo]]) serves the query; the DataFrame twin
+    * was deleted. Same crossover logic as kg_pagerank (iterations
+    * favor Pregel) vs er_connected_components (few rounds favor
+    * DataFrame). */
   def kgShortestPath(spark: SparkSession, dir: String): DataFrame = {
     val st = Triples.statements(spark, dir)
     val seeds = pat(st, "label").filter(col("o_val") === "ASIA")
@@ -485,9 +486,11 @@ object KGQueries {
     * measured at sf0.1: a degree count has no iteration, so the
     * DataFrame aggregate (2.8 s warm, the statements scan dominating)
     * beats building a GraphX graph for `g.degrees` (4.2 s — RDD
-    * conversion + graph cache paid for one pass); [[Graphs.degrees]]
-    * stays for callers already holding a graph, spec-proven identical. Same crossover rule as everywhere: Pregel for iteration
-    * (pagerank, BFS), Catalyst for one-pass aggregates. */
+    * conversion + graph cache paid for one pass), so the GraphX
+    * wrapper was deleted; KGSpec still checks this aggregate against
+    * GraphX's own `g.degrees`. Same crossover rule as everywhere:
+    * Pregel for iteration (pagerank, BFS), Catalyst for one-pass
+    * aggregates. */
   def kgDegree(spark: SparkSession, dir: String): DataFrame = {
     val st = Triples.statements(spark, dir)
     st.filter(col("o_id").isNotNull)
@@ -508,14 +511,15 @@ object KGQueries {
     * [R] — per-vertex rank was an IEEE sum over unbounded hub
     * in-degree, order-dependent by construction; forcing an order
     * would mean collecting hub-in-degree arrays per row, the banned
-    * anti-pattern. The fixed-point twin sidesteps IEEE instead of
+    * anti-pattern. The fixed-point engine sidesteps IEEE instead of
     * ordering it: the only quantization is one floor-division per
-    * edge contribution (≤ 10⁻¹² each), spec-bounded against the float
-    * engines at 1e-6 (GraphsSpec; the GraphX-vs-DataFrame float spec
-    * stays too). Engine shape is unchanged — the same GraphX
+    * edge contribution (≤ 10⁻¹² each), spec-bounded at 1e-6 against
+    * GraphX's own unnormalized float `PageRank.runWithOptions`
+    * (GraphsSpec). Engine shape is unchanged — the same GraphX
     * aggregateMessages loop over the MEMOIZED statements graph
     * (iterations favor Pregel: 13 s vs 23 s DataFrame at sf0.1,
-    * SURVEY §5), with per-step edge materialization mirroring
+    * SURVEY §5; the GraphX float wrappers and the DataFrame PageRank
+    * were deleted), with per-step edge materialization mirroring
     * PageRank.runWithOptions' unpersist cadence. Contract change vs
     * GraphX: ranks are UNNORMALIZED (the final mass correction is a
     * global float division — reintroducing it would re-break

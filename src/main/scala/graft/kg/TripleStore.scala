@@ -89,9 +89,11 @@ final class TripleStore(val spark: SparkSession, val statements: DataFrame) {
     * memo-owned, so the free below no-ops on it. */
   def khop(seeds: DataFrame, k: Int, prebuilt: Option[DataFrame]): DataFrame = {
     // ≥ 2 hops: materialize the undirected edges PRE-PARTITIONED on
-    // the join key `a` (the [[distances]] lesson — localCheckpoint
-    // preserves the hash partitioning), so every hop's join exchanges
-    // only the frontier side; one hop keeps the single lazy scan.
+    // the join key `a` (localCheckpoint preserves the hash
+    // partitioning), so every hop's join exchanges only the frontier
+    // side; one hop keeps the single lazy scan. Measured at sf0.1 on
+    // the since-deleted DataFrame BFS-to-exhaustion: the co-partitioned
+    // checkpoint removed 7 full-edge exchanges, 14.2 s → 11.9 s warm.
     val e = prebuilt.getOrElse {
       if (k >= 2) edges.repartition(col("a"))
         .transform(graft.util.Checkpoints.compact(_, eager = true))
@@ -112,51 +114,6 @@ final class TripleStore(val spark: SparkSession, val statements: DataFrame) {
       frontier = next
     }
     graft.util.Checkpoints.free(e) // no-op when e stayed lazy
-    visited
-  }
-
-  /** Single-source (or multi-seed) shortest-path distances over the
-    * undirected entity graph: [[khop]] run to exhaustion — the loop
-    * stops when a hop adds no new node, so the result carries the true
-    * min hop distance for every REACHABLE node (BFS = shortest path on
-    * an unweighted graph). Same frontier/anti-join/checkpoint
-    * lifecycle as khop: each hop expands only the new frontier, and
-    * superseded visited snapshots are freed as soon as their successor
-    * is materialized, so live blocks stay O(result) across hops. */
-  def distances(seeds: DataFrame): DataFrame = {
-    import graft.util.Checkpoints.free
-    // Unlike khop's fixed 2 hops, BFS-to-exhaustion joins the edge set
-    // once per graph-diameter hop — so the undirected edges are
-    // materialized PRE-PARTITIONED on the join key `a` (localCheckpoint
-    // preserves the hash partitioning in the LogicalRDD), and every
-    // hop's join shuffles only the frontier side. Measured at sf0.1:
-    // 14.2 s warm with a per-hop edge shuffle → the co-partitioned
-    // checkpoint removes 7 full-edge exchanges. At scale the same role
-    // is played by a bucketed-by-`a` edge layout
-    // ([[graft.util.Scale.writeBucketed]]).
-    val e = edges.repartition(col("a")).transform(graft.util.Checkpoints.compact(_, eager = true))
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0)).transform(graft.util.Checkpoints.compact(_, eager = true))
-    var frontier = visited.select("node")
-    var hop = 1
-    var growing = true
-    while (growing) {
-      val next = frontier.join(e, col("node") === col("a"))
-        .select(col("b").as("node")).distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      growing = next.count() > 0
-      if (!(frontier eq visited)) free(frontier)
-      if (growing) {
-        val grown = visited.unionAll(next.withColumn("dist", lit(hop)))
-          .transform(graft.util.Checkpoints.compact(_, eager = true))
-        free(visited)
-        visited = grown
-        frontier = next
-        hop += 1
-      } else free(next)
-    }
-    free(e)
     visited
   }
 
@@ -220,9 +177,6 @@ final class TripleStore(val spark: SparkSession, val statements: DataFrame) {
           .when(col("a_val") === col("b_val"), "match")
           .otherwise("conflict").as("status"))
   }
-
-  /** GraphX view of this store. */
-  def graph = Graphs.fromStatements(statements)
 }
 
 object TripleStore {
@@ -268,13 +222,6 @@ object TripleStore {
     if (!(acc eq e)) free(e) // the result no longer references the edge set
     acc
   }
-
-  /** Transitive closure of an arbitrary `(a, b)` edge frame — the
-    * DataFrame fixpoint behind `closure`/`path`, exposed for closures
-    * over non-statement edge sets (and for racing it against the
-    * Pregel engine, [[Graphs.closure]]). */
-  def closureOf(edges: DataFrame): DataFrame =
-    fixpoint(edges).select(col("a").as("s"), col("b").as("reach"))
 
   /** Store over the test star schema's RML-lite mapping. */
   def apply(spark: SparkSession, dir: String): TripleStore =

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.er.ER
-import graft.kg.{Graphs, Triples}
 
 class ERSpec extends SparkSpec {
 
@@ -100,12 +99,6 @@ class ERSpec extends SparkSpec {
     assert(got.values.exists(r => r.getAs[Any]("exact_dup_of") != null))
     assert(got.values.exists(r => r.getAs[Any]("near_dup_of") != null))
     assert(got.values.exists(_.getAs[Boolean]("is_new")))
-  }
-
-  test("graphx degrees/pagerank run over statements") {
-    val st = Triples.statements(spark, sf)
-    assert(Graphs.degrees(spark, st).count() > 0)
-    assert(Graphs.pageRank(spark, st, 0.01).count() > 0)
   }
 
   test("er_survivorship: one golden record per cluster, rules hold") {

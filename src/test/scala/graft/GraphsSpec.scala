@@ -1,75 +1,60 @@
 package graft
 
+import org.apache.spark.graphx.lib.PageRank
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.kg.{Graphs, TripleStore, Triples}
 
-/** Pregel transitive closure: result-identical to the DataFrame
-  * fixpoint, and the measured crossover between the two engines —
-  * deep skinny chains favor Pregel's cheap supersteps, the shallow
-  * bushy test KG favors the fixpoint (documented in Graphs.closure's
-  * scaladoc and SURVEY §5). */
+/** The graph engines against references that are not graft code:
+  * the closure fixpoint against the exact pair set of a deep chain,
+  * integer PageRank against GraphX's own float PageRank, and the
+  * memoized statements graph's lifecycle (shared instance, survives
+  * the queries it serves, rebuilt to identical results after reset),
+  * plus the BFS isolated-seed contract. */
 class GraphsSpec extends SparkSpec {
 
-  test("Pregel closure matches the DataFrame fixpoint on the test graph") {
-    val store = TripleStore(spark, Triples.statements(spark, sf))
-    val edges = store.statements
-      .filter(col("p").isin("in_nation", "in_region"))
-      .select(col("s").as("a"), col("o_id").as("b"))
-    val pregel = Graphs.closure(spark, edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixpoint = store.closure(Seq("in_nation", "in_region"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pregel == fixpoint)
-    assert(pregel.nonEmpty)
-  }
+  /** The ASIA region node — kg_shortest_path's seed. */
+  private def asiaSeeds(st: DataFrame): DataFrame =
+    st.filter(col("p") === "label").filter(col("o_val") === "ASIA")
+      .filter(col("s") >= lit(Triples.REGION * Triples.NS) &&
+        col("s") < lit((Triples.REGION + 1) * Triples.NS))
+      .select(col("s").as("node"))
 
-  test("deep-chain closure: Pregel and fixpoint agree; crossover measured") {
+  test("deep-chain closure: the fixpoint returns exactly the chain's pair set") {
     // a depth-64 chain is the adversarial case for the per-round
-    // fixpoint (64 join+checkpoint rounds for 64 supersteps)
+    // fixpoint (64 join+checkpoint rounds)
     val sess = spark; import sess.implicits._
     val depth = 64
-    val chain = (0 until depth).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (pregel, tp) = timed {
-      Graphs.closure(spark, chain)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val (fix, tf) = timed {
-      val r = TripleStore.closureOf(chain)
-      val s = r.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      graft.util.Checkpoints.freeAll(r)
-      s
-    }
-    info(f"depth-$depth chain: pregel $tp%.1f s, fixpoint $tf%.1f s")
-    assert(pregel == fix)
-    // expected closure of a chain: all (i, j) with i < j <= depth
-    assert(pregel.size == (depth + 1) * depth / 2)
+    val chain = (0 until depth)
+      .map(i => (i.toLong, "next", Option((i + 1).toLong), Option.empty[String]))
+      .toDF("s", "p", "o_id", "o_val")
+    val r = TripleStore(spark, chain).closure(Seq("next"))
+    val got = r.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    graft.util.Checkpoints.freeAll(r)
+    val expected = (for (i <- 0 to depth; j <- i + 1 to depth) yield (i.toLong, j.toLong)).toSet
+    assert(got == expected)
   }
 
   test("integer fixed-point PageRank: bounded agreement with the float twin; exact filter") {
-    val sess = spark; import sess.implicits._
     // full (unfiltered) fixed-point ranks at spec scale
     val fixed = Graphs.integerPageRankMemo(spark, sf, numIter = 10, threshold = -1L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(fixed.nonEmpty)
-    // the raw (unnormalized) float iteration — same semantics minus
-    // the per-edge floor quantization
-    val st = Triples.statements(spark, sf)
-    val edges = st.filter(org.apache.spark.sql.functions.col("o_id").isNotNull)
-      .select(col("s").as("src"), col("o_id").as("dst"))
-    val float = graft.kg.Components.staticPageRank(edges, numIter = 10, normalize = false)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    // GraphX's own raw (unnormalized) float iteration — same semantics
+    // minus the per-edge floor quantization
+    val g = Graphs.fromStatements(Triples.statements(spark, sf))
+    val ref = PageRank.runWithOptions(g, 10, 0.15, None, normalized = false)
+    val float = ref.vertices.collect().toMap
+    ref.unpersist(blocking = false)
+    g.unpersist(blocking = false)
+    assert(float.keySet == fixed.map(_._1).toSet)
     // quantization bound: one floor per edge contribution (≤ 1e-12),
     // amplified ≤ 1/(1−0.85) across iterations and scaled by hub
     // in-degree — ≪ 1e-6 at sf0.001 (max in-degree ~1e3)
     var worst = 0.0
-    fixed.foreach { case (id, _, rank) =>
-      val f = float.getOrElse(id, 0.15) // vertices outside the edge set hold the reset mass
-      worst = math.max(worst, math.abs(rank - f))
-    }
+    fixed.foreach { case (id, _, rank) => worst = math.max(worst, math.abs(rank - float(id))) }
     assert(worst <= 1e-6, s"fixed-point vs float drift $worst exceeds the quantization bound")
     // the shipped filter is the exact integer threshold
     val hubs = Graphs.integerPageRankMemo(spark, sf, numIter = 10)
@@ -87,29 +72,42 @@ class GraphsSpec extends SparkSpec {
     val g1 = Graphs.statementsGraph(spark, sf)
     val g2 = Graphs.statementsGraph(spark, sf)
     assert(g1 eq g2, "memo must return the cached graph instance")
-    // memo-served entries equal the build-per-call twins
-    val viaMemo = Graphs.staticPageRankMemo(spark, sf, numIter = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val viaBuild = Graphs.staticPageRank(spark, Triples.statements(spark, sf), numIter = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    assert(viaMemo.keySet == viaBuild.keySet)
-    viaMemo.foreach { case (k, v) => assert(math.abs(v - viaBuild(k)) <= 1e-9, s"rank at $k") }
-    // serving a query must NOT have freed the base graph: a second
-    // memo-served query still runs against the same instance
+    val seeds = asiaSeeds(Triples.statements(spark, sf))
+    // integer ranks and int distances: exact equality is correct
+    def ranks() = Graphs.integerPageRankMemo(spark, sf, numIter = 3, threshold = -1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    def dists() = Graphs.distancesMemo(spark, sf, seeds)
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
+    val (pr1, d1) = (ranks(), dists())
+    assert(pr1.nonEmpty && d1.nonEmpty)
+    // serving both queries must NOT have freed or replaced the base graph
     assert(Graphs.statementsGraph(spark, sf) eq g1)
-    val st = Triples.statements(spark, sf)
-    val seeds = st.filter(col("p") === "label").filter(col("o_val") === "ASIA")
-      .filter(col("s") >= lit(Triples.REGION * Triples.NS) &&
-        col("s") < lit((Triples.REGION + 1) * Triples.NS))
-      .select(col("s").as("node"))
-    val dMemo = Graphs.distancesMemo(spark, sf, seeds)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    val dBuild = Graphs.distances(spark, st, seeds)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(dMemo == dBuild, "memo-served BFS must equal the build-per-call twin")
-    // reset drops the entry — the next ask is a fresh build
+    assert(g1.edges.getStorageLevel != StorageLevel.NONE, "base graph edges must stay cached")
+    // reset drops and frees the entry — the next ask is a fresh build
     Graphs.resetMemo()
+    assert(g1.edges.getStorageLevel == StorageLevel.NONE, "reset must free the base graph")
     assert(!(Graphs.statementsGraph(spark, sf) eq g1), "reset must drop the memo")
+    assert(ranks() == pr1, "PageRank over the rebuilt graph must equal the pre-reset result")
+    assert(dists() == d1, "BFS over the rebuilt graph must equal the pre-reset result")
+    Graphs.resetMemo()
+  }
+
+  test("shortest-path BFS: a seed outside the graph is emitted once at distance 0") {
+    val sess = spark; import sess.implicits._
+    val st = Triples.statements(spark, sf)
+    // below every entity namespace, so no statement mentions it and
+    // Graph.fromEdges never makes it a vertex
+    val ghost = Triples.NS - 1
+    assert(st.filter(col("s") === ghost || col("o_id") === ghost).isEmpty)
+    val asia = asiaSeeds(st)
+    val base = Graphs.distancesMemo(spark, sf, asia)
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    val withGhost = Graphs.distancesMemo(spark, sf, asia.unionAll(Seq(ghost, ghost).toDF("node")))
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(base.nonEmpty && !base.exists(_._1 == ghost))
+    assert(withGhost.map(_._1).distinct.length == withGhost.length, "no node may appear twice")
+    val (lost, extra) = (base.toSet -- withGhost, withGhost.toSet -- base)
+    assert(lost.isEmpty && extra == Set(ghost -> 0), s"lost $lost, extra $extra")
     Graphs.resetMemo()
   }
 }
