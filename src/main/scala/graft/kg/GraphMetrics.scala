@@ -78,12 +78,14 @@ object GraphMetrics {
     * hash-partitioned on the BFS join key `a` — localCheckpoint
     * preserves the partitioning, so every hop join is exchange-free on
     * the edge side): kg_khop rebuilt this frame on every invocation.
-    * Same lifecycle as [[edgesMemo]]. */
+    * Same lifecycle as [[edgesMemo]]. The entry is built from the
+    * caller's statements frame `st` (kg_khop's own, over `dir`) on a
+    * miss, so a cold kg_khop builds the statements once, not twice. */
   private val statementEdgesMemo = Memo.frames[(SparkSession, String)](this)
 
-  private[kg] def statementEdges(spark: SparkSession, dir: String): DataFrame =
+  private[kg] def statementEdges(spark: SparkSession, dir: String, st: DataFrame): DataFrame =
     statementEdgesMemo((spark, dir)) {
-      new TripleStore(spark, Triples.statements(spark, dir)).edges.repartition(col("a"))
+      new TripleStore(spark, st).edges.repartition(col("a"))
     }
 
   /** kg_clustering_coeff — local clustering coefficient per node of

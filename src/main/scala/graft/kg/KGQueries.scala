@@ -218,12 +218,13 @@ object KGQueries {
     * Edge materialization: the full undirected edge frame is
     * checkpointed once, hash-partitioned on the hop join key `a` — the
     * memoized [[GraphMetrics.statementEdges]] frame, built once per
-    * (session, dir). Every hop then costs a frontier join against
-    * checkpoint blocks that exchanges only the frontier side, instead
-    * of re-deriving the statements from the base tables. At scale,
-    * recurring expansions should read a bucketed-by-`a` edge layout
-    * ([[graft.util.Scale.writeBucketed]], plan-asserted in ScaleSpec)
-    * instead of materializing the graph per query.
+    * (session, dir) from this call's statements frame `st`, so a cold
+    * call derives the statements once. Every hop then costs a frontier
+    * join against checkpoint blocks that exchanges only the frontier
+    * side, instead of re-deriving the statements from the base tables.
+    * At scale, recurring expansions should read a bucketed-by-`a` edge
+    * layout ([[graft.util.Scale.writeBucketed]], plan-asserted in
+    * ScaleSpec) instead of materializing the graph per query.
     *
     * Delegates to [[TripleStore.khop]] so the hop loop lives in
     * exactly one place. */
@@ -236,7 +237,7 @@ object KGQueries {
     // checkpoint (GraphMetrics.statementEdges) — rebuilt per
     // invocation it was the query's dominant repeated cost
     TripleStore(spark, st).khop(seeds, k = 2,
-      prebuilt = Some(GraphMetrics.statementEdges(spark, dir)))
+      prebuilt = Some(GraphMetrics.statementEdges(spark, dir, st)))
   }
 
   /** kg_cooccur — companions network (apps/companions): part pairs

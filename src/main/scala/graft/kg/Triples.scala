@@ -79,9 +79,18 @@ object Triples {
 
   /** Statements from an explicit rule set — the execution half of the
     * mapping front-end (rules come from [[rules]] or from a parsed
-    * [[Mapping]] config). Pure projection+union, no shuffle except the
-    * DISTINCT branches. */
-  def mapped(spark: SparkSession, dir: String, mappingRules: Seq[Rule]): DataFrame = {
+    * [[Mapping]] config). Pure projection+union, one read per distinct
+    * table, no shuffle except the DISTINCT branches. */
+  def mapped(spark: SparkSession, dir: String, mappingRules: Seq[Rule]): DataFrame =
+    mappedFrom(sources(spark, dir, mappingRules), mappingRules)
+
+  /** One [[Tables.load]] per distinct table name: each load resolves the
+    * source and runs a footer job, so rules over the same table share
+    * one frame instead of paying that once per rule. */
+  private def sources(spark: SparkSession, dir: String, rs: Seq[Rule]): Map[String, DataFrame] =
+    rs.map(_.table).distinct.map(t => t -> Tables.load(spark, dir, t)).toMap
+
+  private def mappedFrom(tables: Map[String, DataFrame], mappingRules: Seq[Rule]): DataFrame = {
     require(mappingRules.nonEmpty, "mapping requires at least one rule")
     mappingRules.map { r =>
       // DISTINCT branches (the lineitem edge maps) fan out of the scan
@@ -91,7 +100,7 @@ object Triples {
       // serial per branch at sf0.1, the largest fixed cost every
       // statements consumer paid. The narrow (sKey, oCol) projection is
       // what shuffles, and only for distinct rules.
-      val src0 = Tables.load(spark, dir, r.table)
+      val src0 = tables(r.table)
       val src =
         if (r.distinct) graft.util.Scale.fanScan(
           src0.select(col(r.sKey), col(r.oCol)), Seq(col(r.sKey), col(r.oCol)))
@@ -112,10 +121,11 @@ object Triples {
     }.reduce(_ unionAll _)
   }
 
-  /** The full statements DataFrame: `(s, p, o_id, o_val, lang)`. */
+  /** The full statements DataFrame: `(s, p, o_id, o_val, lang)`. The
+    * German-label branch reads the same `customer` frame as the rules. */
   def statements(spark: SparkSession, dir: String): DataFrame = {
-    val base = mapped(spark, dir, rules)
-    val de = Tables.customer(spark, dir)
+    val tables = sources(spark, dir, rules)
+    val de = tables("customer")
       .filter(col("c_custkey") % 3 === 0)
       .select(
         id(CUSTOMER, col("c_custkey")).as("s"),
@@ -123,7 +133,7 @@ object Triples {
         lit(null).cast("long").as("o_id"),
         concat(lit("DE "), col("c_name")).cast("string").as("o_val"),
         lit("de").as("lang"))
-    base.unionAll(de)
+    mappedFrom(tables, rules).unionAll(de)
   }
 
   /** DuckDB CTE defining the identical `triples` relation. */

@@ -10,6 +10,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * column pruning from whatever the query above selects — readers must
   * never `.cache()` or materialize eagerly: at 100 TB the scan has to
   * stay lazy so partition pruning / pushed filters reach the source.
+  *
+  * Lazy is not free: each `load` resolves the source and runs one Spark
+  * job to read the parquet footer for the schema — about 0.1 s per load
+  * at sf0.01 on 4 cores, paid again by every call. Plan builders should
+  * therefore load each table once per plan and share the frame between
+  * branches (as [[graft.kg.Triples.statements]] does).
   */
 object Tables {
   val all: Seq[String] = Seq(

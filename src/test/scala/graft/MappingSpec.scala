@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.kg.{Mapping, Triples}
@@ -84,6 +85,28 @@ class MappingSpec extends SparkSpec {
     val fromConfig = Triples.mapped(spark, sf, Mapping.parse(yaml))
     val builtIn = Triples.mapped(spark, sf, Triples.rules)
     assert(checksum(fromConfig) == checksum(builtIn))
+  }
+
+  /** (leaf count, distinct relation count) over the `HadoopFsRelation`
+    * of every `LogicalRelation` leaf in `df`'s analyzed plan. Relations
+    * are told apart by reference: one `Tables.load` is one instance,
+    * and the `LogicalRelation` around it may be renewed by analysis. */
+  private def reads(df: DataFrame): (Int, Int) = {
+    val rels = df.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r }
+    (rels.size, rels.foldLeft(List.empty[HadoopFsRelation])((seen, r) =>
+      if (seen.exists(_ eq r)) seen else r :: seen).size)
+  }
+
+  test("statements read each source table once, whatever the rule count") {
+    val tables = Triples.rules.map(_.table).distinct.size
+    assert(tables == 7)
+    // 16 rules + the German-label branch over customer
+    assert(reads(Triples.statements(spark, sf)) == ((17, tables)),
+      "(leaves, distinct relations) of Triples.statements")
+    assert(reads(Triples.mapped(spark, sf, Triples.rules)) == ((16, tables)),
+      "(leaves, distinct relations) of Triples.mapped")
   }
 
   test("malformed configs fail loudly with a line number") {
