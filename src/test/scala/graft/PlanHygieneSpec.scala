@@ -1,6 +1,47 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+
 class PlanHygieneSpec extends SparkSpec {
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  // The registry keys both gates check. Without the reference .rq
+  // corpus its runners cannot build a plan at all, so exactly those
+  // keys are left out, and each must fail on that missing corpus and
+  // on nothing else: the list can neither miss a corpus-bound key (the
+  // gate would fail on its file) nor hide another key's failure. With
+  // the corpus present every key is checked.
+  private lazy val gated: Seq[(String, Query)] = {
+    val all = SparkEntry.queries.toSeq
+    if (ReferenceCorpus.present) all
+    else {
+      val (corpusBound, rest) = all.partition { case (name, _) => ReferenceCorpus.keys(name) }
+      corpusBound.foreach { case (name, fn) =>
+        val outcome =
+          try { fn(spark, sf); "built a plan" }
+          catch { case NonFatal(e) => s"failed with: ${e.getMessage}" }
+        assert(outcome.contains("reference query corpus not found"),
+          s"$name is listed as corpus-bound, but without the corpus it $outcome")
+      }
+      rest
+    }
+  }
+
+  private def gatedQueries(): Seq[(String, Query)] = {
+    if (!ReferenceCorpus.present)
+      info(s"reference .rq corpus absent at '${ReferenceCorpus.dir}': left out " +
+        s"${ReferenceCorpus.keys.size} keys that read it: " +
+        ReferenceCorpus.keys.toSeq.sorted.mkString(", "))
+    gated
+  }
+
+  private def planOf(name: String, fn: Query): SparkPlan =
+    try fn(spark, sf).queryExecution.executedPlan
+    catch { case NonFatal(e) => fail(s"$name: no plan: ${e.getMessage}", e) }
 
   // Queries whose nested-loop join is INTENDED and bounded: either an
   // exact all-pairs baseline (documented — the scale path is the
@@ -54,7 +95,6 @@ class PlanHygieneSpec extends SparkSpec {
       "result — input is 50 rows by construction (orderBy+limit), never the box"))
 
   test("no cartesian products, no unbounded nested loops, no single-partition windows") {
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.window.WindowExec
     // collectWithSubqueries: a single-partition window hiding inside a
@@ -65,8 +105,8 @@ class PlanHygieneSpec extends SparkSpec {
         case n if f.isDefinedAt(n)    => Seq(f(n))
       }.flatten
     val offenders = scala.collection.mutable.ListBuffer[String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val physical = fn(spark, sf).queryExecution.executedPlan
+    gatedQueries().foreach { case (name, fn) =>
+      val physical = planOf(name, fn)
       val plan = physical.toString
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
@@ -90,7 +130,7 @@ class PlanHygieneSpec extends SparkSpec {
   // fails loudly where the runtime would silently fall back.
   test("every whole-stage codegen stage compiles under the JVM method limit") {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    import org.apache.spark.sql.execution.{ApplyColumnarRulesAndInsertTransitions, CollapseCodegenStages, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{ApplyColumnarRulesAndInsertTransitions, CollapseCodegenStages, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val limit = spark.sessionState.conf.hugeMethodLimit
     // ROUND-11 BLIND-SPOT FIX: an UNEXECUTED AdaptiveSparkPlanExec
@@ -112,8 +152,9 @@ class PlanHygieneSpec extends SparkSpec {
     }.flatten
     val offenders = scala.collection.mutable.ListBuffer[String]()
     var totalStages = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val found = stages(fn(spark, sf).queryExecution.executedPlan)
+    val queries = gatedQueries()
+    queries.foreach { case (name, fn) =>
+      val found = stages(planOf(name, fn))
       totalStages += found.size
       found.foreach { w =>
         try {
@@ -130,9 +171,10 @@ class PlanHygieneSpec extends SparkSpec {
     }
     // the no-op regression guard: if a Spark upgrade moves the codegen
     // hook again, fail loudly instead of green-compiling nothing
-    assert(totalStages > SparkEntry.queries.size,
-      s"gate saw only $totalStages codegen stages across ${SparkEntry.queries.size} " +
+    assert(totalStages > queries.size,
+      s"gate saw only $totalStages codegen stages across ${queries.size} " +
         "queries — the stage-collection hook has gone blind again")
+    info(s"compiled $totalStages codegen stages across ${queries.size} keys")
     assert(offenders.isEmpty,
       s"silent codegen fallback would fire for:\n  ${offenders.mkString("\n  ")}")
   }

@@ -916,10 +916,8 @@ class SparqlSpec extends SparkSpec {
     // the reference file's exact WHERE-clause shape: sitelink
     // reification, corresponding-property lookup, the SERVICE block
     // whose body is one OPTIONAL group, and the IF verdict
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/data-publishing/factgrid/queries/compare-factgrid-wikidata_many_items.rq")),
-      "UTF-8")
-    val q = Sparql.parse(text)
+    ReferenceCorpus.assumePresent()
+    val q = Sparql.parse(Sparql.referenceText("compare-factgrid-wikidata_many_items.rq"))
     assert(q.services.size == 1)
     val sv = q.services.head
     assert(sv.endpoint == "https://query.wikidata.org/sparql")
@@ -931,10 +929,10 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("recursive parse: the ENTIRE reference .rq corpus parses structurally (22/22)") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val dir = Paths.get("/root/reference/data-publishing/factgrid/queries")
-    assume(Files.isDirectory(dir), "reference corpus not present")
+    ReferenceCorpus.assumePresent()
+    val dir = ReferenceCorpus.dir
     val files = Files.list(dir).iterator().asScala.toList
       .filter(_.getFileName.toString.endsWith(".rq"))
     assert(files.size == 22)
@@ -973,7 +971,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("companions_and_relations.rq runs VERBATIM: 5-branch federated union end-to-end") {
-    import org.apache.spark.sql.functions.col
+    ReferenceCorpus.assumePresent()
     val out = Sparql.kgSparqlCompanions(spark, sf)
     assert(out.columns.toSeq == Seq("fg_item", "fg_itemLabel", "wd_item", "value",
       "valueLabel", "relation", "relation_stringLabel", "image", "source"))
@@ -993,6 +991,11 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("network-02/03 run VERBATIM: statement-node class walk + double IRI round trip") {
+    // an UNSEEDED disconnected component must stay a loud reject
+    val e = intercept[IllegalArgumentException](Sparql.run(spark, sf,
+      "SELECT ?a ?b WHERE { ?a in_nation ?n . ?x in_region ?b . }"))
+    assert(e.getMessage.contains("not constant-seeded"))
+    ReferenceCorpus.assumePresent()
     val n3 = Sparql.kgSparqlNet3(spark, sf)
     assert(n3.columns.toSeq == Seq("fg_item", "fg_itemLabel", "property1",
       "property1Label", "item1", "item1Label"))
@@ -1012,58 +1015,28 @@ class SparqlSpec extends SparkSpec {
       .startsWith("http://www.wikidata.org/entity/Q")))
     assert(r2.forall(_.getAs[String]("wd_value")
       .startsWith("http://www.wikidata.org/entity/Q1")))
-    // an UNSEEDED disconnected component must stay a loud reject
-    val e = intercept[IllegalArgumentException](Sparql.run(spark, sf,
-      "SELECT ?a ?b WHERE { ?a in_nation ?n . ?x in_region ?b . }"))
-    assert(e.getMessage.contains("not constant-seeded"))
   }
 
   test("EVERY reference .rq file has a byte-for-byte oracle-gated runner") {
     // file → SparkEntry key; the runner reads the file's bytes via
-    // referenceText (nothing edited, only dialect maps supplied)
-    val runners = Map(
-      "lokale-from-factgrid.rq" -> "kg_sparql_lokale",
-      "network-00-starting-point.rq" -> "kg_sparql_net0",
-      "network-01-remove-na.rq" -> "kg_sparql_net1",
-      "network-02-starting-point.rq" -> "kg_sparql_net2",
-      "network-03-federated.rq" -> "kg_sparql_net3",
-      "companions_and_relations.rq" -> "kg_sparql_companions",
-      "companions_and_relations_no_constants.rq" -> "kg_sparql_noconst",
-      "companions_hirschfeld.rq" -> "kg_sparql_hirschfeld",
-      "db_all_person_relations.rq" -> "kg_sparql_family",
-      "get_wiki_sitelinks.rq" -> "kg_sparql_wikilinks",
-      "get_wiki_sitelinks_removena.rq" -> "kg_sparql_wikilinks_rna",
-      "get_factgrid_ids_from_wikidata.rq" -> "kg_sparql_fgids",
-      "get_factgrid_ids_from_wikidata-removena.rq" -> "kg_sparql_fgids_rna",
-      "get_gnd_from_fg_and_wd.rq" -> "kg_sparql_gnd",
-      "compare-factgrid-wikidata_one_item.rq" -> "kg_sparql_cmp1",
-      "compare-factgrid-wikidata_many_items.rq" -> "kg_sparql_cmp",
-      "persons_factgrid_wikidata.rq" -> "kg_sparql_persons",
-      "orgs_factgrid_wikidata.rq" -> "kg_sparql_orgs",
-      "get_all_properties_with_corresponding_prop.rq" -> "kg_sparql_props",
-      "get_all_properties_person_with_corresponding_prop.rq" -> "kg_sparql_props_person",
-      "time-items.rq" -> "kg_sparql_time",
-      "test.rq" -> "kg_sparql_test")
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val dir = Paths.get("/root/reference/data-publishing/factgrid/queries")
-    val files = Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".rq")).toSet
-    assert(files == runners.keySet,
-      s"corpus drift: missing=${files -- runners.keySet} extra=${runners.keySet -- files}")
+    // referenceText (nothing edited, only dialect maps supplied). The
+    // registry half needs no corpus; only the drift check reads it.
+    val runners = ReferenceCorpus.runners
     runners.values.foreach { key =>
       assert(Sparql.queries.contains(key), s"$key not registered")
       assert(Sparql.oracles.contains(key), s"$key has no oracle")
     }
+    ReferenceCorpus.assumePresent()
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = ReferenceCorpus.dir
+    val files = Files.list(dir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".rq")).toSet
+    assert(files == runners.keySet,
+      s"corpus drift: missing=${files -- runners.keySet} extra=${runners.keySet -- files}")
   }
 
   test("verbatim network files + the typing rules that make them runnable") {
-    // network-00/01 run byte-for-byte through their dialect maps
-    val n0 = Sparql.kgSparqlNet0(spark, sf)
-    assert(n0.count() > 0)
-    assert(n0.columns.toSeq == Seq("root", "rootLabel", "property1Label",
-      "item1", "item1Label", "property2Label", "item2", "item2Label"))
-    assert(Sparql.kgSparqlNet1(spark, sf).count() > 0)
     // the unreferenced-object rule keeps multiplicity without binding
     val free = Sparql.run(spark, sf, Sparql.predFreeText)
     val st = graft.kg.Triples.statements(spark, sf)
@@ -1079,6 +1052,13 @@ class SparqlSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](Sparql.run(spark, sf, q))
       assert(e.getMessage.contains("type-ambiguous"), s"'$q' must stay a loud reject")
     }
+    // network-00/01 run byte-for-byte through their dialect maps
+    ReferenceCorpus.assumePresent()
+    val n0 = Sparql.kgSparqlNet0(spark, sf)
+    assert(n0.count() > 0)
+    assert(n0.columns.toSeq == Seq("root", "rootLabel", "property1Label",
+      "item1", "item1Label", "property2Label", "item2", "item2Label"))
+    assert(Sparql.kgSparqlNet1(spark, sf).count() > 0)
   }
 
   test("referenceText: corpus dir is overridable via system property; absent dir fails with pointer") {
