@@ -3,6 +3,8 @@ package graft.kg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.{Checkpoints, Fixpoint}
+
 /** DataFrame-native connected components via alternating large-star /
   * small-star rounds (Kiveris et al., "Connected Components in
   * MapReduce and Beyond", SoCC'14 — public algorithm). Used for the
@@ -46,7 +48,7 @@ object Components {
     // dedups the round's edge set anyway (groupBy/min are unaffected
     // by duplicate inputs), so deduping here bought nothing but one
     // extra exchange per round — the per-round edge SET, and with it
-    // the convergence checksum, is unchanged
+    // the convergence signature, is unchanged
   }
 
   /** small-star(u): for the neighbors not larger than u, link them all
@@ -61,41 +63,25 @@ object Components {
       .distinct()
   }
 
-  /** (row count, order-independent content hash) — cheap convergence
-    * check: one aggregate job over the checkpointed edge set. XOR of
-    * per-row hashes is commutative and overflow-free (the edge set is
-    * distinct, so XOR cancellation of duplicate rows cannot occur). */
-  private def checksum(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  /** One round: large-star, then small-star. */
+  private[graft] def starRound(e: DataFrame): DataFrame = smallStar(largeStar(e))
 
   /** Connected components of the undirected graph given by `edges`
     * `(a, b)` (any orientation, self-loops ignored) over the vertex
     * universe `vertices` `(id)`. Returns `(id, comp)` with
     * comp = min id of the component; vertices with no edge map to
-    * themselves. Each round localCheckpoints (bounded lineage) — the
-    * fixpoint loop never re-executes upstream plans — and unpersists
-    * the superseded round's checkpoint once its successor is
-    * materialized, so live blocks stay O(edges), not O(edges × rounds). */
+    * themselves. The rounds settle in [[graft.util.Fixpoint.settle]]:
+    * each round's edge set is distinct, so its signature identifies
+    * it. */
   def connectedComponents(edges: DataFrame, vertices: DataFrame): DataFrame = {
-    var e = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .transform(graft.util.Checkpoints.compact(_, eager = true))
-    var prev = checksum(e)
-    var converged = prev._1 == 0L
-    while (!converged) {
-      val next = smallStar(largeStar(e)).transform(graft.util.Checkpoints.compact(_, eager = true))
-      val cur = checksum(next)
-      converged = cur == prev
-      prev = cur
-      graft.util.Checkpoints.free(e) // superseded round
-      e = next
-    }
+    val (fixed, _) = Fixpoint.settle(
+      edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct()
+        .transform(Checkpoints.compact(_, eager = true)))(starRound)
     // fixpoint edges are stars (child -> min-id root); roots and
     // isolated vertices fall out of the left join as comp = id
-    val stars = e.groupBy(col("a").as("id")).agg(min(col("b")).as("comp"))
+    val stars = fixed.groupBy(col("a").as("id")).agg(min(col("b")).as("comp"))
     vertices.select(col("id").cast("long").as("id"))
       .join(stars, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))

@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Memo
+import graft.util.{Fixpoint, Memo}
 import Triples.{sqlCte => T, NS}
 
 /** Graph-metric and property-path completers over the statement store
@@ -295,35 +295,25 @@ object GraphMetrics {
     *
     * Scale: each round is one groupBy-count + two semi-joins on the
     * (shrinking) edge set — the standard distributed peeling loop
-    * (rounds ≈ peeling depth, small on heavy-tailed graphs); each
-    * round's edge set localCheckpoints so the plan never grows with
-    * the iteration count, and the previous round's blocks free
-    * eagerly. No collect touches data-sized state — convergence is
-    * decided on two scalar counts. */
+    * (rounds ≈ peeling depth, small on heavy-tailed graphs), settled
+    * by [[graft.util.Fixpoint.settle]]. Peeling only removes edges, so
+    * an unchanged edge count already means an unchanged edge set. No
+    * collect touches data-sized state. */
   def kgKcore(spark: SparkSession, dir: String): DataFrame = {
     val e0 = edges(spark, dir)
     val allNodes = e0.select(col("p1").as("node"))
       .union(e0.select(col("p2").as("node"))).distinct()
       .transform(graft.util.Checkpoints.compact(_, eager = true))
-    var adj = e0.select(col("p1").as("a"), col("p2").as("b"))
-      .union(e0.select(col("p2").as("a"), col("p1").as("b")))
-      .transform(graft.util.Checkpoints.compact(_, eager = true))
-    graft.util.Checkpoints.free(e0)
-    var before = adj.count()
-    var changed = before > 0
-    while (changed) {
-      val keep = adj.groupBy(col("a")).agg(count(lit(1)).as("d"))
+    val (adj, _) = Fixpoint.settle(
+      e0.select(col("p1").as("a"), col("p2").as("b"))
+        .union(e0.select(col("p2").as("a"), col("p1").as("b")))
+        .transform(graft.util.Checkpoints.compact(_, eager = true))) { e =>
+      val keep = e.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= KcoreK).select(col("a").as("k"))
-      val next = adj
+      e
         .join(keep.withColumnRenamed("k", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("k", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      val after = next.count()
-      graft.util.Checkpoints.free(adj)
-      adj = next
-      changed = after != before
-      before = after
     }
     val core = adj.select(col("a").as("node")).distinct().withColumn("inc", lit(true))
     val out = allNodes.join(core, Seq("node"), "left_outer")
@@ -403,34 +393,16 @@ object GraphMetrics {
       .union(und.select(col("b").as("a"), col("a").as("b")))
       .transform(graft.util.Checkpoints.compact(_, eager = true))
     val nodes = adj.select(col("a").as("node")).distinct()
-    var settled = nodes.select(col("node").as("src"), col("node"),
-      lit(0).as("dist"), lit(1.0).as("sigma")).transform(graft.util.Checkpoints.compact(_, eager = true))
-    var frontier = settled
-    var d = 0
-    var go = true
-    while (go) {
-      val cand = frontier.join(adj, frontier("node") === adj("a"))
-        .select(frontier("src"), adj("b").as("node"), col("sigma"))
-      val nxt = cand
-        .join(settled.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
-        .groupBy(col("src"), col("node")).agg(sum(col("sigma")).as("sigma"))
-        .withColumn("dist", lit(d + 1))
-        .select(col("src"), col("node"), col("dist"), col("sigma"))
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      if (nxt.isEmpty) { graft.util.Checkpoints.free(nxt); go = false }
-      else {
-        val prev = settled
-        settled = settled.unionByName(nxt).transform(graft.util.Checkpoints.compact(_, eager = true))
-        graft.util.Checkpoints.free(prev)
-        graft.util.Checkpoints.free(frontier)
-        frontier = nxt
-        d += 1
-      }
+    // level-synchronous: the frontier is one BFS level, so every new
+    // row's dist is the frontier's plus one
+    val (settled, d) = Fixpoint.grow(nodes.select(col("node").as("src"), col("node"),
+        lit(0).as("dist"), lit(1.0).as("sigma")).transform(graft.util.Checkpoints.compact(_, eager = true))) {
+      (frontier, settled) =>
+        frontier.join(adj, frontier("node") === adj("a"))
+          .select(frontier("src"), adj("b").as("node"), (frontier("dist") + 1).as("dist"), col("sigma"))
+          .join(settled.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
+          .groupBy(col("src"), col("node"), col("dist")).agg(sum(col("sigma")).as("sigma"))
     }
-    // the last non-empty frontier is folded into settled's own
-    // checkpoint; free it (unless the graph had no edges at all and
-    // frontier still IS the initial settled)
-    if (!(frontier eq settled)) graft.util.Checkpoints.free(frontier)
     (und, adj, settled, d)
   }
 

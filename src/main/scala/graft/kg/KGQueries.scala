@@ -26,7 +26,7 @@ import Triples.{sqlCte => T, NS}
   * `s`, so a pattern is a pruned scan, and pattern-joins shuffle only
   * the pattern subsets (never the whole store). The label dimension and
   * seed sets are broadcast. Fixpoint loops keep a sparse frontier
-  * (anti-join visited) and localCheckpoint per hop to bound lineage.
+  * (anti-join visited) and run in [[graft.util.Fixpoint]].
   */
 object KGQueries {
 
@@ -89,48 +89,11 @@ object KGQueries {
   }
 
   /** kg_property_path — `(in_nation|in_region)+` transitive closure:
-    * all (entity, transitively-containing place) pairs, via semi-naive
-    * iterative fixpoint (the Spark shape of SPARQL path closure).
-    * Scale: each hop joins only the previous frontier (not the whole
-    * closure) against the edge set; new pairs are deduped with a
-    * LEFT-ANTI join against the (checkpointed, materialized) closure —
-    * never an exceptAll re-aggregation of the whole closure — and the
-    * emptiness check is a count on the already-materialized
-    * checkpoint, not a separate plan execution. localCheckpoint per
-    * hop bounds lineage; superseded checkpoints are unpersisted as
-    * soon as their successor is materialized, so live blocks stay
-    * O(closure) across rounds and across repeated calls. */
-  def kgPropertyPath(spark: SparkSession, dir: String): DataFrame = {
-    import graft.util.Checkpoints.free
-    val st = Triples.statements(spark, dir)
-    val edges = st.filter(col("p").isin("in_nation", "in_region"))
-      .select(col("s").as("a"), col("o_id").as("b"))
-      .distinct()
-      .transform(graft.util.Checkpoints.compact(_, eager = true))
-    var closure = edges
-    var frontier = edges
-    var growing = true
-    while (growing) {
-      val next = frontier
-        .join(edges.withColumnRenamed("a", "b_").withColumnRenamed("b", "c"), col("b") === col("b_"))
-        .select(col("a"), col("c").as("b"))
-        .distinct()
-        .join(closure, Seq("a", "b"), "left_anti")
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      growing = next.count() > 0
-      if (!(frontier eq closure) && !(frontier eq edges)) free(frontier)
-      if (growing) {
-        // next is disjoint from closure (anti-joined) and internally
-        // distinct, so the union needs no re-distinct
-        val grown = closure.unionAll(next).transform(graft.util.Checkpoints.compact(_, eager = true))
-        if (!(closure eq edges)) free(closure)
-        closure = grown
-        frontier = next
-      } else free(next)
-    }
-    if (!(closure eq edges)) free(edges)
-    closure.select(col("a").as("s"), col("b").as("reach"))
-  }
+    * all (entity, transitively-containing place) pairs, via the
+    * semi-naive [[TripleStore.closure]] (the Spark shape of SPARQL path
+    * closure). */
+  def kgPropertyPath(spark: SparkSession, dir: String): DataFrame =
+    TripleStore(spark, Triples.statements(spark, dir)).closure(Seq("in_nation", "in_region"))
 
   /** kg_minus — SPARQL MINUS / FILTER NOT EXISTS: customers located in
     * a nation, minus those whose market segment is BUILDING — the

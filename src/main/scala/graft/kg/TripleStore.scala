@@ -3,6 +3,8 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.{Checkpoints, Fixpoint}
+
 /** User-facing query DSL over a statements table — the programmatic
   * face of the SPARQL-class capability (what a reference user writes
   * instead of a .rq file). All methods return lazy DataFrames, so
@@ -118,10 +120,7 @@ final class TripleStore(val spark: SparkSession, val statements: DataFrame) {
   }
 
   /** Transitive closure over a predicate alternation — SPARQL
-    * `(p1|p2)+`. Semi-naive iterative fixpoint: each hop joins only
-    * the frontier, dedups new pairs with a left-anti join against the
-    * materialized closure, and checks emptiness via a count on the
-    * checkpoint (no separate plan execution). */
+    * `(p1|p2)+`, via the semi-naive [[TripleStore.fixpoint]]. */
   def closure(preds: Seq[String]): DataFrame =
     TripleStore.fixpoint(
       statements.filter(col("p").isin(preds: _*))
@@ -183,44 +182,26 @@ object TripleStore {
 
   /** Transitive-closure fixpoint over an edge set `(a, b)`: returns
     * all pairs reachable via 1+ edge steps, optionally restricted to
-    * start pairs `seed` (defaults to the edges themselves). Semi-naive:
-    * per hop, only the frontier joins the edge set; dedup is a
-    * left-anti against the materialized closure; emptiness is a count
-    * on the eager checkpoint. Shared by `closure` and `path`.
-    *
-    * Checkpoint lifecycle: each round's union copies the closure into
-    * a NEW checkpoint, so the superseded closure snapshot and the
-    * consumed frontier are unpersisted as soon as their successor is
-    * materialized ([[graft.util.Checkpoints.free]]) — live blocks stay
-    * O(closure), not O(closure × rounds), across a long-running
-    * session. Only the returned closure (and, when it IS the result,
-    * the edge checkpoint) outlives the call; callers that loop should
-    * free the result once consumed. */
+    * start pairs `seed` (defaults to the edges themselves). Semi-naive
+    * ([[graft.util.Fixpoint.grow]]): per hop, only the frontier joins
+    * the edge set, and new pairs are deduped with a left-anti join
+    * against the materialized closure, never an exceptAll
+    * re-aggregation of it. Shared by `closure`, `path` and the SPARQL
+    * path steps. */
   private[kg] def fixpoint(edges: DataFrame, seed: Option[DataFrame] = None): DataFrame = {
-    import graft.util.Checkpoints.free
-    val e = edges.distinct().transform(graft.util.Checkpoints.compact(_, eager = true))
-    var acc = seed.map(_.distinct().transform(graft.util.Checkpoints.compact(_, eager = true))).getOrElse(e)
-    var frontier = acc
-    var growing = true
-    while (growing) {
-      val next = frontier
-        .join(e.withColumnRenamed("a", "b_").withColumnRenamed("b", "c"), col("b") === col("b_"))
-        .select(col("a"), col("c").as("b"))
-        .distinct()
-        .join(acc, Seq("a", "b"), "left_anti")
-        .transform(graft.util.Checkpoints.compact(_, eager = true))
-      growing = next.count() > 0
-      // the old frontier is fully consumed once `next` is materialized
-      if (!(frontier eq acc) && !(frontier eq e)) free(frontier)
-      if (growing) {
-        val grown = acc.unionAll(next).transform(graft.util.Checkpoints.compact(_, eager = true))
-        if (!(acc eq e)) free(acc) // superseded closure snapshot
-        acc = grown
-        frontier = next
-      } else free(next) // empty last frontier
+    val e = edges.distinct().transform(Checkpoints.compact(_, eager = true))
+    val hop = (frontier: DataFrame, closure: DataFrame) => frontier
+      .join(e.withColumnRenamed("a", "b_").withColumnRenamed("b", "c"), col("b") === col("b_"))
+      .select(col("a"), col("c").as("b"))
+      .distinct()
+      .join(closure, Seq("a", "b"), "left_anti")
+    seed match {
+      case None => Fixpoint.grow(e)(hop)._1 // the edge set is the seed
+      case Some(s) =>
+        val (closure, _) = Fixpoint.grow(s.distinct().transform(Checkpoints.compact(_, eager = true)))(hop)
+        Checkpoints.free(e)
+        closure
     }
-    if (!(acc eq e)) free(e) // the result no longer references the edge set
-    acc
   }
 
   /** Store over the test star schema's RML-lite mapping. */

@@ -4,11 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lifecycle helper for `localCheckpoint`ed DataFrames. Spark never
-  * frees the RDD blocks behind a local checkpoint on its own — a
-  * fixpoint loop that replaces its accumulator each round without
-  * freeing the superseded checkpoint accumulates dead blocks for the
-  * life of the session (fine for one query, a leak for a long-running
-  * driver issuing many closures).
+  * frees the RDD blocks behind a local checkpoint on its own, so
+  * whoever makes one frees it: [[Fixpoint]] its round frames, [[Memo]]
+  * its shared frames, a query the checkpoints it owns.
   */
 object Checkpoints {
 

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.kg.{Components, KGQueries, TripleStore}
+import graft.kg.{Components, GraphMetrics, KGQueries, TripleStore}
 import graft.util.Checkpoints
 
 /** Checkpoint lifecycle: the fixpoint loops (closure / property path /
-  * connected components) unpersist superseded round checkpoints, so a
+  * connected components / k-core) unpersist superseded round checkpoints, so a
   * long-running session issuing many closures keeps a bounded set of
   * live RDD blocks instead of accumulating one per round per call. */
 class CheckpointsSpec extends SparkSpec {
@@ -39,15 +39,16 @@ class CheckpointsSpec extends SparkSpec {
       r.count()
       Checkpoints.freeAll(r) // frees the final fixpoint edge checkpoint
     }
-    path(); cc()
+    def kcore(): Unit = Checkpoints.freeAll(
+      { val r = GraphMetrics.kgKcore(spark, sf); r.count(); r })
+    path(); cc(); kcore()
     val baseline = live
-    (1 to 3).foreach { _ => path(); cc() }
+    (1 to 3).foreach { _ => path(); cc(); kcore() }
     assert(live <= baseline,
       s"persistent RDD count grew: $baseline -> $live")
   }
 
   test("repeated census/betweenness calls share one memoized sweep; resetMemo frees it") {
-    import graft.kg.GraphMetrics
     // compared as RDD id sets, not counts: at any GC during the calls
     // the ContextCleaner may unpersist earlier suites' garbage, which
     // made a count comparison fail at random

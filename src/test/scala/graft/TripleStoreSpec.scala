@@ -16,12 +16,23 @@ class TripleStoreSpec extends SparkSpec {
     assert(dsl == fixed)
   }
 
-  test("closure DSL matches the fixed kg_property_path query") {
+  test("closure DSL matches a driver-side transitive closure") {
     val dsl = store.closure(Seq("in_nation", "in_region"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = KGQueries.kgPropertyPath(spark, sf)
+    // independent reference: the edges collected to the driver and
+    // composed with themselves until no new pair appears
+    val edges = store.statements.filter(col("p").isin("in_nation", "in_region"))
+      .select(col("s"), col("o_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dsl == fixed)
+    val succ = edges.groupMap(_._1)(_._2)
+    var expected = edges
+    var frontier = edges
+    while (frontier.nonEmpty) {
+      frontier = frontier.flatMap { case (a, b) => succ.getOrElse(b, Set.empty[Long]).map(a -> _) } -- expected
+      expected ++= frontier
+    }
+    assert(expected.size > edges.size, "the reference closure must add pairs beyond one step")
+    assert(dsl == expected)
   }
 
   test("label service resolves every placed_by customer") {
