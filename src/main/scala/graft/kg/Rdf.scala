@@ -460,8 +460,7 @@ object Rdf {
     * store must prove `parse(render(x)) = x` self-contained; a real
     * deployment reading `.nt`/`.ttl` dumps calls THESE. RdfSpec
     * round-trips export → [[graft.sources.Ingest.writeText]] → file
-    * import and asserts multiset equality with the in-session path;
-    * tools/ABTime benches the two paths separately (SURVEY §5). */
+    * import and asserts multiset equality with the in-session path. */
   def kgImportNtFile(spark: SparkSession, path: String): DataFrame =
     parseNt(spark.read.text(path).withColumnRenamed("value", "nt"))
 

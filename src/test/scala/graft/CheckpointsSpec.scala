@@ -13,6 +13,12 @@ class CheckpointsSpec extends SparkSpec {
 
   private def live: Int = spark.sparkContext.getPersistentRDDs.size
 
+  // compared as RDD id sets, not counts: at any GC during the calls the
+  // ContextCleaner may unpersist earlier suites' garbage, which hides a
+  // leak from a count (one leaked edge set per kgKcore call moved the
+  // count by 1 over 3 calls) and made the census case fail at random
+  private def liveIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("repeated closure calls keep persistent RDD blocks bounded") {
     val store = TripleStore(spark, sf)
     def once(): Long = {
@@ -22,11 +28,11 @@ class CheckpointsSpec extends SparkSpec {
       n
     }
     val first = once() // settle any lazy one-time state
-    val baseline = live
+    val baseline = liveIds
     val counts = (1 to 4).map(_ => once())
     assert(counts.forall(_ == first))
-    assert(live <= baseline,
-      s"persistent RDD count grew across closures: $baseline -> $live")
+    assert((liveIds -- baseline).isEmpty,
+      s"closures left persistent RDDs: ${liveIds -- baseline}")
   }
 
   test("repeated property-path and CC calls keep blocks bounded") {
@@ -42,17 +48,13 @@ class CheckpointsSpec extends SparkSpec {
     def kcore(): Unit = Checkpoints.freeAll(
       { val r = GraphMetrics.kgKcore(spark, sf); r.count(); r })
     path(); cc(); kcore()
-    val baseline = live
+    val baseline = liveIds
     (1 to 3).foreach { _ => path(); cc(); kcore() }
-    assert(live <= baseline,
-      s"persistent RDD count grew: $baseline -> $live")
+    assert((liveIds -- baseline).isEmpty,
+      s"path/CC/k-core calls left persistent RDDs: ${liveIds -- baseline}")
   }
 
   test("repeated census/betweenness calls share one memoized sweep; resetMemo frees it") {
-    // compared as RDD id sets, not counts: at any GC during the calls
-    // the ContextCleaner may unpersist earlier suites' garbage, which
-    // made a count comparison fail at random
-    def liveIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     GraphMetrics.resetMemo()
     val baseline0 = liveIds
     val c1 = GraphMetrics.kgSpCensus(spark, sf).count()
