@@ -186,7 +186,7 @@ object Bench {
     // without it the suite's first key absorbs ~5 s of one-time init and
     // per-query colds shift with map iteration order across rounds
     import org.apache.spark.sql.functions.{col, count}
-    spark.read.parquet(s"$sfDir/region.parquet")
+    graft.sources.Tables.region(spark, sfDir)
       .groupBy(col("r_name")).agg(count(col("r_regionkey"))).count()
 
     val runs = measure(spark, sfDir, selected, reps)

@@ -84,9 +84,9 @@ object Triples {
   def mapped(spark: SparkSession, dir: String, mappingRules: Seq[Rule]): DataFrame =
     mappedFrom(sources(spark, dir, mappingRules), mappingRules)
 
-  /** One [[Tables.load]] per distinct table name: each load resolves the
-    * source and runs a footer job, so rules over the same table share
-    * one frame instead of paying that once per rule. */
+  /** One [[Tables.load]] per distinct table name: each load lists the
+    * source and reads its footer on the driver, so rules over the same
+    * table share one frame instead of paying that once per rule. */
   private def sources(spark: SparkSession, dir: String, rs: Seq[Rule]): Map[String, DataFrame] =
     rs.map(_.table).distinct.map(t => t -> Tables.load(spark, dir, t)).toMap
 

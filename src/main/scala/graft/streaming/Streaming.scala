@@ -290,7 +290,7 @@ object Streaming {
       // staging is memoized (reaped by resetStaging / the exit hook);
       // sinkDir stays for the lazy reader, reaped on the next replay
     }
-    spark.read.parquet(sinkDir)
+    Tables.parquet(spark, sinkDir)
   }
 
   private def deleteRecursively(p: Path): Unit = {
@@ -530,7 +530,7 @@ object Streaming {
       q.stop()
       deleteRecursively(java.nio.file.Paths.get(checkpoint))
     }
-    sess.read.parquet(sinkDir)
+    Tables.parquet(sess, sinkDir)
   }
 
   /** stream_quality — the streaming INGEST gate of a training-data
@@ -578,7 +578,7 @@ object Streaming {
       q.stop()
       deleteRecursively(java.nio.file.Paths.get(checkpoint))
     }
-    sess.read.parquet(sinkDir)
+    Tables.parquet(sess, sinkDir)
   }
 
   /** stream_cardinality — streaming HLL distinct-user estimate per

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Derive a 10×-scale bench dataset from an existing sf dir by keyed
   * replication — the round-10 scale spot-bench input (the driver ships
@@ -35,14 +36,14 @@ object ScaleUp {
     val K = 10000000L
 
     def replicate(t: String)(f: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$t.parquet")
+      val base = Tables.load(spark, src, t)
       val out = (0 until reps).map(r => f(base, r)).reduce(_ unionAll _)
       out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
-      println(s"SCALEUP $t: ${spark.read.parquet(s"$dst/$t.parquet").count()}")
+      println(s"SCALEUP $t: ${Tables.load(spark, dst, t).count()}")
     }
 
     Seq("region", "nation").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Tables.load(spark, src, t)
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       println(s"SCALEUP $t: copied")
     }

@@ -1,10 +1,70 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.sources.{Ingest, Tables}
 
 class SourcesSpec extends SparkSpec {
+
+  /** Spark jobs started while `body` runs, counted with the listener
+    * bus drained on both sides. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; SpecBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("Tables.load gives the schema spark.read.parquet infers, for every table") {
+    Tables.all.foreach { t =>
+      assert(Tables.load(spark, sf, t).schema == spark.read.parquet(s"$sf/$t.parquet").schema, t)
+    }
+  }
+
+  test("Tables.parquet gives the inferred schema for multi-file and partitioned directories") {
+    val docs = Tables.documents(spark, sf).repartition(3)
+    val flat = Files.createTempDirectory("graft_multi").toString
+    Ingest.writeParquet(docs, flat)
+    val parts = Files.createTempDirectory("graft_multi_parts").toString
+    Ingest.writeParquet(docs, parts, Seq("lang"))
+    Seq(flat, parts).foreach { dir =>
+      assert(jobsDuring(Tables.parquet(spark, dir)) == 0, dir)
+      val got = Tables.parquet(spark, dir)
+      assert(got.schema == spark.read.parquet(dir).schema, dir)
+      assert(got.count() == docs.count(), dir)
+    }
+  }
+
+  test("Tables.load runs no Spark job, nor does building the statements frame") {
+    assert(jobsDuring { Tables.all.foreach(t => Tables.load(spark, sf, t)); Tables.events(spark, sf) } == 0)
+    assert(jobsDuring(graft.kg.Triples.statements(spark, sf)) == 0)
+    // the listener is not blind: Spark's own inference is one job
+    assert(jobsDuring(spark.read.parquet(s"$sf/region.parquet")) >= 1)
+  }
+
+  test("a missing table fails and names its path") {
+    val dir = Files.createTempDirectory("graft_missing").toString
+    val e = intercept[Exception](Tables.load(spark, dir, "nope"))
+    assert(e.getMessage.contains(s"$dir/nope.parquet"), e.getMessage)
+  }
+
+  test("a directory with no data files fails the way spark.read.parquet does") {
+    val dir = Files.createTempDirectory("graft_nodata")
+    Files.createFile(dir.resolve("_SUCCESS"))
+    val expected = intercept[Exception](spark.read.parquet(dir.toString)).getMessage
+    val e = intercept[Exception](Tables.parquet(spark, dir.toString))
+    assert(e.getMessage.contains("Unable to infer schema"), e.getMessage)
+    assert(e.getMessage == expected)
+  }
 
   test("csv sink + source round-trip preserves rows") {
     val dir = Files.createTempDirectory("graft_csv").toString
