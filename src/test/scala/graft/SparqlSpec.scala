@@ -1078,4 +1078,63 @@ class SparqlSpec extends SparkSpec {
       if (saved == null) System.clearProperty(prop) else System.setProperty(prop, saved)
     }
   }
+
+  test("store routing: 6 outer fixed-predicate sites build one pruned store, 4 SERVICE sites one endpoint store") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    type Stmt = (Long, String, Option[Long], Option[String], Option[String])
+    // checkpoint leaves of a compiled plan, one per RDD (a store read by
+    // several sites appears once per site)
+    def leaves(df: DataFrame): Seq[LogicalRDD] =
+      df.queryExecution.analyzed.collectLeaves()
+        .collect { case lr: LogicalRDD => lr }.groupBy(_.rdd.id).values.map(_.head).toSeq
+    def bag(rows: Seq[Stmt]): Map[Stmt, Int] = rows.groupBy(identity).map { case (k, v) => k -> v.size }
+    def leafRows(lr: LogicalRDD): Seq[Stmt] = {
+      val Seq(si, pi, ii, vi, li) = Seq("s", "p", "o_id", "o_val", "lang").map(n =>
+        lr.output.indexWhere(_.name == n))
+      lr.rdd.map { r =>
+        (r.getLong(si), r.getUTF8String(pi).toString,
+          if (r.isNullAt(ii)) None else Some(r.getLong(ii)),
+          if (r.isNullAt(vi)) None else Some(r.getUTF8String(vi).toString),
+          if (r.isNullAt(li)) None else Some(r.getUTF8String(li).toString)): Stmt
+      }.collect().toSeq
+    }
+    def frameRows(df: DataFrame): Seq[Stmt] =
+      df.select("s", "p", "o_id", "o_val", "lang").collect().toSeq.map(r =>
+        (r.getLong(0), r.getString(1), Option(r.get(2)).map(_ => r.getLong(2)),
+          Option(r.getString(3)), Option(r.getString(4))))
+    val st = graft.kg.Triples.statements(spark, sf)
+    val sites = Seq("?c in_nation ?n", "?n in_region ?r", "?c mktsegment ?seg",
+      "?c label ?cl", "?n label ?nl", "?r label ?rl")
+    def outer(n: Int) = Sparql.run(spark, sf,
+      s"SELECT ?c ?n WHERE { ${sites.take(n).mkString(" . ")} . }")
+    val six = outer(6)
+    val sixLeaves = leaves(six)
+    assert(sixLeaves.size == 1, s"6 sites must read exactly one pruned store, got ${sixLeaves.size}")
+    assert(bag(leafRows(sixLeaves.head)) == bag(frameRows(st.filter(col("p").isin(
+      "in_nation", "in_region", "mktsegment", "label")))),
+      "the pruned store holds exactly the statements of the query's constant predicates")
+    assert(leaves(outer(5)).isEmpty, "5 sites keep the lazy scans")
+    graft.util.Checkpoints.freeAll(six)
+    // SERVICE sites count per endpoint across blocks, under the
+    // endpoint's own dialect (wdt:P131 -> mktsegment)
+    val graphs = Sparql.serviceGraphs(spark, sf)
+    def svc(second: String) = Sparql.run(spark, sf,
+      s"""PREFIX wdt: <http://www.wikidata.org/prop/direct/>
+         |SELECT ?c ?s1 WHERE {
+         |  ?c in_nation ?n .
+         |  SERVICE <https://query.wikidata.org/sparql> { ?c wdt:P131 ?s1 . ?c wdt:P131 ?s2 . }
+         |  SERVICE <https://query.wikidata.org/sparql> { $second }
+         |}""".stripMargin, graphs = graphs)
+    val four = svc("?c wdt:P131 ?s3 . ?c wdt:P131 ?s4 .")
+    val fourLeaves = leaves(four)
+    assert(fourLeaves.size == 1, s"4 endpoint sites must share one store, got ${fourLeaves.size}")
+    assert(bag(leafRows(fourLeaves.head)) ==
+      bag(frameRows(Sparql.remoteStatements(spark, sf))),
+      "the endpoint store holds exactly the endpoint's mktsegment statements")
+    val three = svc("?c wdt:P131 ?s3 .")
+    assert(leaves(three).isEmpty, "3 endpoint sites keep the lazy scans")
+    assert(four.count() == three.count() && four.count() > 0)
+    graft.util.Checkpoints.freeAll(four)
+  }
 }
