@@ -34,19 +34,20 @@ object RqCensus {
       val name = f.getFileName.toString
       try {
         val q = Sparql.parse(text)
+        val b = q.body
         ok += 1
         val bits = Seq(
-          if (q.patterns.nonEmpty) Some(s"${q.patterns.size} patterns") else None,
-          if (q.optionals.nonEmpty) Some(s"${q.optionals.size} optional") else None,
-          if (q.unions.nonEmpty) Some(s"${q.unions.map(_.size).sum} union branches") else None,
-          if (q.minuses.nonEmpty) Some(s"${q.minuses.size} minus/not-exists") else None,
-          if (q.values.nonEmpty) Some(s"${q.values.size} values") else None,
-          if (q.binds.nonEmpty || q.iriBinds.nonEmpty)
-            Some(s"${q.binds.size + q.iriBinds.size} binds") else None,
-          q.labelLangs.map(l => s"label[${l.mkString(",")}]"),
-          if (q.services.nonEmpty)
-            Some(s"${q.services.size} service[${q.services.map(_.endpoint.replaceAll("https?://|/sparql$", "")).mkString(",")}]") else None,
-          if (q.ifBinds.nonEmpty) Some(s"${q.ifBinds.size} if-binds") else None,
+          if (b.patterns.nonEmpty) Some(s"${b.patterns.size} patterns") else None,
+          if (b.optionals.nonEmpty) Some(s"${b.optionals.size} optional") else None,
+          if (b.unions.nonEmpty) Some(s"${b.unions.map(_.size).sum} union branches") else None,
+          if (b.minuses.nonEmpty) Some(s"${b.minuses.size} minus/not-exists") else None,
+          if (b.values.nonEmpty) Some(s"${b.values.size} values") else None,
+          if (b.binds.nonEmpty || b.iriBinds.nonEmpty)
+            Some(s"${b.binds.size + b.iriBinds.size} binds") else None,
+          b.labelLangs.map(l => s"label[${l.mkString(",")}]"),
+          if (b.services.nonEmpty)
+            Some(s"${b.services.size} service[${b.services.map(_.endpoint.replaceAll("https?://|/sparql$", "")).mkString(",")}]") else None,
+          if (b.ifBinds.nonEmpty) Some(s"${b.ifBinds.size} if-binds") else None,
           if (q.aggs.nonEmpty) Some(s"${q.aggs.size} aggs") else None
         ).flatten.mkString(", ")
         f"$name%-55s PARSE   $bits"

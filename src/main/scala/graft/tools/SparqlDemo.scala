@@ -3,7 +3,10 @@ package graft.tools
 import graft.kg.Sparql
 
 /** Run SPARQL text against the statement store — from a .rq FILE or
-  * the built-in flagship. Usage:
+  * the built-in flagship. Any of the four query forms runs: SELECT
+  * prints its solutions, CONSTRUCT its statement rows, ASK one
+  * `(ask, n_matches)` row, DESCRIBE the statements touching its
+  * variable's solutions. Usage:
   *   sbt 'runMain graft.tools.SparqlDemo [path/to/query.rq]'
   * Reads SPARK_GRAFT_SF_DIR (default sf0.01). Dialect maps are empty
   * here; pass prefixed-vocabulary queries through [[Sparql.run]]'s

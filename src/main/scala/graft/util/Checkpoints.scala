@@ -20,9 +20,10 @@ object Checkpoints {
     * the cost of a deserialization on each read — the right trade for
     * the SMALL frames the fixpoint loops and memo extracts checkpoint
     * (loop states, edge lists, result frames), which are written once
-    * and read a handful of times. Keep the plain `localCheckpoint`
-    * for frames that are re-read many times per query (e.g. the
-    * SPARQL pruned store). */
+    * and read a handful of times. Every SPARQL checkpoint goes through
+    * here too, including the pruned stores that each pattern site of a
+    * query re-reads; whether deserialized storage would serve those
+    * better is unmeasured. */
   def compact(df: DataFrame, eager: Boolean): DataFrame =
     df.localCheckpoint(eager,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)

@@ -537,20 +537,18 @@ class SparqlSpec extends SparkSpec {
     // '#' and ';' inside string literals are content, not comment/separator
     val q = Sparql.parse(
       """SELECT ?c WHERE { ?c mktsegment "A#B;C.D" . }""")
-    assert(q.patterns == Seq(Sparql.Pattern(
+    assert(q.body.patterns == Seq(Sparql.Pattern(
       Sparql.V("c"), "mktsegment", Sparql.Lit("A#B;C.D"))))
     // numeric object on a LITERAL-valued predicate compares o_val,
     // never the (always-null) o_id
     val num = Sparql.run(spark, sf, "SELECT ?c WHERE { ?c mktsegment 42 . }")
     assert(num.count() == 0) // no such segment — but compiled, not silently o_id-matched
-    val numEnt = Sparql.parse("SELECT ?c WHERE { ?c in_nation 2000000000003 . }")
-    assert(Sparql.compile(spark, sf, numEnt).count() > 0)
+    assert(Sparql.run(spark, sf, "SELECT ?c WHERE { ?c in_nation 2000000000003 . }").count() > 0)
   }
 
   test("typing rule: object vars that appear as subjects bind ids, others bind literals") {
-    val q = Sparql.parse(
+    val df = Sparql.run(spark, sf,
       "SELECT ?c ?n ?lbl WHERE { ?c in_nation ?n . ?n label ?lbl . }")
-    val df = Sparql.compile(spark, sf, q)
     assert(df.schema("n").dataType.typeName == "long")
     assert(df.schema("lbl").dataType.typeName == "string")
   }
@@ -704,7 +702,7 @@ class SparqlSpec extends SparkSpec {
     // ASK: one row, count-backed boolean
     val ask = Sparql.kgSparqlAsk(spark, sf).collect()
     assert(ask.length == 1 && ask.head.getBoolean(0) && ask.head.getLong(1) > 0)
-    val askNo = Sparql.runAsk(spark, sf, """ASK { ?c mktsegment "NO_SUCH_SEGMENT" . }""")
+    val askNo = Sparql.run(spark, sf, """ASK { ?c mktsegment "NO_SUCH_SEGMENT" . }""")
       .collect().head
     assert(!askNo.getBoolean(0) && askNo.getLong(1) == 0)
     // DESCRIBE: exactly the statements touching the seed, either side
@@ -714,19 +712,25 @@ class SparqlSpec extends SparkSpec {
     val expDesc = st.filter(col("s") === seed || col("o_id") === seed).count()
     assert(desc.count() == expDesc && desc.count() > 0)
     // loud rejects: literal-typed template subject / DESCRIBE var
-    val e1 = intercept[IllegalArgumentException](Sparql.runConstruct(spark, sf,
+    val e1 = intercept[IllegalArgumentException](Sparql.run(spark, sf,
       "CONSTRUCT { ?lbl tagged ?c } WHERE { ?c label ?lbl . }"))
     assert(e1.getMessage.contains("literal-typed"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](Sparql.runDescribe(spark, sf,
+    val e2 = intercept[IllegalArgumentException](Sparql.run(spark, sf,
       """DESCRIBE ?lbl WHERE { ?c label ?lbl . }"""))
     assert(e2.getMessage.contains("literal-typed"), e2.getMessage)
   }
 
+  /** DESCRIBE with the seed cap at 0: the semi-join fallback, the
+    * data-sized-solution path a production DESCRIBE over an
+    * unrestricted WHERE body takes. */
+  private def describeFallback(text: String) = Sparql.answer(spark,
+    Sparql.ServiceGraph(graft.kg.Triples.statements(spark, sf),
+      entityValued = Sparql.defaultEntityPreds),
+    Sparql.parse(text), autoLang = "de", graphs = Map.empty, seedCap = 0L)
+
   test("runDescribe: the semi-join fallback (seeds above cap) is multiset-identical to the isin path") {
-    // force the fallback with seedCap = 0 — the data-sized-solution
-    // path a production DESCRIBE over an unrestricted WHERE body takes
     val isin = Sparql.kgSparqlDescribe(spark, sf)
-    val fallback = Sparql.runDescribe(spark, sf, Sparql.describeText, seedCap = 0L)
+    val fallback = describeFallback(Sparql.describeText)
     assert(fallback.count() == isin.count())
     assert(fallback.exceptAll(isin).isEmpty && isin.exceptAll(fallback).isEmpty,
       "fallback and isin DESCRIBE plans must return the same statement multiset")
@@ -743,8 +747,8 @@ class SparqlSpec extends SparkSpec {
     // of exactly the NON-NULL seed set (the in_region objects).
     val text =
       """DESCRIBE ?x WHERE { ?s label ?lbl . OPTIONAL { ?s in_region ?x } }"""
-    val isin = Sparql.runDescribe(spark, sf, text)
-    val fallback = Sparql.runDescribe(spark, sf, text, seedCap = 0L)
+    val isin = Sparql.run(spark, sf, text)
+    val fallback = describeFallback(text)
     val st = graft.kg.Triples.statements(spark, sf)
     val seeds = st.filter(col("p") === "in_region")
       .select("o_id").distinct().collect().map(_.getLong(0)).toSet
@@ -918,14 +922,14 @@ class SparqlSpec extends SparkSpec {
     // whose body is one OPTIONAL group, and the IF verdict
     ReferenceCorpus.assumePresent()
     val q = Sparql.parse(Sparql.referenceText("compare-factgrid-wikidata_many_items.rq"))
-    assert(q.services.size == 1)
-    val sv = q.services.head
+    assert(q.body.services.size == 1)
+    val sv = q.body.services.head
     assert(sv.endpoint == "https://query.wikidata.org/sparql")
-    assert(sv.patterns.isEmpty && sv.optionals.size == 1,
+    assert(sv.body.patterns.isEmpty && sv.body.optionals.size == 1,
       "the compare service body is exactly one OPTIONAL group")
-    assert(q.ifBinds == Seq(Sparql.IfBind(
+    assert(q.body.ifBinds == Seq(Sparql.IfBind(
       "is_same", "wd_value_from_fg", "wd_value_from_wd", "true", "false")))
-    assert(q.iriBinds.size == 3) // the three qid→IRI transforms
+    assert(q.body.iriBinds.size == 3) // the three qid→IRI transforms
   }
 
   test("recursive parse: the ENTIRE reference .rq corpus parses structurally (22/22)") {
@@ -945,7 +949,7 @@ class SparqlSpec extends SparkSpec {
       Files.readAllBytes(dir.resolve(name)), "UTF-8"))
     // companions: 5-branch UNION whose branches carry OPTIONALs,
     // SERVICEs, per-branch BINDs and the MINUS-regex exclusion
-    val comp = parseFile("companions_and_relations.rq")
+    val comp = parseFile("companions_and_relations.rq").body
     assert(comp.unions.head.size == 5)
     assert(comp.unions.head.exists(_.optionals.nonEmpty))
     assert(comp.unions.head.exists(b =>
@@ -954,18 +958,18 @@ class SparqlSpec extends SparkSpec {
       comp.unions.head.exists(_.optionals.exists(_.binds.contains("source"))))
     // hirschfeld: SERVICE body = required pattern + OPTIONAL group
     // with a MINUS-filter + empty OPTIONAL dropped as a no-op
-    val hir = parseFile("companions_hirschfeld.rq")
+    val hir = parseFile("companions_hirschfeld.rq").body
     val db = hir.services.find(_.endpoint.contains("dbpedia")).get
     assert(db.body.patterns.nonEmpty && db.body.optionals.nonEmpty)
     assert(db.body.optionals.head.minuses.nonEmpty,
       "the Stefan-Zweig MINUS-regex exclusion must parse inside the OPTIONAL")
     // time-items: blank-node property lists desugar to fresh _b vars
-    val ti = parseFile("time-items.rq")
+    val ti = parseFile("time-items.rq").body
     val tiVars = ti.patterns.flatMap(p => Seq(p.s, p.o)).collect {
       case Sparql.V(n) if n.startsWith("_b") => n }
     assert(tiVars.distinct.size >= 2, s"expected fresh blank vars, got $tiVars")
     // gnd: dot-less triple termination before BIND keeps the triple
-    val gnd = parseFile("get_gnd_from_fg_and_wd.rq")
+    val gnd = parseFile("get_gnd_from_fg_and_wd.rq").body
     assert(gnd.patterns.exists(p => p.o == Sparql.V("fg_gnd")),
       "?fg_item fgt:P76 ?fg_gnd (no trailing dot) must survive as a pattern")
   }
@@ -1021,7 +1025,7 @@ class SparqlSpec extends SparkSpec {
     // file → SparkEntry key; the runner reads the file's bytes via
     // referenceText (nothing edited, only dialect maps supplied). The
     // registry half needs no corpus; only the drift check reads it.
-    val runners = ReferenceCorpus.runners
+    val runners = Sparql.referenceRunners
     runners.values.foreach { key =>
       assert(Sparql.queries.contains(key), s"$key not registered")
       assert(Sparql.oracles.contains(key), s"$key has no oracle")
@@ -1034,6 +1038,18 @@ class SparqlSpec extends SparkSpec {
       .map(_.getFileName.toString).filter(_.endsWith(".rq")).toSet
     assert(files == runners.keySet,
       s"corpus drift: missing=${files -- runners.keySet} extra=${runners.keySet -- files}")
+  }
+
+  test("every referenceText literal in the main sources names a file of Sparql.referenceRunners") {
+    // a new corpus-bound runner cannot be missed: the file it reads
+    // must be listed, and every listed file must still be read
+    val Read = "referenceText\\(\"([^\"]+)\"\\)".r
+    val named = MainSources.lines(_.contains("referenceText(\""))
+      .flatMap(l => Read.findAllMatchIn(l).map(_.group(1)))
+    assert(named.nonEmpty)
+    assert(named.toSet == Sparql.referenceRunners.keySet,
+      s"unlisted: ${named.toSet -- Sparql.referenceRunners.keySet}, " +
+        s"listed but never read: ${Sparql.referenceRunners.keySet -- named}")
   }
 
   test("verbatim network files + the typing rules that make them runnable") {
@@ -1089,6 +1105,15 @@ class SparqlSpec extends SparkSpec {
       df.queryExecution.analyzed.collectLeaves()
         .collect { case lr: LogicalRDD => lr }.groupBy(_.rdd.id).values.map(_.head).toSeq
     def bag(rows: Seq[Stmt]): Map[Stmt, Int] = rows.groupBy(identity).map { case (k, v) => k -> v.size }
+    // the store's rows equal `want`'s as a multiset (the message names
+    // the predicates on each side rather than every row)
+    def holdsExactly(lr: LogicalRDD, want: DataFrame, what: String): Unit = {
+      val (got, exp) = (bag(leafRows(lr)), bag(frameRows(want)))
+      val same = got == exp
+      assert(same, s"$what holds predicates ${got.keys.map(_._2).toSeq.distinct.sorted} " +
+        s"(${got.values.sum} rows), expected ${exp.keys.map(_._2).toSeq.distinct.sorted} " +
+        s"(${exp.values.sum} rows)")
+    }
     def leafRows(lr: LogicalRDD): Seq[Stmt] = {
       val Seq(si, pi, ii, vi, li) = Seq("s", "p", "o_id", "o_val", "lang").map(n =>
         lr.output.indexWhere(_.name == n))
@@ -1111,9 +1136,9 @@ class SparqlSpec extends SparkSpec {
     val six = outer(6)
     val sixLeaves = leaves(six)
     assert(sixLeaves.size == 1, s"6 sites must read exactly one pruned store, got ${sixLeaves.size}")
-    assert(bag(leafRows(sixLeaves.head)) == bag(frameRows(st.filter(col("p").isin(
-      "in_nation", "in_region", "mktsegment", "label")))),
-      "the pruned store holds exactly the statements of the query's constant predicates")
+    holdsExactly(sixLeaves.head,
+      st.filter(col("p").isin("in_nation", "in_region", "mktsegment", "label")),
+      "the pruned store")
     assert(leaves(outer(5)).isEmpty, "5 sites keep the lazy scans")
     graft.util.Checkpoints.freeAll(six)
     // SERVICE sites count per endpoint across blocks, under the
@@ -1129,9 +1154,7 @@ class SparqlSpec extends SparkSpec {
     val four = svc("?c wdt:P131 ?s3 . ?c wdt:P131 ?s4 .")
     val fourLeaves = leaves(four)
     assert(fourLeaves.size == 1, s"4 endpoint sites must share one store, got ${fourLeaves.size}")
-    assert(bag(leafRows(fourLeaves.head)) ==
-      bag(frameRows(Sparql.remoteStatements(spark, sf))),
-      "the endpoint store holds exactly the endpoint's mktsegment statements")
+    holdsExactly(fourLeaves.head, Sparql.remoteStatements(spark, sf), "the endpoint store")
     val three = svc("?c wdt:P131 ?s3 .")
     assert(leaves(three).isEmpty, "3 endpoint sites keep the lazy scans")
     assert(four.count() == three.count() && four.count() > 0)
