@@ -20,7 +20,7 @@ object SparkEntry {
       graft.kg.KGQueries.queries ++
       graft.kg.Wikibase.queries ++
       graft.kg.GraphMetrics.queries ++
-      graft.kg.Sparql.queries ++
+      graft.kg.SparqlQueries.queries ++
       graft.kg.Rdf.queries ++
       graft.er.ER.queries ++
       graft.dedup.Dedup.queries ++
@@ -44,7 +44,7 @@ object SparkEntry {
       graft.kg.KGQueries.oracles ++
       graft.kg.Wikibase.oracles ++
       graft.kg.GraphMetrics.oracles ++
-      graft.kg.Sparql.oracles ++
+      graft.kg.SparqlQueries.oracles ++
       graft.kg.Rdf.oracles ++
       graft.er.ER.oracles ++
       graft.dedup.Dedup.oracles ++

@@ -347,7 +347,7 @@ object GraphMetrics {
     // to exactly those branches) and lazily checkpoint; the scans below
     // then filter the small checkpointed frame (the compileOn
     // pruned-store pattern, hand-applied to this non-compiled query).
-    val st = Sparql.familyStatements(spark, dir)
+    val st = SparqlQueries.familyStatements(spark, dir)
       .filter(col("p") === "in_region" || col("p") === "in_nation" ||
         col("p").startsWith("family_"))
       .transform(graft.util.Checkpoints.compact(_, eager = false))
@@ -654,9 +654,9 @@ object GraphMetrics {
 
   /** Shared oracle CTE chain: roots, family edges and the DISTINCT
     * root-filtered induced edge set `w` — regenerated from the SAME
-    * kind list ([[Sparql.familyKinds]]). */
+    * kind list ([[SparqlQueries.familyKinds]]). */
   private val withinCtes: String = {
-    val branches = Sparql.familyKinds.map { case (p, res, mod, off) =>
+    val branches = SparqlQueries.familyKinds.map { case (p, res, mod, off) =>
       s"""SELECT CAST(${3L * NS} + k.c_custkey AS BIGINT) AS root,
          |    '$p' AS property1, CAST(${3L * NS} + t.c_custkey AS BIGINT) AS item1
          |  FROM customer k JOIN customer t ON t.c_custkey = k.c_custkey + $off

@@ -35,6 +35,16 @@ object Triples {
   /** Namespaced entity id as a SQL fragment (DuckDB). */
   def idSql(ns: Int, key: String): String = s"(${ns.toLong * NS} + CAST($key AS BIGINT))"
 
+  /** `df` projected to statement rows `(s, p, o_id, o_val, lang)`, the
+    * schema every statements frame shares: an entity object fills
+    * `o_id`, a literal `o_val`, and the side a row leaves out, like a
+    * missing language, is a typed NULL. */
+  def rows(df: DataFrame, s: Column, p: Column,
+      oId: Column = lit(null).cast("long"),
+      oVal: Column = lit(null).cast("string"),
+      lang: Column = lit(null).cast("string")): DataFrame =
+    df.select(s.as("s"), p.as("p"), oId.as("o_id"), oVal.as("o_val"), lang.as("lang"))
+
   /** One mapping rule: either an entity edge (oNs set) or a literal.
     * Public — [[Mapping]] parses a declarative config document into
     * these, so a reference user ports their RML mapping by editing
@@ -105,18 +115,12 @@ object Triples {
         if (r.distinct) graft.util.Scale.fanScan(
           src0.select(col(r.sKey), col(r.oCol)), Seq(col(r.sKey), col(r.oCol)))
         else src0
-      val row = src.select(
-        id(r.sNs, col(r.sKey)).as("s"),
-        lit(r.p).as("p"),
-        (r.oNs match {
-          case Some(ns) => id(ns, col(r.oCol))
-          case None     => lit(null).cast("long")
-        }).as("o_id"),
-        (r.oNs match {
-          case Some(_) => lit(null).cast("string")
-          case None    => col(r.oCol).cast("string")
-        }).as("o_val"),
-        langOf(r).map(lit(_)).getOrElse(lit(null)).cast("string").as("lang"))
+      // langOf is None for entity edges: their lang is the typed NULL
+      val row = r.oNs match {
+        case Some(ns) => rows(src, id(r.sNs, col(r.sKey)), lit(r.p), oId = id(ns, col(r.oCol)))
+        case None => rows(src, id(r.sNs, col(r.sKey)), lit(r.p), oVal = col(r.oCol).cast("string"),
+          lang = langOf(r).map(lit(_)).getOrElse(lit(null)).cast("string"))
+      }
       if (r.distinct) row.distinct() else row
     }.reduce(_ unionAll _)
   }
@@ -125,14 +129,9 @@ object Triples {
     * German-label branch reads the same `customer` frame as the rules. */
   def statements(spark: SparkSession, dir: String): DataFrame = {
     val tables = sources(spark, dir, rules)
-    val de = tables("customer")
-      .filter(col("c_custkey") % 3 === 0)
-      .select(
-        id(CUSTOMER, col("c_custkey")).as("s"),
-        lit("label").as("p"),
-        lit(null).cast("long").as("o_id"),
-        concat(lit("DE "), col("c_name")).cast("string").as("o_val"),
-        lit("de").as("lang"))
+    val de = rows(tables("customer").filter(col("c_custkey") % 3 === 0),
+      id(CUSTOMER, col("c_custkey")), lit("label"),
+      oVal = concat(lit("DE "), col("c_name")).cast("string"), lang = lit("de"))
     mappedFrom(tables, rules).unionAll(de)
   }
 

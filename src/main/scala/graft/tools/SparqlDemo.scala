@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.kg.Sparql
+import graft.kg.{Sparql, SparqlQueries}
 
 /** Run SPARQL text against the statement store — from a .rq FILE or
   * the built-in flagship. Any of the four query forms runs: SELECT
@@ -20,7 +20,7 @@ object SparqlDemo {
     val text =
       if (args.nonEmpty) new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(args(0))), "UTF-8")
-      else Sparql.flagship
+      else SparqlQueries.flagship
     println("---- query ----\n" + text + "\n---- result ----")
     val df = Sparql.run(spark, dir, text)
     df.show(20, truncate = false)

@@ -5,15 +5,15 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalactic.source.Position
 import org.scalatest.Assertions
 
-import graft.kg.Sparql
+import graft.kg.SparqlQueries
 
 /** The reference `.rq` corpus as the specs see it: where it is looked
   * for, whether it is there, and which registry keys read it at run
-  * time ([[Sparql.referenceRunners]]). The corpus is a test input that
-  * lives outside this repository, so specs that need its bytes guard
-  * on [[assumePresent]] (a cancel that names the path and the override
-  * property), and the plan-hygiene gates leave out exactly [[keys]]
-  * where it is absent. */
+  * time ([[SparqlQueries.referenceRunners]]). The corpus is a test
+  * input that lives outside this repository, so specs that need its
+  * bytes guard on [[assumePresent]] (a cancel that names the path and
+  * the override property), and the plan-hygiene gates leave out exactly
+  * [[keys]] where it is absent. */
 object ReferenceCorpus extends Assertions {
 
   /** The system property that moves the corpus (forwarded by build.sbt
@@ -21,12 +21,12 @@ object ReferenceCorpus extends Assertions {
   val property = "graft.reference.queries.dir"
 
   /** Read per call: a spec may point the property elsewhere for a while. */
-  def dir: Path = Paths.get(Sparql.referenceQueriesDir)
+  def dir: Path = Paths.get(SparqlQueries.referenceQueriesDir)
 
   def present: Boolean = Files.isDirectory(dir)
 
   /** The registry keys that cannot run without the corpus. */
-  def keys: Set[String] = Sparql.referenceRunners.values.toSet
+  def keys: Set[String] = SparqlQueries.referenceRunners.values.toSet
 
   /** Cancel the calling test unless the corpus directory exists. */
   def assumePresent()(implicit pos: Position): Unit =

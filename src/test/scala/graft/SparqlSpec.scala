@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.kg.Sparql
+import graft.kg.{Sparql, SparqlQueries}
 
 class SparqlSpec extends SparkSpec {
 
   test("flagship text query runs, binds all four vars, and OPTIONAL keeps row coverage") {
-    val df = Sparql.kgSparql(spark, sf)
+    val df = SparqlQueries.kgSparql(spark, sf)
     assert(df.columns.toSeq == Seq("c", "n", "nname", "cname"))
     val rows = df.collect()
     assert(rows.nonEmpty)
@@ -94,7 +94,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("aggregates: COUNT/COUNT DISTINCT with GROUP BY compile and guard their contract") {
-    val rows = Sparql.kgSparqlAgg(spark, sf)
+    val rows = SparqlQueries.kgSparqlAgg(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.nonEmpty)
     rows.foreach { case (_, members, segs) =>
@@ -142,7 +142,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("property path p/q* compiles to the step+closure plan (companions shape)") {
-    val df = Sparql.kgSparqlPath(spark, sf)
+    val df = SparqlQueries.kgSparqlPath(spark, sf)
     assert(df.columns.toSeq == Seq("c", "reach"))
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // DSL twin: kg_seq_path pairs restricted to BUILDING customers
@@ -193,7 +193,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("SERVICE wikibase:label resolves ?xLabel with language preference and id fallback") {
-    val df = Sparql.kgSparqlLabel(spark, sf)
+    val df = SparqlQueries.kgSparqlLabel(spark, sf)
     assert(df.columns.toSeq == Seq("item", "itemLabel", "seg"))
     val rows = df.collect()
     assert(rows.nonEmpty)
@@ -224,7 +224,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("MINUS and FILTER NOT EXISTS compile to anti-joins; filter-only MINUS excludes rows") {
-    val got = Sparql.kgSparqlMinus(spark, sf)
+    val got = SparqlQueries.kgSparqlMinus(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val st = graft.kg.Triples.statements(spark, sf)
     val inN = st.filter(col("p") === "in_nation").select(col("s").as("c"), col("o_id").as("n"))
@@ -249,7 +249,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("multi-var VALUES restricts row-wise, not column-wise") {
-    val rows = Sparql.kgSparqlValues(spark, sf)
+    val rows = SparqlQueries.kgSparqlValues(spark, sf)
       .collect().map(r => (r.getLong(1), r.getString(2))).toSet
     val n3 = 2L * graft.kg.Triples.NS + 3; val n5 = 2L * graft.kg.Triples.NS + 5
     assert(rows.nonEmpty)
@@ -263,7 +263,7 @@ class SparqlSpec extends SparkSpec {
 
   test("variable predicates: schema-typed objects, VALUES-restricted scans, IRI aliases") {
     // kg_sparql_pred: every relation whose object is in nation 5
-    val df = Sparql.kgSparqlPred(spark, sf)
+    val df = SparqlQueries.kgSparqlPred(spark, sf)
     assert(df.columns.toSeq == Seq("c", "relation", "v", "vLabel"))
     val rows = df.collect()
     assert(rows.nonEmpty)
@@ -283,7 +283,7 @@ class SparqlSpec extends SparkSpec {
     val rels = rows.map(_.getString(1)).distinct.toSet
     assert(rels.subsetOf(Set("placed_by", "supplied_by")), s"unexpected relations: $rels")
     // predicate-VALUES restriction pushes p-isin into the scan
-    val pv = Sparql.kgSparqlPredValues(spark, sf)
+    val pv = SparqlQueries.kgSparqlPredValues(spark, sf)
     val scan = pv.queryExecution.executedPlan.toString
     assert(scan.contains("placed_by") && scan.contains("supplied_by"),
       s"VALUES predicate list did not reach the plan:\n${scan.take(800)}")
@@ -306,7 +306,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("sitelink reification + BIND(IRI(CONCAT)) run the reference link block on an extended store") {
-    val df = Sparql.kgSparqlSitelinks(spark, sf)
+    val df = SparqlQueries.kgSparqlSitelinks(spark, sf)
     assert(df.columns.toSeq == Seq("item", "itemLabel", "qid", "wd_item"))
     val rows = df.collect()
     assert(rows.nonEmpty)
@@ -319,7 +319,7 @@ class SparqlSpec extends SparkSpec {
       assert(r.getString(1).startsWith("DE "))
     }
     // the IRI literal filter discriminates: a different site matches nothing
-    val none = Sparql.runOn(spark, Sparql.sitelinkStatements(spark, sf),
+    val none = Sparql.runOn(spark, SparqlQueries.sitelinkStatements(spark, sf),
       """SELECT ?link WHERE { ?link schema:isPartOf <https://de.wikipedia.org/> . }""",
       predAliases = Map("schema:isPartOf" -> "schema_ispartof"))
     assert(none.count() == 0)
@@ -334,7 +334,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("MIN/MAX/SAMPLE/GROUP_CONCAT aggregates compile deterministically") {
-    val rows = Sparql.kgSparqlGc(spark, sf).collect()
+    val rows = SparqlQueries.kgSparqlGc(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (fst, lst, segs) = (r.getString(2), r.getString(3), r.getString(5))
@@ -345,22 +345,22 @@ class SparqlSpec extends SparkSpec {
       assert(parts.contains(r.getString(4)), "SAMPLE not drawn from the group")
     }
     // rerun-identical (deterministic SAMPLE + sorted concat)
-    val again = Sparql.kgSparqlGc(spark, sf).collect()
+    val again = SparqlQueries.kgSparqlGc(spark, sf).collect()
     assert(rows.map(_.toSeq).toSet == again.map(_.toSeq).toSet)
   }
 
   test("directClaim triangle: predicate variable joins the property dictionary") {
-    val df = Sparql.kgSparqlDirect(spark, sf)
+    val df = SparqlQueries.kgSparqlDirect(spark, sf)
     assert(df.columns.toSeq == Seq("prop", "rel", "item", "value"))
     val rows = df.collect()
     assert(rows.nonEmpty)
-    val dict = Sparql.directClaimProps.toMap
+    val dict = SparqlQueries.directClaimProps.toMap
     rows.foreach { r =>
       assert(dict.get(r.getLong(0)).contains(r.getString(1)),
         s"prop ${r.getLong(0)} does not map to rel ${r.getString(1)}")
     }
     // same relation set as the plain variable-predicate query
-    val expRels = Sparql.kgSparqlPred(spark, sf)
+    val expRels = SparqlQueries.kgSparqlPred(spark, sf)
       .select("relation").distinct().collect().map(_.getString(0)).toSet
     assert(rows.map(_.getString(1)).toSet == expRels)
     // entity-vs-string stays a REAL conflict after the predicate relax
@@ -427,7 +427,7 @@ class SparqlSpec extends SparkSpec {
         |  }
         |}""".stripMargin
     val n5 = 2L * graft.kg.Triples.NS + 5
-    val df = Sparql.runOn(spark, Sparql.sitelinkStatements(spark, sf), lokale,
+    val df = Sparql.runOn(spark, SparqlQueries.sitelinkStatements(spark, sf), lokale,
       predAliases = Map(
         "wdt:P2" -> "in_nation", "wdt:P726" -> "in_nation",
         "wdt:P208" -> "in_nation", "wdt:P48" -> "label",
@@ -554,7 +554,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("SERVICE federation: OPTIONAL body left-joins per outer row; IF verdict null-propagates") {
-    val rows = Sparql.kgSparqlService(spark, sf).collect()
+    val rows = SparqlQueries.kgSparqlService(spark, sf).collect()
     val custNs = 3L * graft.kg.Triples.NS
     assert(rows.nonEmpty)
     // every local mktsegment statement survives (left join), and the
@@ -573,7 +573,7 @@ class SparqlSpec extends SparkSpec {
       }
     }
     // required (non-OPTIONAL) body inner-joins: only remotely-known rows
-    val fed = Sparql.kgSparqlFederated(spark, sf).collect()
+    val fed = SparqlQueries.kgSparqlFederated(spark, sf).collect()
     assert(fed.nonEmpty && fed.forall(r => (r.getLong(0) - custNs) % 7 != 0),
       "inner service body must drop rows the remote graph lacks")
   }
@@ -581,7 +581,7 @@ class SparqlSpec extends SparkSpec {
   test("SERVICE federation: loud rejects — unregistered endpoint, cross-graph key type") {
     // endpoint not in the registry
     val e1 = intercept[IllegalArgumentException](
-      Sparql.run(spark, sf, Sparql.serviceText,
+      Sparql.run(spark, sf, SparqlQueries.serviceText,
         predAliases = Map("fgt:P131" -> "mktsegment")))
     assert(e1.getMessage.contains("not registered"))
     // joining an entity-typed outer var against a literal-typed remote
@@ -593,7 +593,7 @@ class SparqlSpec extends SparkSpec {
         |}""".stripMargin
     val e2 = intercept[IllegalArgumentException](
       Sparql.run(spark, sf, badText,
-        graphs = Sparql.serviceGraphs(spark, sf)))
+        graphs = SparqlQueries.serviceGraphs(spark, sf)))
     assert(e2.getMessage.contains("type conflict") ||
       e2.getMessage.contains("entity id space"), e2.getMessage)
     // SERVICE inside a NOT EXISTS group still rejects loudly
@@ -607,7 +607,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   test("FILTER(LANG) compiles into the binding-site scan; loud without a literal site") {
-    val rows = Sparql.kgSparqlLang(spark, sf).collect()
+    val rows = SparqlQueries.kgSparqlLang(spark, sf).collect()
     assert(rows.nonEmpty)
     // autoLang is "de": every surviving label is from the synthetic
     // de subset (custkey % 3, prefixed "DE ")
@@ -625,7 +625,7 @@ class SparqlSpec extends SparkSpec {
   test("path alternation/inverse/plus and the 'a' shorthand compile; '?' rejects loudly") {
     val st = graft.kg.Triples.statements(spark, sf)
     // (p|^q): union of the direct arm and the reversed arm
-    val alt = Sparql.kgSparqlPathAlt(spark, sf)
+    val alt = SparqlQueries.kgSparqlPathAlt(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val direct = st.filter(col("p") === "in_region")
       .select(col("s").as("n"), col("o_id").as("x"))
@@ -636,7 +636,7 @@ class SparqlSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(alt.sorted.toSeq == exp.sorted.toSeq)
     // p+ excludes the zero-step pairs p* keeps: reach is regions only
-    val plus = Sparql.kgSparqlPathPlus(spark, sf).collect()
+    val plus = SparqlQueries.kgSparqlPathPlus(spark, sf).collect()
     val regions = st.filter(col("p") === "in_region").select("o_id")
       .collect().map(_.getLong(0)).toSet
     assert(plus.nonEmpty && plus.forall(r => regions(r.getLong(1))),
@@ -652,7 +652,7 @@ class SparqlSpec extends SparkSpec {
     assert(e1.getMessage.contains("dialect map"), e1.getMessage)
     // the '?' + closure-first gated query: both branches populated,
     // the opt branch = direct region edges ∪ the optional-nation hop
-    val po = Sparql.kgSparqlPathOpt(spark, sf).collect()
+    val po = SparqlQueries.kgSparqlPathOpt(spark, sf).collect()
     assert(po.map(_.getAs[String]("form")).toSet == Set("opt", "star_first"))
     val natE = st.filter(col("p") === "in_nation")
       .select(col("s").as("a"), col("o_id").as("b"))
@@ -682,7 +682,7 @@ class SparqlSpec extends SparkSpec {
   test("CONSTRUCT/ASK/DESCRIBE text forms compile (all four SPARQL forms from text)") {
     val st = graft.kg.Triples.statements(spark, sf)
     // CONSTRUCT: statement-shaped, set semantics, both object arms
-    val cons = Sparql.kgSparqlConstruct(spark, sf)
+    val cons = SparqlQueries.kgSparqlConstruct(spark, sf)
     assert(cons.columns.toSeq == Seq("s", "p", "o_id", "o_val", "lang"))
     val byP = cons.collect().groupBy(_.getString(1))
     assert(byP.keySet == Set("located_in", "has_segment"))
@@ -700,7 +700,7 @@ class SparqlSpec extends SparkSpec {
       .select("c", "r").distinct().count()
     assert(byP("located_in").length.toLong == exp)
     // ASK: one row, count-backed boolean
-    val ask = Sparql.kgSparqlAsk(spark, sf).collect()
+    val ask = SparqlQueries.kgSparqlAsk(spark, sf).collect()
     assert(ask.length == 1 && ask.head.getBoolean(0) && ask.head.getLong(1) > 0)
     val askNo = Sparql.run(spark, sf, """ASK { ?c mktsegment "NO_SUCH_SEGMENT" . }""")
       .collect().head
@@ -708,7 +708,7 @@ class SparqlSpec extends SparkSpec {
     // DESCRIBE: exactly the statements touching the seed, either side
     val seed = st.filter(col("p") === "label" && col("o_val") === "NATION_5")
       .select("s").head().getLong(0)
-    val desc = Sparql.kgSparqlDescribe(spark, sf)
+    val desc = SparqlQueries.kgSparqlDescribe(spark, sf)
     val expDesc = st.filter(col("s") === seed || col("o_id") === seed).count()
     assert(desc.count() == expDesc && desc.count() > 0)
     // loud rejects: literal-typed template subject / DESCRIBE var
@@ -729,8 +729,8 @@ class SparqlSpec extends SparkSpec {
     Sparql.parse(text), autoLang = "de", graphs = Map.empty, seedCap = 0L)
 
   test("runDescribe: the semi-join fallback (seeds above cap) is multiset-identical to the isin path") {
-    val isin = Sparql.kgSparqlDescribe(spark, sf)
-    val fallback = describeFallback(Sparql.describeText)
+    val isin = SparqlQueries.kgSparqlDescribe(spark, sf)
+    val fallback = describeFallback(SparqlQueries.describeText)
     assert(fallback.count() == isin.count())
     assert(fallback.exceptAll(isin).isEmpty && isin.exceptAll(fallback).isEmpty,
       "fallback and isin DESCRIBE plans must return the same statement multiset")
@@ -898,7 +898,7 @@ class SparqlSpec extends SparkSpec {
 
   test("kg_sparql_nitems: wikibase:statements meta-predicate = per-item statement census") {
     val st = graft.kg.Triples.statements(spark, sf)
-    val got = Sparql.kgSparqlNitems(spark, sf).collect()
+    val got = SparqlQueries.kgSparqlNitems(spark, sf).collect()
     assert(got.nonEmpty)
     val cnt = st.groupBy("s").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     got.foreach { r =>
@@ -921,7 +921,7 @@ class SparqlSpec extends SparkSpec {
     // reification, corresponding-property lookup, the SERVICE block
     // whose body is one OPTIONAL group, and the IF verdict
     ReferenceCorpus.assumePresent()
-    val q = Sparql.parse(Sparql.referenceText("compare-factgrid-wikidata_many_items.rq"))
+    val q = Sparql.parse(SparqlQueries.referenceText("compare-factgrid-wikidata_many_items.rq"))
     assert(q.body.services.size == 1)
     val sv = q.body.services.head
     assert(sv.endpoint == "https://query.wikidata.org/sparql")
@@ -976,13 +976,13 @@ class SparqlSpec extends SparkSpec {
 
   test("companions_and_relations.rq runs VERBATIM: 5-branch federated union end-to-end") {
     ReferenceCorpus.assumePresent()
-    val out = Sparql.kgSparqlCompanions(spark, sf)
+    val out = SparqlQueries.kgSparqlCompanions(spark, sf)
     assert(out.columns.toSeq == Seq("fg_item", "fg_itemLabel", "wd_item", "value",
       "valueLabel", "relation", "relation_stringLabel", "image", "source"))
     val rows = out.collect()
     assert(rows.nonEmpty)
     // every row carries the single seed root (the sitelinked customer)
-    val (ra, _) = Sparql.companionAnchorsPublic(spark, sf)
+    val (ra, _) = SparqlQueries.companionAnchors(spark, sf)
     assert(ra > 0)
     assert(rows.map(_.getAs[Long]("fg_item")).distinct.length == 1)
     // the dbpedia branch (source = wikipedia) survives federation:
@@ -1000,14 +1000,14 @@ class SparqlSpec extends SparkSpec {
       "SELECT ?a ?b WHERE { ?a in_nation ?n . ?x in_region ?b . }"))
     assert(e.getMessage.contains("not constant-seeded"))
     ReferenceCorpus.assumePresent()
-    val n3 = Sparql.kgSparqlNet3(spark, sf)
+    val n3 = SparqlQueries.kgSparqlNet3(spark, sf)
     assert(n3.columns.toSeq == Seq("fg_item", "fg_itemLabel", "property1",
       "property1Label", "item1", "item1Label"))
     val r3 = n3.collect()
     assert(r3.nonEmpty)
     // the hop property resolves through the directClaim dictionary
     assert(r3.forall(_.getAs[Long]("property1") >= 8L * 1000000000000L))
-    val n2 = Sparql.kgSparqlNet2(spark, sf)
+    val n2 = SparqlQueries.kgSparqlNet2(spark, sf)
     assert(n2.columns.toSeq == Seq("fg_item", "fg_itemLabel", "property",
       "propertyLabel", "fg_value", "fg_valueLabel", "wd_item", "wd_value"))
     val r2 = n2.collect()
@@ -1025,10 +1025,10 @@ class SparqlSpec extends SparkSpec {
     // file → SparkEntry key; the runner reads the file's bytes via
     // referenceText (nothing edited, only dialect maps supplied). The
     // registry half needs no corpus; only the drift check reads it.
-    val runners = Sparql.referenceRunners
+    val runners = SparqlQueries.referenceRunners
     runners.values.foreach { key =>
-      assert(Sparql.queries.contains(key), s"$key not registered")
-      assert(Sparql.oracles.contains(key), s"$key has no oracle")
+      assert(SparqlQueries.queries.contains(key), s"$key not registered")
+      assert(SparqlQueries.oracles.contains(key), s"$key has no oracle")
     }
     ReferenceCorpus.assumePresent()
     import java.nio.file.Files
@@ -1047,14 +1047,22 @@ class SparqlSpec extends SparkSpec {
     val named = MainSources.lines(_.contains("referenceText(\""))
       .flatMap(l => Read.findAllMatchIn(l).map(_.group(1)))
     assert(named.nonEmpty)
-    assert(named.toSet == Sparql.referenceRunners.keySet,
-      s"unlisted: ${named.toSet -- Sparql.referenceRunners.keySet}, " +
-        s"listed but never read: ${Sparql.referenceRunners.keySet -- named}")
+    assert(named.toSet == SparqlQueries.referenceRunners.keySet,
+      s"unlisted: ${named.toSet -- SparqlQueries.referenceRunners.keySet}, " +
+        s"listed but never read: ${SparqlQueries.referenceRunners.keySet -- named}")
+  }
+
+  test("Sparql.scala holds only the compiler: no table read, corpus read or registry key") {
+    // the query registry lives in SparqlQueries; the compiler file must
+    // not grow a runner, a dialect store or a corpus read back
+    val leaks = MainSources.linesIn("graft/kg/Sparql.scala")(l =>
+      l.contains("Tables.") || l.contains("referenceText(") || l.contains("\"kg_sparql"))
+    assert(leaks.isEmpty, s"registry code in the compiler file:\n${leaks.mkString("\n")}")
   }
 
   test("verbatim network files + the typing rules that make them runnable") {
     // the unreferenced-object rule keeps multiplicity without binding
-    val free = Sparql.run(spark, sf, Sparql.predFreeText)
+    val free = Sparql.run(spark, sf, SparqlQueries.predFreeText)
     val st = graft.kg.Triples.statements(spark, sf)
     import org.apache.spark.sql.functions.col
     val cn = st.filter(col("p") === "in_nation").select(col("s"))
@@ -1070,11 +1078,11 @@ class SparqlSpec extends SparkSpec {
     }
     // network-00/01 run byte-for-byte through their dialect maps
     ReferenceCorpus.assumePresent()
-    val n0 = Sparql.kgSparqlNet0(spark, sf)
+    val n0 = SparqlQueries.kgSparqlNet0(spark, sf)
     assert(n0.count() > 0)
     assert(n0.columns.toSeq == Seq("root", "rootLabel", "property1Label",
       "item1", "item1Label", "property2Label", "item2", "item2Label"))
-    assert(Sparql.kgSparqlNet1(spark, sf).count() > 0)
+    assert(SparqlQueries.kgSparqlNet1(spark, sf).count() > 0)
   }
 
   test("referenceText: corpus dir is overridable via system property; absent dir fails with pointer") {
@@ -1085,9 +1093,9 @@ class SparqlSpec extends SparkSpec {
       java.nio.file.Files.write(tmp.resolve("probe.rq"),
         "SELECT ?s WHERE { ?s ?p ?o }".getBytes("UTF-8"))
       System.setProperty(prop, tmp.toString)
-      assert(Sparql.referenceText("probe.rq") == "SELECT ?s WHERE { ?s ?p ?o }")
+      assert(SparqlQueries.referenceText("probe.rq") == "SELECT ?s WHERE { ?s ?p ?o }")
       System.setProperty(prop, tmp.resolve("nope").toString)
-      val e = intercept[IllegalArgumentException](Sparql.referenceText("probe.rq"))
+      val e = intercept[IllegalArgumentException](SparqlQueries.referenceText("probe.rq"))
       assert(e.getMessage.contains(prop),
         s"missing-corpus error must point at the override property; got ${e.getMessage}")
     } finally {
@@ -1143,7 +1151,7 @@ class SparqlSpec extends SparkSpec {
     graft.util.Checkpoints.freeAll(six)
     // SERVICE sites count per endpoint across blocks, under the
     // endpoint's own dialect (wdt:P131 -> mktsegment)
-    val graphs = Sparql.serviceGraphs(spark, sf)
+    val graphs = SparqlQueries.serviceGraphs(spark, sf)
     def svc(second: String) = Sparql.run(spark, sf,
       s"""PREFIX wdt: <http://www.wikidata.org/prop/direct/>
          |SELECT ?c ?s1 WHERE {
@@ -1154,10 +1162,74 @@ class SparqlSpec extends SparkSpec {
     val four = svc("?c wdt:P131 ?s3 . ?c wdt:P131 ?s4 .")
     val fourLeaves = leaves(four)
     assert(fourLeaves.size == 1, s"4 endpoint sites must share one store, got ${fourLeaves.size}")
-    holdsExactly(fourLeaves.head, Sparql.remoteStatements(spark, sf), "the endpoint store")
+    holdsExactly(fourLeaves.head, SparqlQueries.remoteStatements(spark, sf), "the endpoint store")
     val three = svc("?c wdt:P131 ?s3 .")
     assert(leaves(three).isEmpty, "3 endpoint sites keep the lazy scans")
     assert(four.count() == three.count() && four.count() > 0)
     graft.util.Checkpoints.freeAll(four)
+  }
+
+  test("VALUES over a predicate variable resolves an <IRI> row through predAliases") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val byName = pairs(Sparql.run(spark, sf, "SELECT ?c ?n WHERE { ?c in_nation ?n . }"))
+    assert(byName.nonEmpty)
+    val byIri = Sparql.run(spark, sf,
+      "SELECT ?c ?n WHERE { VALUES ?p { <http://x/P2> } ?c ?p ?n . }",
+      predAliases = Map("<http://x/P2>" -> "in_nation"))
+    assert(pairs(byIri) == byName)
+    // an <IRI> with no alias is a loud reject, never a match-nothing filter
+    val e = intercept[IllegalArgumentException](Sparql.run(spark, sf,
+      "SELECT ?c ?n WHERE { VALUES ?p { <http://x/P3> } ?c ?p ?n . }",
+      predAliases = Map("<http://x/P2>" -> "in_nation")))
+    assert(e.getMessage.contains("<http://x/P3> has no alias"), e.getMessage)
+  }
+
+  test("a PREFIX declaration may share its line with SELECT") {
+    val aliases = Map("fgt:P2" -> "in_nation")
+    val twoLines = Sparql.run(spark, sf,
+      "PREFIX fgt: <http://x/>\nSELECT ?c ?n WHERE { ?c fgt:P2 ?n . }", predAliases = aliases)
+    val oneLine = Sparql.run(spark, sf,
+      "PREFIX fgt: <http://x/> SELECT ?c ?n WHERE { ?c fgt:P2 ?n . }", predAliases = aliases)
+    assert(oneLine.count() > 0)
+    assert(oneLine.exceptAll(twoLines).isEmpty && twoLines.exceptAll(oneLine).isEmpty)
+  }
+
+  test("a PREFIX declaration closed by a # comment is stripped with its comment") {
+    // the flagship's first line: `PREFIX g: <http://graft.local/>   # accepted and ignored`
+    val aliases = Map("fgt:P2" -> "in_nation")
+    val commented = Sparql.run(spark, sf,
+      "PREFIX fgt: <http://x/>   # the FactGrid vocabulary\nSELECT ?c ?n WHERE { ?c fgt:P2 ?n . }",
+      predAliases = aliases)
+    val plain = Sparql.run(spark, sf, "SELECT ?c ?n WHERE { ?c in_nation ?n . }")
+    assert(commented.count() > 0)
+    assert(commented.exceptAll(plain).isEmpty && plain.exceptAll(commented).isEmpty)
+  }
+
+  test("every corpus-free kg_sparql key returns the same rows at any shuffle parallelism") {
+    val keys = (SparqlQueries.queries.keySet -- ReferenceCorpus.keys).toSeq.sorted
+    assert(keys.nonEmpty)
+    val settings = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = settings.map(k => k -> spark.conf.get(k))
+    // each key's rows as a sorted multiset, under one setting
+    def rowsAt(partitions: Int, aqe: Boolean): Map[String, Seq[String]] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      keys.map { k =>
+        val df = SparqlQueries.queries(k)(spark, sf)
+        val rows = df.collect().map(_.toString).toSeq.sorted
+        graft.util.Checkpoints.freeAll(df)
+        k -> rows
+      }.toMap
+    }
+    try {
+      val serial = rowsAt(1, aqe = false)
+      Seq((64, false), (64, true)).foreach { case (n, aqe) =>
+        val wide = rowsAt(n, aqe)
+        val differ = keys.filter(k => wide(k) != serial(k))
+        assert(differ.isEmpty,
+          s"rows differ from 1 shuffle partition at $n partitions (AQE $aqe): ${differ.mkString(", ")}")
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }
