@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables
 import graft.util.Exact._
@@ -16,13 +17,17 @@ import graft.util.Memo
   * deterministically through a FILE source so the DuckDB batch oracle
   * can check the result.
   *
-  * Replay shape (the production shape, shrunk): the events table is
+  * Replay shape (the production shape, shrunk): the input table is
   * staged once to a parquet directory with a distributed write (the
-  * driver never holds the data); `spark.readStream` tails that
-  * directory; two late sentinel files are dropped in afterwards to
-  * advance the watermark past every real event so all windows /
-  * sessions seal and emit; results land in a parquet file SINK read
-  * back lazily. File source → transforms → file sink IS the deployed
+  * driver never holds the data), together with ONE late sentinel row
+  * whose event time lies 3 h past the newest real event (+100 h on the
+  * CDC log's synthetic clock). `spark.readStream` tails that directory
+  * and a single `processAllAvailable` drives two micro-batches: the
+  * data batch reads the events and the sentinel together, which
+  * advances the watermark past every real window/session/timeout; then
+  * Spark's own no-data batch runs under that watermark and emits
+  * everything sealed. Results land in a parquet file SINK read back
+  * lazily. File source → transforms → file sink IS the deployed
   * topology (swap the directories for Kafka topics at will). Round 1
   * fed the stream by `collect()`ing the whole table into a
   * MemoryStream and read results from a driver-memory sink — both
@@ -31,16 +36,18 @@ import graft.util.Memo
   * now beyond a one-row max(ts) aggregate.
   *
   * Each replay runs on a CLONED SparkSession (`spark.newSession()` —
-  * same SparkContext, separate SQLConf/catalog), so the reduced
-  * shuffle-partition count and the memory-sink table name never leak
-  * into concurrently-running batch queries on the caller's session.
+  * same SparkContext, separate SQLConf/catalog), so the replay's
+  * shuffle-partition count never leaks into concurrently-running batch
+  * queries on the caller's session.
   *
   * Scale notes: tumbling windows + watermark = bounded state (only
   * unsealed windows are held); the aggregation shuffles once on
   * (window, event_type). Money math is exact DECIMAL / micro-unit
   * longs, so emitted rows are identical at any parallelism. State
-  * store cost ∝ partitions × microbatches — the clone runs 8 shuffle
-  * partitions for the tiny replay; size to key cardinality in prod.
+  * store cost ∝ partitions × micro-batches, so a replay runs
+  * [[replayParts]] state partitions over as many staged part files:
+  * the core count, capped at 8 for the tiny replay (size to key
+  * cardinality in prod).
   */
 object Streaming {
 
@@ -107,6 +114,15 @@ object Streaming {
 
   private val evSchema = Encoders.product[Ev].schema
 
+  /** State partitions of every replay and part files of every staging
+    * dir: the core count, capped at 8. The file source parallelizes by
+    * FILE (a 1-file staging ran every replay's data batch map side in
+    * ONE task — 1.1 s serial in stream_topk's first batch), and every
+    * state partition costs a state-store load and commit per
+    * micro-batch, so neither gains from outnumbering the cores. */
+  private def replayParts(spark: SparkSession): Int =
+    math.min(8, spark.sparkContext.defaultParallelism)
+
   /** Sink directories outlive their replay (the returned DataFrame
     * reads them lazily), so they cannot be deleted in the replay's
     * finally block. Instead, each query key holds at most ONE live
@@ -132,166 +148,85 @@ object Streaming {
     ()
   }
 
-  /** Staged SOURCE directory per dataset dir, shared by every replay
+  /** Staged SOURCE directories per dataset dir, shared by every replay
     * over the same input — the production analogue: the source topic
     * exists once; a replay subscribes to it rather than re-publishing
-    * it. The staged parquet and the one-row max(ts) aggregate are paid
-    * once per (dataset, JVM); [[graft.Bench]]'s sweep calls
-    * [[resetStaging]] so COLD timings still include the staging cost.
-    *
-    * Sentinel files do NOT accumulate: each replay deletes the
-    * previous replay's `sentinel-*` files before its query starts
-    * (deletion must precede the start — a fresh checkpoint only
-    * processes files it first lists AFTER they appear, so the rewrite
-    * mid-run is what advances the watermark), then drops its own two
-    * at fixed names. The staging listing is therefore bounded at the
-    * event files + 2 regardless of how many replays a long-lived
-    * driver issues. Old sentinels were output-neutral anyway (rows
-    * carry user_id = -1 / event_type = "sentinel", filtered by every
-    * query; timestamps are the deterministic max(ts)+3h/+6h), so the
-    * cap changes listing cost, not results. */
-  private val stagedSrc = Memo[String, (String, Timestamp)](this)((_, v) => dropStaging(v._1))
-
+    * it. Each is paid once per (dataset, JVM); [[graft.Bench]]'s sweep
+    * calls [[resetStaging]] so COLD timings still include the staging
+    * cost. A staging dir is WRITE-ONCE: its sentinel row is part of
+    * the staged data, every replay reads it from a fresh checkpoint,
+    * and nothing is added to or removed from the dir until it is
+    * reaped. Sentinel rows are output-neutral (user_id / key = -1,
+    * filtered by every query; their event times are deterministic). */
+  private val stagedSrc = Memo[String, String](this)((_, st) => deleteRecursively(Paths.get(st)))
   /** Staged documents dir per dataset (the [[streamQuality]] source —
-    * stateless ingest needs no max-ts aggregate, just the files). */
-  private val stagedDocs = Memo[String, String](this)((_, st) => dropStaging(st))
-
-  /** Delete a staging dir and its `_sent` side dir, which holds the
-    * pre-rendered sentinel part files ([[renderSentinels]]) and
-    * lives/dies with its staging dir. */
-  private def dropStaging(st: String): Unit = {
-    deleteRecursively(java.nio.file.Paths.get(st))
-    deleteRecursively(java.nio.file.Paths.get(st + "_sent"))
-  }
+    * stateless ingest needs no watermark, so no sentinel). */
+  private val stagedDocs = Memo[String, String](this)((_, st) => deleteRecursively(Paths.get(st)))
+  private val stagedCdcLog = Memo[String, String](this)((_, st) => deleteRecursively(Paths.get(st)))
 
   /** Drop all memoized staging dirs (next replay re-stages). */
   def resetStaging(): Unit = Memo.reset(this)
 
-  /** Render one-row sentinel parquet part files ONCE per staging (the
-    * sentinel content is a pure function of the staged max(ts) /
-    * base-ts constant, so it can be produced at staging time): each
-    * replay previously ran TWO tiny Spark jobs (coalesce(1) parquet
-    * write + commit + move) mid-stream just to advance the watermark —
-    * pure per-replay driver overhead, ~0.2–0.4 s each on a loaded
-    * scheduler. Replays now [[Files.copy]] the pre-rendered file into
-    * staging — no job, same bytes, same watermark semantics (the file
-    * still appears AFTER the query starts, which is what advances the
-    * watermark). */
-  private def renderSentinels(sentDir: String,
-      rows: Map[Int, DataFrame]): Unit = {
-    Files.createDirectories(java.nio.file.Paths.get(sentDir))
-    rows.foreach { case (offsetH, df) =>
-      val tmp = Files.createTempDirectory("graft_sentinel")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val partListing = Files.list(tmp)
-      val part = try partListing
-        .filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally partListing.close()
-      Files.move(part, java.nio.file.Paths.get(sentDir, s"sentinel-$offsetH.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(tmp)
-    }
+  /** Write `rows` to a fresh staging dir as [[replayParts]] part files.
+    * A failed write must not orphan the half-written dir: a memo build
+    * that throws stores nothing, so resetStaging could never reap it. */
+  private def writeStaging(prefix: String, rows: DataFrame): String = {
+    val st = Files.createTempDirectory(prefix)
+    try rows.repartition(replayParts(rows.sparkSession)).write.mode("append").parquet(st.toString)
+    catch { case e: Throwable => deleteRecursively(st); throw e }
+    st.toString
   }
 
-  /** Stage the events table + run one file-source replay: write events
-    * parquet (distributed), stream-read it, push two late sentinel
-    * files to advance the watermark, sink to parquet FILES, and return
-    * a reader over the sink — file source AND file sink, so neither
-    * input nor output ever funnels through the driver (the round-1
-    * memory-sink read carried ~8 MiB per task at sf0.1).
-    * `build` maps the watermarked streaming Dataset to its output. */
-  private def fileReplay(outer: SparkSession, dir: String, key: String)(
-      build: Dataset[Ev] => DataFrame): DataFrame = {
+  /** The events table staged with its sentinel row at max(ts) + 3 h.
+    * The data batch's watermark (1 h delay) then ends at max(ts) + 2 h,
+    * past the end of every real window and every session/gap timeout,
+    * so Spark's no-data batch seals and emits them all; the sentinel's
+    * own window and timeout lie beyond it and never emit. */
+  private def stagedEvents(spark: SparkSession, dir: String): String = stagedSrc(dir) {
+    val events = Tables.events(spark, dir)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+    // one-row aggregate — the only thing the driver ever holds
+    val mx = events.agg(max(col("ts"))).head().getTimestamp(0)
+    writeStaging("graft_stream_src", events.union(spark.createDataFrame(Seq(
+      Ev(-1L, new Timestamp(mx.getTime + 3 * 3600L * 1000L), -1L, "sentinel", 0.0)))))
+  }
+
+  /** One replay: stream the staged dir `stage` returns (read with
+    * `schema`) through `build` into a fresh parquet sink, on a cloned
+    * session with [[replayParts]] state partitions, and return a lazy
+    * reader over the sink. Spark's no-data micro-batches stay on: the
+    * one data batch advances the watermark, and the no-data batch
+    * `processAllAvailable` waits for is the emission. */
+  private def replay(outer: SparkSession, key: String, schema: StructType)(
+      stage: SparkSession => String)(build: DataFrame => DataFrame): DataFrame = {
     val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // The two-sentinel protocol makes Spark's no-data micro-batches
-    // redundant: sentinel wave 1 advances the watermark past every
-    // real window/session, and wave 2's DATA batch performs the
-    // emission — with no-data batches enabled each
-    // processAllAvailable additionally ran an empty batch per
-    // watermark advance (full offset-log/commit-log fsync + state
-    // commit each), roughly doubling the batch count per replay for
-    // zero rows. The sink's FILTERED content is identical: everything
-    // a no-data batch would have emitted beyond wave 2 is
-    // sentinel-keyed and dropped by every query's sentinel filter
-    // (streaming oracle 10/10 green both ways — measured round 13).
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val checkpoint = Files.createTempDirectory("graft_stream_ckpt").toString
-    val sinkDir = Files.createTempDirectory("graft_stream_sink").toString
+    spark.conf.set("spark.sql.shuffle.partitions", replayParts(spark).toString)
+    val staging = stage(spark)
+    val checkpoint = Files.createTempDirectory("graft_stream_ckpt")
+    val sinkDir = Files.createTempDirectory("graft_stream_sink")
     sinkReaper
-    val prev = sinkDirs.put(key, java.nio.file.Paths.get(sinkDir))
+    val prev = sinkDirs.put(key, sinkDir)
     if (prev != null) deleteRecursively(prev)
-
-    val (staging, maxTs) = stagedSrc(dir) {
-      val st = Files.createTempDirectory("graft_stream_src").toString
-      try {
-        val events = Tables.events(spark, dir)
-          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        // stage as (shuffle-partition-count) part files, not the scan's
-        // single file: the file source parallelizes by FILE, so a
-        // 1-file staging ran every replay's data batch map side in ONE
-        // task (measured 1.1 s serial in stream_topk's first batch) —
-        // and that map stage repeats per replay, while the staging
-        // write runs once per (dataset, JVM). Row multiset unchanged.
-        events.repartition(8).write.mode("append").parquet(st)
-        // one-row aggregate — the only thing the driver ever holds
-        val mx = events.agg(max(col("ts"))).head().getTimestamp(0)
-        locally { // pre-render both sentinel waves (see renderSentinels)
-          import spark.implicits._
-          renderSentinels(st + "_sent", Seq(3, 6).map(h =>
-            h -> Seq(Ev(-1L, new Timestamp(mx.getTime + h * 3600L * 1000), -1L,
-              "sentinel", 0.0)).toDF()).toMap)
-        }
-        (st, mx)
-      } catch { case e: Throwable =>
-        // a staging/render failure must not orphan the half-written
-        // dirs: a memo build that throws stores nothing, so
-        // resetStaging could never reap them
-        dropStaging(st)
-        throw e
-      }
-    }
-    // reap the PREVIOUS replay's sentinels now, while no query is
-    // running (single-replay-at-a-time constraint above): this run's
-    // query must see its own sentinels as NEW files, and the staging
-    // listing stays bounded across arbitrarily many replays
-    locally {
-      val listing = Files.list(java.nio.file.Paths.get(staging))
-      try listing.filter(_.getFileName.toString.startsWith("sentinel-"))
-        .forEach(p => Files.deleteIfExists(p))
-      finally listing.close()
-    }
-    /** Drop the pre-rendered one-row sentinel (see [[renderSentinels]])
-      * into staging at a fixed visible name — a file COPY, not a Spark
-      * job (`_`/`.`-prefixed names would be ignored by the file
-      * source). */
-    def pushSentinel(offsetH: Int): Unit =
-      Files.copy(java.nio.file.Paths.get(staging + "_sent", s"sentinel-$offsetH.parquet"),
-        java.nio.file.Paths.get(staging, s"sentinel-$offsetH.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-
-    import spark.implicits._
-    val source = spark.readStream.schema(evSchema).parquet(staging).as[Ev]
-    val q = build(source).writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpoint)
+    val q = build(spark.readStream.schema(schema).parquet(staging))
+      .writeStream.format("parquet")
+      .option("path", sinkDir.toString)
+      .option("checkpointLocation", checkpoint.toString)
       .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      // two sentinel batches: the first advances the watermark past all
-      // real windows/sessions, the second triggers their emission
-      pushSentinel(3)
-      q.processAllAvailable()
-      pushSentinel(6)
-      q.processAllAvailable()
-    } finally {
+    try q.processAllAvailable()
+    finally {
       q.stop()
-      deleteRecursively(java.nio.file.Paths.get(checkpoint))
+      deleteRecursively(checkpoint)
       // staging is memoized (reaped by resetStaging / the exit hook);
       // sinkDir stays for the lazy reader, reaped on the next replay
     }
-    Tables.parquet(spark, sinkDir)
+    Tables.parquet(spark, sinkDir.toString)
   }
+
+  /** A replay of the staged events: `build` maps the streaming
+    * Dataset to its output. */
+  private def fileReplay(outer: SparkSession, dir: String, key: String)(
+      build: Dataset[Ev] => DataFrame): DataFrame =
+    replay(outer, key, evSchema)(stagedEvents(_, dir))(src => build(src.as(Encoders.product[Ev])))
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
@@ -430,7 +365,17 @@ object Streaming {
     * op at sequence s carries ts = base + s hours. */
   private val cdcBaseUs = 1700000000000000L
   private val cdcSchema = Encoders.product[CdcEv].schema
-  private val stagedCdcLog = Memo[String, String](this)((_, st) => dropStaging(st))
+
+  /** The CDC log staged with its sentinel row at base + 100 h: the data
+    * batch's watermark ends at base + 99 h, past every real key's
+    * timeout (newest op + 1 h), so Spark's no-data batch seals them. */
+  private def stagedCdc(spark: SparkSession, dir: String): String = stagedCdcLog(dir) {
+    writeStaging("graft_stream_cdclog", graft.queries.Incremental.cdcLog(spark, dir)
+      .withColumn("ts", timestamp_micros(lit(cdcBaseUs) + col("seq") * lit(3600000000L)))
+      .select("key", "name", "seq", "op", "ts")
+      .union(spark.createDataFrame(Seq(CdcEv(-1L, "sentinel", -1L, "S",
+        new Timestamp(cdcBaseUs / 1000L + 100 * 3600L * 1000L))))))
+  }
 
   private def cdcEmit(key: Long, evs: Iterator[CdcEv],
       state: org.apache.spark.sql.streaming.GroupState[CdcState]): Iterator[CdcOut] = {
@@ -468,69 +413,14 @@ object Streaming {
     * snapshot or the hash gate fails. */
   def streamCdc(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
-    // no-data micro-batches off — see fileReplay (same two-sentinel
-    // protocol: wave 2's data batch is the emission batch)
-    sess.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val checkpoint = Files.createTempDirectory("graft_stream_ckpt").toString
-    val sinkDir = Files.createTempDirectory("graft_stream_sink").toString
-    sinkReaper
-    val prev = sinkDirs.put("stream_cdc", java.nio.file.Paths.get(sinkDir))
-    if (prev != null) deleteRecursively(prev)
-    val staging = stagedCdcLog(dir) {
-      val st = Files.createTempDirectory("graft_stream_cdclog").toString
-      try {
-        graft.queries.Incremental.cdcLog(sess, dir)
-          .withColumn("ts", timestamp_micros(lit(cdcBaseUs) + col("seq") * lit(3600000000L)))
-          .select("key", "name", "seq", "op", "ts")
-          .repartition(8) // multi-file staging — see fileReplay
-          .write.mode("append").parquet(st)
-        locally { // pre-render both sentinel waves (see renderSentinels)
-          import sess.implicits._
-          renderSentinels(st + "_sent", Seq(100, 200).map(h =>
-            h -> Seq(CdcEv(-1L, "sentinel", -1L, "S",
-              new Timestamp(cdcBaseUs / 1000L + h * 3600L * 1000L))).toDF()).toMap)
-        }
-        st
-      } catch { case e: Throwable =>
-        dropStaging(st) // see fileReplay
-        throw e
-      }
+    replay(spark, "stream_cdc", cdcSchema)(stagedCdc(_, dir)) { source =>
+      source.as(Encoders.product[CdcEv])
+        .withWatermark("ts", "1 hour")
+        .groupByKey(_.key)(Encoders.scalaLong)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(cdcEmit _)(
+          Encoders.product[CdcState], Encoders.product[CdcOut])
+        .toDF().filter(col("key") >= 0)
     }
-    locally { // reap the previous replay's sentinels (fileReplay rule)
-      val listing = Files.list(java.nio.file.Paths.get(staging))
-      try listing.filter(_.getFileName.toString.startsWith("sentinel-"))
-        .forEach(p => Files.deleteIfExists(p))
-      finally listing.close()
-    }
-    def pushSentinel(offsetH: Int): Unit = // pre-rendered copy, no job
-      Files.copy(java.nio.file.Paths.get(staging + "_sent", s"sentinel-$offsetH.parquet"),
-        java.nio.file.Paths.get(staging, s"sentinel-$offsetH.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    import sess.implicits._
-    val source = sess.readStream.schema(cdcSchema).parquet(staging).as[CdcEv]
-    val q = source
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.key)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(cdcEmit _)(
-        Encoders.product[CdcState], Encoders.product[CdcOut])
-      .filter(col("key") >= 0)
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      pushSentinel(100)
-      q.processAllAvailable()
-      pushSentinel(200)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      deleteRecursively(java.nio.file.Paths.get(checkpoint))
-    }
-    Tables.parquet(sess, sinkDir)
   }
 
   /** stream_quality — the streaming INGEST gate of a training-data
@@ -538,48 +428,22 @@ object Streaming {
     * batch gate's exact projection ([[graft.dedup.Text.qualityCols]] —
     * shared code, not a re-implementation), so batch and stream can
     * never drift. Stateless per-row scoring needs no watermark, no
-    * state store, and no sentinel push: every micro-batch emits
+    * state store, and no sentinel: every micro-batch emits
     * immediately, which is also the 100 TB shape — a scoring stage
     * that keeps NO state scales by adding partitions, full stop.
     * File source → codegen'd projection → file sink; the oracle is the
     * batch text_quality SQL (same columns), so the stream path is
     * hash-checked against the batch semantics. */
-  def streamQuality(spark: SparkSession, dir: String): DataFrame = {
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
-    val checkpoint = Files.createTempDirectory("graft_stream_ckpt").toString
-    val sinkDir = Files.createTempDirectory("graft_stream_sink").toString
-    sinkReaper
-    val prev = sinkDirs.put("stream_quality", java.nio.file.Paths.get(sinkDir))
-    if (prev != null) deleteRecursively(prev)
-    val staging = stagedDocs(dir) {
-      val st = Files.createTempDirectory("graft_stream_docs").toString
-      Tables.documents(sess, dir)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-        // 8 part files — the quality battery is compute-dense per row
-        // and the file source parallelizes by file (see fileReplay)
-        .repartition(8).write.mode("append").parquet(st)
-      st
-    }
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
-    val source = sess.readStream.schema(docSchema).parquet(staging)
-    val q = graft.dedup.Text.qualityCols(source)
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append()).start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      deleteRecursively(java.nio.file.Paths.get(checkpoint))
-    }
-    Tables.parquet(sess, sinkDir)
-  }
+  def streamQuality(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, "stream_quality",
+      StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")) {
+      sess => stagedDocs(dir) {
+        // the quality battery is compute-dense per row and the file
+        // source parallelizes by file (see replayParts)
+        writeStaging("graft_stream_docs", Tables.documents(sess, dir)
+          .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")))
+      }
+    }(graft.dedup.Text.qualityCols)
 
   /** stream_cardinality — streaming HLL distinct-user estimate per
     * (1 h window, event_type): the register state

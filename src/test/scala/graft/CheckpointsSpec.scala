@@ -162,8 +162,7 @@ class CheckpointsSpec extends SparkSpec {
     val left = spark.sparkContext.getPersistentRDDs.keySet
     assert(rdds.filter(left).isEmpty, s"memo RDDs still persisted: ${rdds.filter(left)}")
     assert(tables.filter(t => spark.catalog.tableExists(t)).isEmpty, "memo tables not dropped")
-    assert(dirs.filter(d => d.exists || new java.io.File(d.getPath + "_sent").exists).isEmpty,
-      "staging dirs not deleted")
+    assert(dirs.filter(_.exists).isEmpty, "staging dirs not deleted")
 
     // the next call rebuilds rather than returning the released value
     buildAll()
