@@ -1185,6 +1185,36 @@ class SparqlSpec extends SparkSpec {
     assert(e.getMessage.contains("<http://x/P3> has no alias"), e.getMessage)
   }
 
+  test("BIND constants: a prefixed predicate in a predicate slot, an all-constant pattern") {
+    val st = graft.kg.Triples.statements(spark, sf)
+    // BIND(fgt:P2 AS ?p) ?c ?p ?n — the compare files' parameterized
+    // property: the rows of ?c in_nation ?n, with ?p reading the name
+    val viaBind = Sparql.run(spark, sf,
+      "PREFIX fgt: <http://x/> SELECT ?c ?p ?n WHERE { BIND(fgt:P2 AS ?p) ?c ?p ?n . }",
+      predAliases = Map("fgt:P2" -> "in_nation"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    val direct = Sparql.run(spark, sf, "SELECT ?c ?n WHERE { ?c in_nation ?n . }")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(direct.nonEmpty)
+    assert(viaBind.map(r => (r._1, r._3)).sorted == direct.sorted)
+    assert(viaBind.forall(_._2 == "in_nation"), viaBind.take(3))
+    // BIND(fg:N AS ?n) ?c in_nation ?n . ?n in_region fg:R — after
+    // substitution the second pattern is all-constant: an existence
+    // check that keeps every member when the edge exists, none if not
+    val nation = st.filter(col("p") === "in_nation").select("o_id").head().getLong(0)
+    val region = st.filter(col("p") === "in_region" && col("s") === nation)
+      .select("o_id").head().getLong(0)
+    def members(r: Long) = Sparql.run(spark, sf,
+      """PREFIX fg: <http://x/e/>
+        |SELECT ?c ?n WHERE { BIND(fg:N AS ?n) ?c in_nation ?n . ?n in_region fg:R . }""".stripMargin,
+      entityAliases = Map("fg:N" -> nation, "fg:R" -> r))
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val expected = st.filter(col("p") === "in_nation" && col("o_id") === nation)
+      .collect().map(_.getLong(0)).toSeq.sorted
+    assert(expected.nonEmpty && members(region) == expected)
+    assert(members(-1L).isEmpty)
+  }
+
   test("a PREFIX declaration may share its line with SELECT") {
     val aliases = Map("fgt:P2" -> "in_nation")
     val twoLines = Sparql.run(spark, sf,
