@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.util.Memo
+import graft.util.{Exact, Memo}
 
 /** Deduplication + similarity search over `documents`/`embeddings`
   * (SURVEY §2.D) — the LLM-training-data operators. The reference's
@@ -831,20 +831,13 @@ object Dedup {
     // final cosine is the bruteforce-proven list_dot_product form
     // (bit-identical to the native cosine_sim expression)
     "sim_ann_ivf" -> {
-      def dlit(d: Double): String = {
-        val s = d.toString
-        require(java.lang.Double.parseDouble(s) == d)
-        if (s.contains("E") || s.contains("e")) s else s + "e0"
-      }
-      def fold(terms: String) =
-        s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $terms), (acc, x) -> acc + x)"
       val cbSql = IvfCentroids.centroids
-        .map(_.map(dlit).mkString("[", ", ", "]")).mkString("[", ", ", "]")
+        .map(_.map(Exact.duckDouble).mkString("[", ", ", "]")).mkString("[", ", ", "]")
       val d = IvfCentroids.D; val k = IvfCentroids.K
       s"""WITH uv AS (
          |  SELECT vec_id, v, nrm, list_transform(v, x -> x / fnrm) AS u FROM (
          |    SELECT vec_id, v,
-         |      sqrt(${fold("list_transform(v, x -> x * x)")}) AS fnrm,
+         |      sqrt(${Exact.duckSum("list_transform(v, x -> x * x)")}) AS fnrm,
          |      sqrt(list_dot_product(v, v)) AS nrm
          |    FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |          FROM embeddings))
@@ -853,7 +846,7 @@ object Dedup {
          |  SELECT vec_id, v, nrm, u,
          |    CAST(list_position(dists, list_min(dists)) - 1 AS INTEGER) AS list
          |  FROM (SELECT vec_id, v, nrm, u,
-         |      list_transform(range(0, $k), cc -> ${fold(s"""list_transform(range(0, $d), i ->
+         |      list_transform(range(0, $k), cc -> ${Exact.duckSum(s"""list_transform(range(0, $d), i ->
          |          (u[i + 1] - cb[cc + 1][i + 1]) * (u[i + 1] - cb[cc + 1][i + 1]))""")}) AS dists
          |    FROM (SELECT *, CAST($cbSql AS DOUBLE[][]) AS cb FROM uv))),
          |cents AS (
@@ -861,7 +854,7 @@ object Dedup {
          |  FROM (SELECT CAST($cbSql AS DOUBLE[][]) AS cb) b, generate_series(0, ${k - 1}) g),
          |pdist AS (
          |  SELECT a.vec_id AS q, c.list,
-         |    ${fold(s"""list_transform(range(0, $d), i ->
+         |    ${Exact.duckSum(s"""list_transform(range(0, $d), i ->
          |        (a.u[i + 1] - c.c[i + 1]) * (a.u[i + 1] - c.c[i + 1]))""")} AS cd
          |  FROM uv a, cents c WHERE a.vec_id < 10),
          |probes AS (

@@ -339,32 +339,21 @@ object Embed {
     * IEEE, so the sums are bit-identical. */
   private def pqOracles: Map[String, String] = {
     import PqCodebook.{DSub, K, M}
-    // render every codeword as an E-notation DOUBLE literal: a bare
-    // decimal literal is DECIMAL in DuckDB, and DECIMAL→DOUBLE is
-    // double-rounded (measured: 1-ulp drift on 13% of recon errors);
-    // strtod on the E-form parses correctly rounded, and java
-    // Double.toString round-trips — so both engines hold identical bits
-    def dlit(d: Double): String = {
-      val s = d.toString
-      require(java.lang.Double.parseDouble(s) == d)
-      if (s.contains("E") || s.contains("e")) s else s + "e0"
-    }
+    import graft.util.Exact.{duckDouble, duckSum}
+    // every codeword as an E-notation DOUBLE literal (see duckDouble)
     val cbSql = PqCodebook.codebook
-      .map(_.map(_.map(dlit).mkString("[", ", ", "]")).mkString("[", ", ", "]"))
+      .map(_.map(_.map(duckDouble).mkString("[", ", ", "]")).mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")
-    // ordered double fold: (((0.0 + t1) + t2) + ...) — NOT list_sum
-    def fold(terms: String) =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $terms), (acc, x) -> acc + x)"
     val unitCte =
       s"""uv AS (
          |  SELECT vec_id, list_transform(v, x -> x / nrm) AS u FROM (
          |    SELECT vec_id, v,
-         |      sqrt(${fold("list_transform(v, x -> x * x)")}) AS nrm
+         |      sqrt(${duckSum("list_transform(v, x -> x * x)")}) AS nrm
          |    FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |          FROM embeddings))
          |  WHERE nrm > 0)""".stripMargin
     val subDist = // ||u[j·DSub ..] − cb[j+1][cc+1]||², j/cc 0-based
-      fold(s"""list_transform(range(0, $DSub), i ->
+      duckSum(s"""list_transform(range(0, $DSub), i ->
               |        (u[j * $DSub + i + 1] - cb[j + 1][cc + 1][i + 1])
               |        * (u[j * $DSub + i + 1] - cb[j + 1][cc + 1][i + 1]))""".stripMargin)
     val encCte =
@@ -380,8 +369,8 @@ object Embed {
       s"""list_transform(range(0, $K), cc -> $subDist)"""
     val encCteInline = encCte.replace("dists_of(u, j)", distsInline)
     val adcExpr = // query u against codes: codeword = cb[j+1][codes[j+1]+1]
-      fold(s"""list_transform(range(0, $M), j ->
-              |      ${fold(s"""list_transform(range(0, $DSub), i ->
+      duckSum(s"""list_transform(range(0, $M), j ->
+              |      ${duckSum(s"""list_transform(range(0, $DSub), i ->
               |          (uq[j * $DSub + i + 1] - cb[j + 1][codes[j + 1] + 1][i + 1])
               |          * (uq[j * $DSub + i + 1] - cb[j + 1][codes[j + 1] + 1][i + 1]))""".stripMargin)})""".stripMargin)
     Map(
@@ -406,7 +395,7 @@ object Embed {
            |  FROM pairs QUALIFY rk0 <= 50),
            |rescored AS (
            |  SELECT s.q, s.neighbor,
-           |    ${fold("list_transform(range(1, len(s.uq) + 1), i -> s.uq[i] * n.u[i])")} AS cosine
+           |    ${duckSum("list_transform(range(1, len(s.uq) + 1), i -> s.uq[i] * n.u[i])")} AS cosine
            |  FROM shortlist s JOIN uv n ON n.vec_id = s.neighbor)
            |SELECT q, neighbor, cosine,
            |  CAST(row_number() OVER (PARTITION BY q ORDER BY cosine DESC, neighbor) AS INTEGER) AS rk

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Exact
 
 /** Keyword retrieval + vocabulary census over `documents` (SURVEY
   * §2.D) — the search/inspection side of a training-data pipeline:
@@ -62,20 +63,6 @@ object Search {
   private val OneMinusB = 0.25
   require(K1P1 == K1 + 1.0, "K1P1 must be the exact double K1 + 1")
   require(OneMinusB == 1.0 - B, "OneMinusB must be the exact double 1 - B")
-
-  /** Render a double as a DuckDB literal that parses back to the SAME
-    * double: `toString` + `e0` (the exponent suffix pins DOUBLE typing).
-    * Guards the interpolation trap: a constant whose toString already
-    * uses scientific notation ('1.0E-4') would silently concatenate
-    * into invalid SQL ('1.0E-4e0') — fail loudly instead, and prove
-    * the round trip. */
-  private def dlit(d: Double): String = {
-    val s = d.toString
-    require(!s.exists(c => c == 'e' || c == 'E'),
-      s"double literal $s needs scientific notation; extend dlit before using it in SQL")
-    require(s.toDouble == d, s"double literal $s does not round-trip")
-    s + "e0"
-  }
 
   /** search_vocab — vocabulary census (Zipf view): total occurrences,
     * document frequency, corpus share, and frequency rank for the top
@@ -180,8 +167,8 @@ object Search {
     // tree above so every IEEE double op runs in the same order
     def contribSql(q: String): String =
       s"""(((CAST(n_docs AS DOUBLE) - CAST(df_$q AS DOUBLE)) + 5.0e-1) / (CAST(df_$q AS DOUBLE) + 5.0e-1))
-         |    * ((CAST(tf_$q AS DOUBLE) * ${dlit(K1P1)})
-         |       / (CAST(tf_$q AS DOUBLE) + ${dlit(K1)} * (${dlit(OneMinusB)} + ${dlit(B)} * (CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))))""".stripMargin
+         |    * ((CAST(tf_$q AS DOUBLE) * ${Exact.duckDouble(K1P1)})
+         |       / (CAST(tf_$q AS DOUBLE) + ${Exact.duckDouble(K1)} * (${Exact.duckDouble(OneMinusB)} + ${Exact.duckDouble(B)} * (CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))))""".stripMargin
     Map(
       "text_keywords" ->
         """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),

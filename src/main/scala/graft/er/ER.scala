@@ -19,7 +19,7 @@ import graft.util.{Memo, Scale}
   *     self-join is SALTED ([[Scale.saltedJoin]]) — nothing is
   *     broadcast, so no side is bounded by driver/executor memory, and
   *     the low-cardinality block key cannot serialize onto single
-  *     tasks. An optional block-size cap ([[blockedPairs]]) refines
+  *     tasks. An optional block-size cap ([[capBlocks]]) refines
   *     oversized blocks and drops pathological ones explicitly.
   *   - Fuzzy scoring uses the codegen'd `levenshtein` expression, no
   *     UDF boxing.
@@ -192,52 +192,45 @@ object ER {
     * The salted join does neither: the probe side gets a deterministic
     * per-row salt (hash of id), the build side replicates nSalts×
     * through the SHUFFLE, so every core works a 1/nSalts slice of every
-    * block and no collection is ever held on one node.
-    *
-    * `maxBlock`: optional block-size cap — the production knob for the
-    * classic "Smith" problem. Blocks above the cap are REFINED by
-    * extending the key with the second token; refined blocks still
-    * above the cap are DROPPED (explicit overflow policy: a key that
-    * stays pathological after refinement is non-discriminative, and its
-    * n² pairs are match noise — audit them via [[oversizedBlocks]]).
-    * Default None = exact per-block pair semantics (what the DuckDB
-    * oracle replays). */
-  def blockedPairs(blocked: DataFrame, maxBlock: Option[Long] = None): DataFrame = {
-    val p = (maxBlock match {
-      case None      => blocked
-      case Some(cap) => capBlocks(blocked, cap)
-    }).withColumn("len", length(col("norm")))
+    * block and no collection is ever held on one node. Exact per-block
+    * pair semantics (what the DuckDB oracle replays); cap the blocks
+    * first with [[capBlocks]]. */
+  def blockedPairs(blocked: DataFrame): DataFrame = {
+    val p = blocked.withColumn("len", length(col("norm")))
     val a = p.select(col("blk"), col("id").as("id_a"), col("norm").as("norm_a"), col("len").as("len_a"))
     val b = p.select(col("blk"), col("id").as("id_b"), col("norm").as("norm_b"), col("len").as("len_b"))
     Scale.saltedJoin(a, b, "blk", pairSalts, saltOn = col("id_a"))
       .filter(col("id_a") < col("id_b"))
   }
 
-  /** Apply the block-size cap: refine oversized blocks with the second
-    * token, then drop blocks that remain oversized. Both size scans are
-    * map-side-partial aggregates on the (tiny) block-key domain. */
-  def capBlocks(blocked: DataFrame, cap: Long): DataFrame = {
+  /** Blocks above `cap` rows, their key extended with the second
+    * token. The size scan is a map-side-partial aggregate on the (tiny)
+    * block-key domain. */
+  private def refineBlocks(blocked: DataFrame, cap: Long): DataFrame = {
     val sizes = blocked.groupBy("blk").agg(count(lit(1)).as("_n"))
-    val refined = blocked.join(sizes, "blk")
+    blocked.join(sizes, "blk")
       .withColumn("blk", when(col("_n") > cap,
           concat_ws("|", col("blk"), coalesce(split(col("norm"), " ").getItem(1), lit(""))))
         .otherwise(col("blk")))
       .drop("_n")
+  }
+
+  /** The block-size cap — the production knob for the classic "Smith"
+    * problem: oversized blocks are REFINED with the second token
+    * ([[refineBlocks]]), and refined blocks still above the cap are
+    * DROPPED (explicit overflow policy: a key that stays pathological
+    * after refinement is non-discriminative, and its n² pairs are
+    * match noise — audit them via [[oversizedBlocks]]). */
+  def capBlocks(blocked: DataFrame, cap: Long): DataFrame = {
+    val refined = refineBlocks(blocked, cap)
     val sizes2 = refined.groupBy("blk").agg(count(lit(1)).as("_n"))
     refined.join(sizes2, "blk").filter(col("_n") <= cap).drop("_n")
   }
 
   /** Audit companion to the cap: blocks (post-refinement) that the cap
     * would drop, with their sizes — surfaced, never silently lost. */
-  def oversizedBlocks(blocked: DataFrame, cap: Long): DataFrame = {
-    val sizes = blocked.groupBy("blk").agg(count(lit(1)).as("_n"))
-    val refined = blocked.join(sizes, "blk")
-      .withColumn("blk", when(col("_n") > cap,
-          concat_ws("|", col("blk"), coalesce(split(col("norm"), " ").getItem(1), lit(""))))
-        .otherwise(col("blk")))
-      .drop("_n")
-    refined.groupBy("blk").agg(count(lit(1)).as("n_rows")).filter(col("n_rows") > cap)
-  }
+  def oversizedBlocks(blocked: DataFrame, cap: Long): DataFrame =
+    refineBlocks(blocked, cap).groupBy("blk").agg(count(lit(1)).as("n_rows")).filter(col("n_rows") > cap)
 
   private def candidatePairs(spark: SparkSession, dir: String): DataFrame =
     blockedPairs(blockedParts(spark, dir))
@@ -664,9 +657,9 @@ object ER {
     * Scale: every strategy is a bounded equi-join on its block key +
     * one per-entity top-1 window; the low-cardinality keys (author
     * ~92 first tokens, publisher ~25 brands) route through
-    * [[blockedPairs]] with `maxBlock = Some(CascadeBlockCap)` — both
+    * [[capBlocks]] at [[CascadeBlockCap]] and [[blockedPairs]] — both
     * sides union into one blocked frame (disjoint id namespaces:
-    * books < [[AuthBase]] ≤ authorities), [[capBlocks]] refines
+    * books < [[AuthBase]] ≤ authorities), the cap refines
     * oversized blocks with the second name token and drops blocks
     * that stay oversized, so candidate-pair VOLUME is ≤ cap²/4 per
     * block at ANY data scale (uncapped, pairs per block grow
@@ -717,7 +710,7 @@ object ER {
     // bound the block, keep only the cross-side (book, authority)
     // pairs via the disjoint id ranges.
     def cappedPairs(r: DataFrame, a: DataFrame): DataFrame =
-      blockedPairs(r.unionAll(a), maxBlock = Some(CascadeBlockCap))
+      blockedPairs(capBlocks(r.unionAll(a), CascadeBlockCap))
         .filter(col("id_a") < AuthBase && col("id_b") >= AuthBase)
     val matched = linkCascade(books, Seq(
       "isbn" -> { rem: DataFrame =>

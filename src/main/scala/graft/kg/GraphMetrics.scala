@@ -59,15 +59,13 @@ object GraphMetrics {
     direct.union(inverse).union(negSet)
   }
 
-  /** The co-occurrence edge set (weight ≥ 2, p1 < p2), checkpointed —
-    * both metrics fan it into several join legs. */
   /** Co-occurrence edge memo: five queries (communities, kcore,
     * random_walk, clustering_coeff, node_sim) each re-derived the
     * has_part self-join + weight census per invocation (~1.5 s of the
     * statements union, the fanned DISTINCT branch and the pair
     * aggregation every time). One eager checkpoint per (session, dir),
-    * a [[Memo.frames]] memo: pinned so consumers' existing
-    * free()/freeAll() calls are no-ops on it, freed by [[resetMemo]]
+    * a [[Memo.frames]] memo: pinned, so a consumer's freeAll() over its
+    * own lineage leaves it alone, and freed by [[resetMemo]]
     * (Bench's sweep) before every cold measurement. */
   private val edgesMemo = Memo.frames[(SparkSession, String)](this)
 
@@ -105,7 +103,6 @@ object GraphMetrics {
       .withColumn("coeff_num", lit(2L) * col("n_triangles"))
       .withColumn("coeff_den", col("degree") * (col("degree") - lit(1L)))
       .transform(graft.util.Checkpoints.compact(_, eager = true))
-    graft.util.Checkpoints.free(e)
     out
   }
 
@@ -133,7 +130,6 @@ object GraphMetrics {
       .select(col("a"), col("b"), col("common"), col("deg_a"), col("deg_b"),
         col("union_size"))
       .transform(graft.util.Checkpoints.compact(_, eager = true))
-    graft.util.Checkpoints.free(e)
     out
   }
 
@@ -205,7 +201,7 @@ object GraphMetrics {
     var frontier = adj.select(col("node").as("start")).distinct()
       .withColumn("cur", col("start"))
       .transform(graft.util.Checkpoints.compact(_, eager = true))
-    val owned = scala.collection.mutable.ListBuffer[DataFrame](adj, e, frontier)
+    val owned = scala.collection.mutable.ListBuffer[DataFrame](adj, frontier)
     val rows = Seq.newBuilder[DataFrame]
     rows += frontier.select(col("start"), lit(0).as("step"), col("cur").as("node"))
     (1 to WalkSteps).foreach { k =>
@@ -259,7 +255,7 @@ object GraphMetrics {
       .union(e.select(col("p2").as("node"), col("p1").as("nbr")))
       .repartition(col("nbr"))
       .transform(graft.util.Checkpoints.compact(_, eager = true))
-    val owned = scala.collection.mutable.ListBuffer[DataFrame](e, adj)
+    val owned = scala.collection.mutable.ListBuffer[DataFrame](adj)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node")).orderBy(col("cnt").desc, col("lbl").asc)
     var labels = adj.select("node").distinct().withColumn("lbl", col("node"))

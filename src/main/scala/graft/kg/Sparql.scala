@@ -62,20 +62,47 @@ import org.apache.spark.sql.functions._
   * the DSL. */
 object Sparql {
 
+  /** A pattern term, its kind decided once by [[parse]]. */
   sealed trait Term
   final case class V(name: String) extends Term
   final case class Lit(value: String) extends Term
   final case class Num(value: Long) extends Term
+  /** A prefixed name (`fg:Q40454`): it MUST resolve through the
+    * dialect maps at compile time. */
+  final case class Prefixed(name: String) extends Term
+  /** An `<IRI>`, held as its bare text: it resolves through
+    * `entityAliases` (keyed by its bracketed form) in entity positions
+    * and otherwise compares as a literal against that text (the
+    * `schema:isPartOf <https://www.wikidata.org/>` shape). */
+  final case class Iri(iri: String) extends Term
+  /** A BIND constant that resolved to a PREDICATE name (the compare
+    * files' `BIND(fgt:P117 as ?fg_property)` ... `?fg_item ?fg_property
+    * ?fg_value`): substitutes into predicate slots as the resolved
+    * local name and surfaces as that name string when projected. Made
+    * by compile-time resolution, never by the parser. */
+  final case class PredConst(name: String) extends Term
 
-  /** A pattern's predicate slot: either a plain predicate name or a
-    * sequence property path (`p/q`, `p/q*`, `(p/(q*))` — the
-    * reference's `fgt:P2/fgt:P3*` shape, companions_and_relations
-    * .rq:59) parsed at compile time into [[PathStep]]s. */
-  final case class Pattern(s: Term, p: String, o: Term)
-  /** One `/`-separated step of a sequence path: a set of predicate
-    * ALTERNATIVES (`p|q`, each optionally INVERSE `^p` — the
-    * kg_path_alt forms), with an optional modifier — `*`
-    * (zero-or-more), `+` (one-or-more), or `?` (zero-or-one).
+  /** A pattern's predicate slot, its kind decided once by [[parse]]. */
+  sealed trait Pred
+  /** A predicate name: local, prefixed, `<IRI>` or the `a` shorthand. */
+  final case class Name(name: String) extends Pred
+  /** A variable predicate `?p`. */
+  final case class PVar(name: String) extends Pred
+  /** A property path (`p/q*`, `(p|^q)`, `^(p/q)` — the reference's
+    * `fgt:P2/fgt:P3*` shape, companions_and_relations.rq:59): the bag
+    * union of its top-level arms, each a sequence of [[PathStep]]s. */
+  final case class Path(arms: Seq[Seq[PathStep]]) extends Pred
+  /** A negated property set `!(p|^q)`: the names excluded in the
+    * forward and in the inverse direction. */
+  final case class NegSet(fwd: Seq[String], inv: Seq[String]) extends Pred
+  /** The `wikibase:statements` per-item statement count. */
+  case object StatementCount extends Pred
+
+  final case class Pattern(s: Term, p: Pred, o: Term)
+  /** One `/`-separated step of a sequence path, as [[parse]] lowers
+    * it: a set of predicate ALTERNATIVES (`p|q`, each optionally
+    * INVERSE `^p` — the kg_path_alt forms), with an optional modifier
+    * — `*` (zero-or-more), `+` (one-or-more), or `?` (zero-or-one).
     * `subs` carries arms that are themselves SEQUENCE PATHS (the
     * inner-nested alternation `((p/q)|r)/s`, round 11): each compiles
     * to its own (a, b) pair relation and bag-unions with the plain
@@ -84,7 +111,8 @@ object Sparql {
   final case class PathStep(alts: Seq[(String, Boolean)], star: Boolean,
       plus: Boolean = false, opt: Boolean = false,
       subs: Seq[Seq[PathStep]] = Nil) {
-    def pred: String = alts.head._1 // first alternative (doc/messages)
+    /** Every predicate name the step scans, nested sub-paths included. */
+    def names: Seq[String] = alts.map(_._1) ++ subs.flatten.flatMap(_.names)
   }
   sealed trait Filt
   final case class FRegex(v: String, re: String) extends Filt
@@ -367,7 +395,9 @@ object Sparql {
     import scala.collection.mutable.ListBuffer
     val s = body0; val n = s.length
     var i = 0; var q = ' '
-    val chunks = ListBuffer[String]()
+    // triple text runs, parsed after the scan, and a bare nested
+    // group's already-parsed patterns, in body order
+    val chunks = ListBuffer[Either[String, Seq[Pattern]]]()
     val sb = new StringBuilder
     val optionals = ListBuffer[Body](); val unions = ListBuffer[Seq[Body]]()
     val filters = ListBuffer[Filt](); val minuses = ListBuffer[Minus]()
@@ -378,13 +408,13 @@ object Sparql {
     var labelLangs: Option[Seq[String]] = None
 
     def flushChunk(): Unit = {
-      if (sb.toString.exists(c => !c.isWhitespace && c != '.')) chunks += sb.toString
+      if (sb.toString.exists(c => !c.isWhitespace && c != '.')) chunks += Left(sb.toString)
       sb.clear()
     }
     def mergeBare(b: Body): Unit = {
       // a bare nested group `{ … }` (no UNION partner) groups without
       // scoping in this subset — merge its content into this level
-      b.patterns.foreach(p => chunks += patText(p))
+      chunks += Right(b.patterns)
       optionals ++= b.optionals; unions ++= b.unions; filters ++= b.filters
       minuses ++= b.minuses; binds ++= b.binds; iriBinds ++= b.iriBinds
       exprBinds ++= b.exprBinds; ifBinds ++= b.ifBinds; values ++= b.values
@@ -528,7 +558,10 @@ object Sparql {
       else { sb += c; i += 1 }
     }
     flushChunk()
-    val pats = chunks.toList.flatMap(ch => triples(desugarBlank(ch, fresh)))
+    val pats = chunks.toList.flatMap {
+      case Left(ch) => triples(desugarBlank(ch, fresh))
+      case Right(ps) => ps
+    }
     Body(pats, optionals.toList, unions.toList, filters.toList, minuses.toList,
       binds.toMap, iriBinds.toList, exprBinds.toList, ifBinds.toList,
       values.toList, services.toList, labelLangs)
@@ -544,7 +577,7 @@ object Sparql {
   /** The variables of a pattern: subject, predicate, object. */
   private def patVars(p: Pattern): Seq[String] =
     (p.s match { case V(x) => Seq(x); case _ => Nil }) ++
-      (if (p.p.startsWith("?")) Seq(p.p.drop(1)) else Nil) ++
+      (p.p match { case PVar(x) => Seq(x); case _ => Nil }) ++
       (p.o match { case V(x) => Seq(x); case _ => Nil })
 
   private def varsOf(pats: Seq[Pattern]): Seq[String] = pats.flatMap(patVars).distinct
@@ -593,9 +626,9 @@ object Sparql {
     * fixed-predicate pattern). */
   private def substWith(p: Pattern, binds: Map[String, Term]): Pattern = Pattern(
     p.s match { case V(n) if binds.contains(n) => binds(n); case s => s },
-    (if (p.p.startsWith("?")) binds.get(p.p.drop(1)) else None) match {
-      case Some(Lit(v)) if v.startsWith(PredName) => v.stripPrefix(PredName)
-      case _ => p.p
+    p.p match {
+      case PVar(v) => binds.get(v) match { case Some(PredConst(n)) => Name(n); case _ => p.p }
+      case other => other
     },
     p.o match { case V(n) if binds.contains(n) => binds(n); case o => o })
 
@@ -610,222 +643,166 @@ object Sparql {
         kids.flatMap(_(binds))
     })(Map.empty)
 
-  /** Render a parsed pattern back to chunk text (bare-group merge). */
-  private def patText(p: Pattern): String = {
-    def t(x: Term): String = x match {
-      case V(v) => s"?$v"
-      case Num(v) => v.toString
-      case Lit(v) if v.startsWith(Pfx) => v.stripPrefix(Pfx)
-      case Lit(v) if v.startsWith(IriPfx) => s"<${v.stripPrefix(IriPfx)}>"
-      case Lit(v) => "\"" + v + "\""
-    }
-    s"${t(p.s)} ${p.p} ${t(p.o)}"
-  }
-
-  /** Sentinels marking a prefixed-name / `<IRI>` term for resolution
-    * at compile time (NUL can't occur in query text). A prefixed name
-    * MUST resolve through the dialect maps; an IRI resolves through
-    * `entityAliases` (keyed by its bracketed form) in entity
-    * positions and otherwise compares as a literal against its bare
-    * text (the `schema:isPartOf <https://www.wikidata.org/>` shape). */
-  private val Pfx = "\u0000prefixed:"
-  private val IriPfx = "\u0000iri:"
-  /** A BIND-constant that resolved to a PREDICATE name (the compare
-    * files' `BIND(fgt:P117 as ?fg_property)` ... `?fg_item ?fg_property
-    * ?fg_value`): substitutes into predicate slots as the resolved
-    * local name and surfaces as that name string when projected. */
-  private val PredName = "\u0000pred:"
-
   private def term(tok: String): Term = tok.trim match {
     case t if t.startsWith("?")                      => V(t.drop(1))
     case t if t.startsWith("\"") && t.endsWith("\"") => Lit(t.drop(1).dropRight(1))
     case t if t.length >= 2 && t.startsWith("'") && t.endsWith("'") =>
       Lit(t.drop(1).dropRight(1)) // SPARQL's single-quoted literal form
     case t if t.matches("-?\\d+")                    => Num(t.toLong)
-    case t if PrefixedRe.matches(t)                  => Lit(Pfx + t) // resolved at compile
-    case t if t.startsWith("<") && t.endsWith(">")   => Lit(IriPfx + t.drop(1).dropRight(1))
+    case t if PrefixedRe.matches(t)                  => Prefixed(t)
+    case t if t.startsWith("<") && t.endsWith(">")   => Iri(t.drop(1).dropRight(1))
     case t => throw new IllegalArgumentException(s"unsupported term: '$t'")
   }
 
-  /** Is this predicate slot a property-path expression? (Plain local
-    * and prefixed predicate names never contain path operators; an
-    * IRI predicate `<https://…/x>` contains `/` but is not a path.) */
-  private def isPath(p: String): Boolean =
-    !(p.startsWith("<") && p.endsWith(">")) &&
-      ("/*|^+(".exists(c => p.contains(c.toString)) ||
-        // a trailing `?` is the zero-or-one modifier (`p?`) — but a
-        // LEADING `?` is a variable predicate, never a path
-        (!p.startsWith("?") && p.endsWith("?")))
-
-  /** Parse a sequence property path — `p/q`, `p/q*`, `p/q+`, `p?/q`
-    * (zero-or-one), `(p/(q*))`-style nesting one predicate deep,
-    * per-step alternation `(p|q)` with inverse arms `^p` (the
-    * kg_path_alt forms). With `?` and closure-FIRST forms (round 10),
-    * negated sets with inverse arms + nested alternation (round 11)
-    * and inverse-of-sequence `^(p/q)` via [[invertPathText]]'s
-    * parse-time rewrite (round 12), the SPARQL 1.1 path surface is
-    * closed; malformed segments still throw, never a silently wrong
-    * plan. */
-  private def stripParens(s0: String): String = {
-    var s = s0.trim
-    var go = true
-    while (go && s.startsWith("(") && s.endsWith(")")) {
-      // strip only if the outer parens match EACH OTHER
-      var d = 0; var outer = true
-      s.zipWithIndex.foreach { case (c, i) =>
-        if (c == '(') d += 1
-        else if (c == ')') { d -= 1; if (d == 0 && i < s.length - 1) outer = false }
-      }
-      if (outer && d == 0) s = s.drop(1).dropRight(1).trim else go = false
+  /** A predicate token's slot, decided here once: `?p`, the
+    * `wikibase:statements` count, a plain name (local, prefixed,
+    * `<IRI>` or `a` — names never contain path operators; an IRI may
+    * contain `/` but is not a path), or else a property path or a
+    * negated property set, parsed by [[pathOf]]. */
+  private def predicate(tok: String): Pred =
+    if (tok.startsWith("?")) PVar(tok.drop(1))
+    else if (tok == "wikibase:statements") StatementCount
+    else if ((tok.startsWith("<") && tok.endsWith(">")) ||
+      !(tok.startsWith("!") || tok.endsWith("?") || "/*|^+(".exists(c => tok.contains(c))))
+      Name(tok)
+    else pathOf(tok) match {
+      case PNeg(fwd, inv) => NegSet(fwd, inv)
+      case e => Path(arms(e))
     }
-    s
+
+  /** The SPARQL 1.1 path grammar's parse tree (§18: alternative over
+    * sequence over an optionally inverse element with one modifier),
+    * lowered to [[PathStep]]s by [[arms]]. Parentheses leave no node,
+    * so `((p/q))` and `p/q` parse alike, and [[inverse]] pushes `^`
+    * down to the names. */
+  private sealed trait PathExpr
+  private final case class PLeaf(name: String, inv: Boolean) extends PathExpr
+  private final case class PAlt(arms: Seq[PathExpr]) extends PathExpr
+  private final case class PSeq(elts: Seq[PathExpr]) extends PathExpr
+  /** `^(e₁/…/eₙ)`, kept whole so that it splices into an enclosing
+    * sequence. */
+  private final case class PInvSeq(elts: Seq[PathExpr]) extends PathExpr
+  private final case class PMod(e: PathExpr, mod: Char) extends PathExpr
+  /** `!(p|^q)`: the whole path, or the whole path under `^`. */
+  private final case class PNeg(fwd: Seq[String], inv: Seq[String]) extends PathExpr
+
+  /** `^e` — the SPARQL 1.1 rewrites: `^(p|q) = ^p|^q`, `^(p*) =
+    * (^p)*` (a p-chain read backwards is a ^p-chain), `^^p = p`, and
+    * `^!(p|^q) = !(^p|q)` (each set arm's direction flips). A sequence
+    * inverts in [[steps]]. */
+  private def inverse(e: PathExpr): PathExpr = e match {
+    case PLeaf(n, inv) => PLeaf(n, !inv)
+    case PAlt(as) => PAlt(as.map(inverse))
+    case PSeq(es) => PInvSeq(es)
+    case PInvSeq(es) => PSeq(es)
+    case PMod(x, m) => PMod(inverse(x), m)
+    case PNeg(fwd, inv) => PNeg(inv, fwd)
   }
 
-  /** Split on `sep` at paren depth 0. */
-  private def splitTop(t: String, sep: Char): Seq[String] = {
-    val segs = scala.collection.mutable.ListBuffer[String]()
-    val sb = new StringBuilder; var d = 0
-    t.foreach { c =>
-      if (c == '(') { d += 1; sb += c }
-      else if (c == ')') { d -= 1; sb += c }
-      else if (c == sep && d == 0) { segs += sb.toString; sb.clear() }
-      else sb += c
-    }
-    segs += sb.toString
-    segs.toList
-  }
+  private def unsupportedSegment(seg: String, raw: String): Nothing =
+    throw new IllegalArgumentException(s"unsupported path segment '$seg' in '$raw' " +
+      "(supported: p, ^p, ^(p/q), p|q, p*, p+, p/q, nested parenthesized paths)")
 
-  /** Textual inverse of a path expression — the SPARQL 1.1 rewrite
-    * `^(p₁/…/pₙ) = ^pₙ/…/^p₁` (inverse distributes over sequence in
-    * REVERSE order), `^(p|q) = ^p|^q`, `^(p*) = (^p)*` (inverse
-    * commutes with closure: a p-chain read backwards is a ^p-chain),
-    * `^^p = p`, and `^!(p|^q) = !(^p|q)` (each set arm's direction
-    * flips). Produces plain path text re-parsed by [[parsePath]], so
-    * inverse-of-sequence SPLICES into the outer sequence (the
-    * constant-subject seed still pipelines through the advance joins
-    * instead of materializing an unseeded sub-relation). */
-  private[kg] def invertPathText(raw: String): String = {
-    val t = stripParens(raw)
-    val arms = splitTop(t, '|')
-    if (arms.length > 1) return arms.map(a => invertPathText(a.trim)).mkString("|")
-    val segs = splitTop(t, '/')
-    if (segs.length > 1) return segs.reverse.map { s =>
-      val inv = invertPathText(s.trim)
-      // an alternation segment must keep its parens inside the
-      // rebuilt sequence ('|' binds looser than '/')
-      if (splitTop(inv, '|').length > 1) "(" + inv + ")" else inv
-    }.mkString("/")
-    val s = t.trim
-    if (s.endsWith("*")) "(" + invertPathText(s.dropRight(1).trim) + ")*"
-    else if (s.endsWith("+")) "(" + invertPathText(s.dropRight(1).trim) + ")+"
-    else if (s.endsWith("?") && !s.startsWith("?")) "(" + invertPathText(s.dropRight(1).trim) + ")?"
-    else if (s.startsWith("^")) stripParens(s.drop(1).trim) // ^^p = p
-    else if (s.startsWith("!")) {
-      val set = splitTop(stripParens(s.drop(1).trim), '|').map(_.trim).map { a =>
-        if (a.startsWith("^")) a.drop(1).trim else "^" + a
-      }
-      "!(" + set.mkString("|") + ")"
-    }
-    else {
-      require(PrefixedRe.matches(s) || s.matches("\\w+"),
-        s"cannot invert path segment '$s' in '$raw'")
-      "^" + s
-    }
-  }
-
-  /** Replace every depth-0 `^( … )` group with its [[invertPathText]]
-    * rewrite, so inverse-of-sequence/alternation/closure paths reach
-    * [[parsePath]] as ordinary forward text. */
-  private def desugarInverseGroups(t: String): String = {
-    val sb = new StringBuilder
+  /** Parse a path or negated-set token. A step name is a local or
+    * prefixed name or an `<IRI>`; anything else — an empty step, a
+    * stray operator, an unbalanced paren — is a loud reject, never a
+    * silently wrong plan. */
+  private def pathOf(raw: String): PathExpr = {
+    import scala.collection.mutable.ListBuffer
     var i = 0
-    while (i < t.length) {
-      if (t.charAt(i) == '^' && i + 1 < t.length && t.charAt(i + 1) == '(') {
-        var d = 0; var j = i + 1
-        while (j < t.length && (d != 0 || j == i + 1)) {
-          if (t.charAt(j) == '(') d += 1 else if (t.charAt(j) == ')') d -= 1
-          if (d != 0) j += 1
-        }
-        require(j < t.length, s"unbalanced parens in path '$t'")
-        val inv = invertPathText(t.substring(i + 2, j))
-        // a modifier after the group binds tighter than '^' in the
-        // SPARQL grammar ('^' PathElt, PathElt = primary + modifier):
-        // ^(p/q)* = ^((p/q)*) = (^q/^p)* — inverse commutes with the
-        // closure, which needs the parens kept
-        val mod = if (j + 1 < t.length && "*+?".contains(t.charAt(j + 1))) {
-          i = j + 2; t.charAt(j + 1).toString
-        } else { i = j + 1; "" }
-        // splice sequences raw ('/' is associative — keeps the outer
-        // constant-subject seed pipelining through the advance joins);
-        // parenthesize a top-level alternation ('|' binds lower) or a
-        // modified group
-        if (mod.nonEmpty || splitTop(inv, '|').length > 1)
-          sb.append("(").append(inv).append(")").append(mod)
-        else sb.append(inv)
-      } else { sb.append(t.charAt(i)); i += 1 }
+    def peek: Char = if (i < raw.length) raw(i) else ' '
+    def unbalanced(): Nothing =
+      throw new IllegalArgumentException(s"unbalanced parens in path '$raw'")
+    def alt(): PathExpr = {
+      val as = ListBuffer(seq())
+      while (peek == '|') { i += 1; as += seq() }
+      if (as.size == 1) as.head else PAlt(as.toList)
     }
-    sb.toString
+    def seq(): PathExpr = {
+      val es = ListBuffer(elt())
+      while (peek == '/') { i += 1; es += elt() }
+      if (es.size == 1) es.head else PSeq(es.toList)
+    }
+    // '^' applies to the modified element: ^p* = ^(p*)
+    def elt(): PathExpr =
+      if (peek == '^') { i += 1; inverse(elt()) }
+      else {
+        val e = primary()
+        if ("*+?".contains(peek)) { i += 1; PMod(e, raw(i - 1)) } else e
+      }
+    def primary(): PathExpr = peek match {
+      case '(' =>
+        i += 1
+        val e = alt()
+        if (peek != ')') unbalanced()
+        i += 1; e
+      case '!' =>
+        i += 1
+        val set = elt() match { case PAlt(as) => as; case e => Seq(e) }
+        val names = set.collect { case l: PLeaf => l }
+        if (names.size < set.size) unsupportedSegment(raw, raw)
+        PNeg(names.filterNot(_.inv).map(_.name), names.filter(_.inv).map(_.name))
+      case _ =>
+        val j = i
+        if (peek == '<') i = raw.indexOf('>', i) + 1 // an IRI may hold '/'
+        else while (i < raw.length && !"/|^*+?()!".contains(raw(i))) i += 1
+        val n = raw.substring(j, math.max(i, j))
+        if (!(PrefixedRe.matches(n) || n.matches("\\w+") ||
+            (n.length > 2 && n.startsWith("<") && n.endsWith(">")))) unsupportedSegment(n, raw)
+        PLeaf(n, inv = false)
+    }
+    val e = alt()
+    if (i < raw.length) {
+      if (raw.count(_ == '(') != raw.count(_ == ')')) unbalanced()
+      unsupportedSegment(raw.substring(i), raw)
+    }
+    e
   }
 
-  /** Top-level path ALTERNATION. SPARQL gives `|` LOWER precedence
-    * than `/` (PathAlternative over PathSequence), so `p/q|r` is
-    * (p/q)|r — each top-level arm is a full sequence path and the
-    * result is the BAG UNION of the arm frames. A bare alternation of
-    * plain/inverse names keeps the single-step per-arm plan (the
-    * kg_path_alt shape: one filtered scan, no union of closures).
-    * Before round 11 a mixed `p/q|r` silently compiled with the WRONG
-    * precedence (p/(q|r), the '/'-first split); now it routes here. */
-  private[kg] def parsePathUnion(raw: String): Seq[Seq[PathStep]] = {
-    val t = desugarInverseGroups(stripParens(raw))
-    val arms = splitTop(t, '|').map(_.trim)
-    def simpleArm(a0: String): Boolean = {
-      val a = if (a0.startsWith("^")) a0.drop(1).trim else a0
-      PrefixedRe.matches(a) || a.matches("\\w+")
-    }
-    if (arms.length > 1 && !arms.forall(simpleArm)) arms.map(parsePath)
-    else Seq(parsePath(t))
+  /** A parsed path's top-level arms. SPARQL gives `|` LOWER
+    * precedence than `/` (PathAlternative over PathSequence), so
+    * `p/q|r` is (p/q)|r: each arm is a full sequence and the result
+    * is the BAG UNION of the arm frames. An alternation of plain or
+    * inverse names keeps the single-step per-arm plan (the
+    * kg_path_alt shape: one filtered scan, no union of closures). */
+  private def arms(e: PathExpr): Seq[Seq[PathStep]] = e match {
+    case PAlt(as) if !as.forall(_.isInstanceOf[PLeaf]) => as.map(steps)
+    case _ => Seq(steps(e))
   }
 
-  private[kg] def parsePath(raw: String): Seq[PathStep] = {
-    val t = desugarInverseGroups(stripParens(raw))
-    val segs = splitTop(t, '/').to(scala.collection.mutable.ListBuffer)
-    segs.toList.map { s0 =>
-      var s = stripParens(s0)
-      var star = false; var plus = false; var opt = false
-      if (s.endsWith("*")) { star = true; s = stripParens(s.dropRight(1).trim) }
-      else if (s.endsWith("+")) { plus = true; s = stripParens(s.dropRight(1).trim) }
-      else if (s.endsWith("?")) { opt = true; s = stripParens(s.dropRight(1).trim) }
-      // per-step alternation: split on '|' at PAREN DEPTH 0 of the
-      // step; a plain/prefixed (optionally inverse) arm is a scan
-      // alternative, anything else — a parenthesized sequence, an arm
-      // with its own modifier — recurses as a SUB-PATH whose (a, b)
-      // relation unions with the plain arms' edges
-      val armsSplit = splitTop(s, '|').map(_.trim)
-      val (plainArms, subArms) = armsSplit.partition { a0 =>
-        val a1 = stripParens(a0)
-        val a = if (a1.startsWith("^")) a1.drop(1).trim else a1
-        PrefixedRe.matches(a) || a.matches("\\w+")
+  /** `e` as a `/`-sequence of steps. `^(p₁/…/pₙ) = ^pₙ/…/^p₁`
+    * (inverse distributes over sequence in REVERSE order) splices into
+    * an enclosing sequence, so a constant subject's seed still
+    * pipelines through the advance joins instead of materializing an
+    * unseeded sub-relation; any other element, a parenthesized
+    * sequence included, is one step. */
+  private def steps(e: PathExpr): Seq[PathStep] = e match {
+    case PSeq(es) => es.flatMap { case x: PSeq => Seq(step(x)); case x => steps(x) }
+    case PInvSeq(es) => es.reverse.flatMap(x => steps(inverse(x)))
+    case _ => Seq(step(e))
+  }
+
+  /** `e` as ONE step: an alternation's name arms become scan
+    * alternatives and its other arms SUB-PATHS whose (a, b) relations
+    * union with the names' edges; a sequence is one sub-path; a
+    * modifier over an already-modified step wraps it. */
+  private def step(e: PathExpr): PathStep = e match {
+    case PLeaf(n, inv) => PathStep(Seq((n, inv)), star = false)
+    case PAlt(as) =>
+      val (names, subs) = as.map(steps).partition {
+        case Seq(PathStep(Seq(_), false, false, false, Nil)) => true
+        case _ => false
       }
-      val alts = plainArms.map(stripParens).map { a0 =>
-        val inv = a0.startsWith("^")
-        (if (inv) a0.drop(1).trim else a0, inv)
-      }
-      val subs = subArms.map { a0 =>
-        val sub = stripParens(a0)
-        // termination guard: recurse only when parsePath will strictly
-        // DECOMPOSE the arm (outer parens stripped, a depth-0 '/' or
-        // '|' to split on, or a trailing modifier) — anything else is
-        // a malformed segment and must reject loudly, never loop
-        val decomposes = sub != a0.trim ||
-          splitTop(sub, '/').length > 1 || splitTop(sub, '|').length > 1 ||
-          sub.endsWith("*") || sub.endsWith("+") || sub.endsWith("?")
-        require(decomposes,
-          s"unsupported path segment '$s0' in '$raw' " +
-            "(supported: p, ^p, ^(p/q), p|q, p*, p+, p/q, nested parenthesized paths)")
-        parsePath(sub)
-      }
-      require(alts.nonEmpty || subs.nonEmpty, s"empty path step '$s0' in '$raw'")
-      PathStep(alts, star, plus, opt, subs)
+      PathStep(names.map(_.head.alts.head), star = false, subs = subs)
+    case PMod(x, m) =>
+      val s0 = step(x)
+      val s = if (s0.star || s0.plus || s0.opt) PathStep(Nil, star = false, subs = Seq(Seq(s0))) else s0
+      s.copy(star = m == '*', plus = m == '+', opt = m == '?')
+    case PNeg(_, _) => throw new IllegalArgumentException(
+      "unsupported path segment: a negated property set must be the whole path")
+    case _ => steps(e) match {
+      case Seq(one) => one
+      case many => PathStep(Nil, star = false, subs = Seq(many))
     }
   }
 
@@ -853,7 +830,7 @@ object Sparql {
     * (`dbo:thumbnail?image`, companions_and_relations.rq's DBpedia
     * OPTIONAL) splits into two tokens; a path `?` MODIFIER (`p?`,
     * `p?/q`) does not match the tail shape and stays one token for
-    * the path parser's loud reject. */
+    * the path parser. */
   private def splitGlued(tok: String): Seq[String] =
     if (tok.isEmpty || "\"'?<".contains(tok.head)) Seq(tok)
     else {
@@ -868,18 +845,19 @@ object Sparql {
     * continuations reusing the subject (`?s p1 o1; p2 o2 .`); both
     * separators are quote-aware so literals may hold `.`/`;`. A
     * path expression is one whitespace-free token in the predicate
-    * slot, so tokenization is unchanged. */
+    * slot, so tokenization is unchanged; [[predicate]] decides the
+    * slot's kind. */
   private def triples(body: String): Seq[Pattern] =
     quoteAwareSplit(body, '.').map(_.trim).filter(_.nonEmpty).flatMap { stmt =>
       val groups = quoteAwareSplit(stmt, ';').map(_.trim).filter(_.nonEmpty)
       val headToks = TokenRe.findAllIn(groups.head).toList.flatMap(splitGlued)
       require(headToks.length == 3, s"unsupported pattern (need 's p o'): '${groups.head}'")
       val subj = term(headToks.head)
-      val first = Pattern(subj, headToks(1), term(headToks(2)))
+      val first = Pattern(subj, predicate(headToks(1)), term(headToks(2)))
       val rest = groups.tail.map { g =>
         val toks = TokenRe.findAllIn(g).toList.flatMap(splitGlued)
         require(toks.length == 2, s"unsupported ';' continuation (need 'p o'): '$g'")
-        Pattern(subj, toks.head, term(toks(1)))
+        Pattern(subj, predicate(toks.head), term(toks(1)))
       }
       first +: rest
     }.toSeq
@@ -1002,17 +980,14 @@ object Sparql {
     * an entity alias becomes that entity id; a name only in the
     * PREDICATE map is a predicate-name constant (BIND(fgt:P117 as ?p)
     * — the compare files' parameterized-property idiom); an IRI
-    * without an alias stays a (sentinel-marked) literal and the typing
-    * branches decide (literal-valued predicate → compare the bare IRI
-    * text, entity position → loud reject). None: a prefixed name with
-    * no alias. */
+    * without an alias stays an [[Iri]] and the typing branches decide
+    * (literal-valued predicate → compare the bare IRI text, entity
+    * position → loud reject). None: a prefixed name with no alias. */
   private def resolveIn(g: ServiceGraph, t: Term): Option[Term] = t match {
-    case Lit(v) if v.startsWith(Pfx) =>
-      val name = v.stripPrefix(Pfx)
+    case Prefixed(name) =>
       g.entityAliases.get(name).map(Num(_): Term)
-        .orElse(g.predAliases.get(name).map(n => Lit(PredName + n): Term))
-    case Lit(v) if v.startsWith(IriPfx) =>
-      Some(g.entityAliases.get("<" + v.stripPrefix(IriPfx) + ">").map(Num(_): Term).getOrElse(t))
+        .orElse(g.predAliases.get(name).map(PredConst(_): Term))
+    case Iri(iri) => Some(g.entityAliases.get(s"<$iri>").map(Num(_): Term).getOrElse(t))
     case other => Some(other)
   }
 
@@ -1030,8 +1005,8 @@ object Sparql {
     * [[predIn]] resolves a predicate slot, a quoted local name as-is.
     * None: no alias, or not a name. */
   private def valuePred(g: ServiceGraph, row: Seq[Term]): Option[String] = row match {
-    case Seq(Lit(s)) if s.startsWith(Pfx) => g.predAliases.get(s.stripPrefix(Pfx))
-    case Seq(Lit(s)) if s.startsWith(IriPfx) => g.predAliases.get("<" + s.stripPrefix(IriPfx) + ">")
+    case Seq(Prefixed(n)) => g.predAliases.get(n)
+    case Seq(Iri(iri)) => g.predAliases.get(s"<$iri>")
     case Seq(Lit(s)) => Some(s)
     case _ => None
   }
@@ -1103,17 +1078,6 @@ object Sparql {
     * doubled kg_sparql_companions' tasks (548 → 1163). */
   private final case class SharedStore(preds: Set[String], pruned: DataFrame)
 
-  /** Predicate names of every step (and nested sub-path step) of a
-    * property-path expression — for routing path-step scans to the
-    * pruned store. Never throws: an unparseable path contributes
-    * nothing (its compile raises the loud error). */
-  private def pathStepNames(p: String): Seq[String] = {
-    def stepNames(s: PathStep): Seq[String] =
-      s.alts.map(_._1) ++ s.subs.flatten.flatMap(stepNames)
-    try parsePathUnion(p).flatten.flatMap(stepNames)
-    catch { case _: Exception => Nil }
-  }
-
   /** The constant predicates the scans of `bodies` read from `g`'s
     * store, resolved through `g`'s dialect, with BIND constants
     * substituted in scope: fixed predicates, path steps, VALUES lists
@@ -1124,16 +1088,16 @@ object Sparql {
   private def scannedPreds(g: ServiceGraph, bodies: Seq[Body]): Set[String] =
     bodies.flatMap { b =>
       val pats = scopedPatterns(b, t => resolveIn(g, t).getOrElse(t))
-      val predVars = pats.collect { case p if p.p.startsWith("?") => p.p.drop(1) }.toSet
+      val predVars = pats.collect { case Pattern(_, PVar(v), _) => v }.toSet
       val listed: Map[String, Seq[String]] = groups(b).flatMap(_.values).collect {
         case ValuesBlock(Seq(v), rows) if predVars(v) => v -> rows.flatMap(valuePred(g, _))
       }.toMap
-      pats.flatMap { p =>
-        if (p.p.startsWith("!") || p.p == "wikibase:statements") Nil
-        else if (isPath(p.p)) pathStepNames(p.p).flatMap(predIn(g, _))
-        else if (p.p.startsWith("?")) listed.getOrElse(p.p.drop(1), Nil)
-        else predIn(g, p.p).toSeq
-      } ++ (if (labelLangsOf(b).isDefined) Seq("label") else Nil)
+      pats.flatMap(_.p match {
+        case Name(n) => predIn(g, n).toSeq
+        case PVar(v) => listed.getOrElse(v, Nil)
+        case Path(arms) => arms.flatten.flatMap(_.names).flatMap(predIn(g, _))
+        case NegSet(_, _) | StatementCount => Nil
+      }) ++ (if (labelLangsOf(b).isDefined) Seq("label") else Nil)
     }.toSet
 
   /** The one store planner: `g`'s store pruned to the predicates
@@ -1156,13 +1120,19 @@ object Sparql {
       cols: scala.collection.mutable.ListBuffer[Column]): DataFrame = s match {
     case V(n)   => cols += col("s").as(n); df
     case Num(v) => df.filter(col("s") === v)
-    case Lit(v) if v.startsWith(IriPfx) => throw new IllegalArgumentException(
-      s"IRI subject <${v.stripPrefix(IriPfx)}> has no alias in the dialect map")
-    case Lit(v) => throw new IllegalArgumentException(s"literal subject '$v' unsupported")
+    case Iri(iri) => throw new IllegalArgumentException(
+      s"IRI subject <$iri> has no alias in the dialect map")
+    case t => throw new IllegalArgumentException(s"literal subject '${litText(t)}' unsupported")
   }
 
-  /** Is this predicate slot a variable (`?p`)? */
-  private def isVarPred(p: String): Boolean = p.startsWith("?")
+  /** A resolved constant term's text: a literal, an alias-free IRI's
+    * bare text, or a predicate constant's name. */
+  private def litText(t: Term): String = t match {
+    case Lit(v) => v
+    case Iri(iri) => iri
+    case PredConst(n) => n
+    case other => other.toString
+  }
 
   /** The stem `x` of a label-convention variable `?xLabel` or
     * `?xAltLabel`; None for any other variable. */
@@ -1171,14 +1141,9 @@ object Sparql {
       Some(v.dropRight(if (v.endsWith("AltLabel")) "AltLabel".length else "Label".length))
     else None
 
-  /** A fixed predicate slot's store name under `g`'s dialect, or a loud
+  /** A predicate name's store name under `g`'s dialect, or a loud
     * reject. */
   private def storePred(g: ServiceGraph, p: String): String = {
-    // a variable predicate would compile to a constant-string filter
-    // that matches nothing — reject loudly per the
-    // no-silently-wrong-results contract
-    require(!p.startsWith("?"),
-      s"variable predicate '$p' unsupported (enumerate predicates explicitly)")
     // the rdf:type shorthand resolves through the dialect map like
     // any prefixed name (`"a" -> <type predicate>`); without a
     // mapping it stays a loud reject, never a match-nothing filter
@@ -1192,7 +1157,7 @@ object Sparql {
     * prefixed entity without an alias. */
   private def resolveTerm(g: ServiceGraph, t: Term): Term =
     resolveIn(g, t).getOrElse(throw new IllegalArgumentException(
-      s"prefixed entity '${t match { case Lit(v) => v.stripPrefix(Pfx); case _ => t }}' " +
+      s"prefixed entity '${t match { case Prefixed(n) => n; case _ => t }}' " +
         "has no alias in the dialect map"))
 
   /** What the typing pass (see the object doc) decides for one query
@@ -1224,15 +1189,13 @@ object Sparql {
     // db_all_person_relations.rq idiom: `VALUES ?rel { fgt:P84 … }
     // ?item ?rel ?value`) resolve through predAliases and are consumed
     // by pattern compilation (p-isin pushdown), not the generic filter
-    val predVars: Set[String] =
-      allPats.collect { case p0 if isVarPred(p0.p) => p0.p.drop(1) }.toSet
+    val predVars: Set[String] = allPats.collect { case Pattern(_, PVar(v), _) => v }.toSet
     val predValues: Map[String, Seq[String]] = groups(q.body).flatMap(_.values).collect {
       case ValuesBlock(Seq(v), rows) if predVars(v) =>
         v -> rows.map(r => valuePred(graph, r).getOrElse(throw new IllegalArgumentException(
           r match {
-            case Seq(Lit(s)) if s.startsWith(IriPfx) =>
-              s"predicate <${s.stripPrefix(IriPfx)}> has no alias in the dialect map"
-            case Seq(Lit(s)) => s"prefixed predicate '${s.stripPrefix(Pfx)}' has no alias in the dialect map"
+            case Seq(Iri(iri)) => s"predicate <$iri> has no alias in the dialect map"
+            case Seq(Prefixed(n)) => s"prefixed predicate '$n' has no alias in the dialect map"
             case _ => s"VALUES over predicate variable ?$v must list predicate names, got ${r.head}"
           })))
     }.toMap
@@ -1241,17 +1204,17 @@ object Sparql {
     // NODE object is a subject downstream and stays an entity)
     val subjectVars: Set[String] = allPats.map(_.s).collect { case V(n) => n }.toSet
     val varKinds = allPats.flatMap { p0 =>
-      val pKind = if (isVarPred(p0.p)) Seq(p0.p.drop(1) -> "predicate") else Nil
-      val oKind = p0.o match {
-        case V(n) if isVarPred(p0.p) =>
+      val pKind = p0.p match { case PVar(v) => Seq(v -> "predicate"); case _ => Nil }
+      val oKind = (p0.o, p0.p) match {
+        case (V(n), PVar(pv)) =>
           // object typing of a variable-predicate pattern: determined
           // by the VALUES predicate list when present (all listed
           // predicates must agree), else by the var's OTHER sites
-          predValues.get(p0.p.drop(1)) match {
+          predValues.get(pv) match {
             case Some(preds) =>
               val kinds = preds.map(pr => if (entityPreds(pr)) "entity" else "literal").distinct
               require(kinds.size == 1,
-                s"VALUES over ?${p0.p.drop(1)} mixes entity- and literal-valued predicates")
+                s"VALUES over ?$pv mixes entity- and literal-valued predicates")
               Seq(n -> kinds.head)
             // the "*" dialect marker (an all-entity-edges graph — the
             // network-02 wikidata stand-in whose statements are truthy
@@ -1263,12 +1226,12 @@ object Sparql {
             case None if entityPreds("~") && !subjectVars(n) => Seq(n -> "literal")
             case None => Nil
           }
-        case V(_) if p0.p.startsWith("!") => Nil // negated set: typing from other sites
-        case V(n) if isPath(p0.p) => Seq(n -> "entity")
+        case (V(_), NegSet(_, _)) => Nil // negated set: typing from other sites
+        case (V(n), Path(_)) => Seq(n -> "entity")
         // the wikibase:statements META-predicate binds a count — a
         // literal-kind var (it never joins an entity site)
-        case V(n) if p0.p == "wikibase:statements" => Seq(n -> "literal")
-        case V(n) => Seq(n -> (if (entityPreds(pred(p0.p))) "entity" else "literal"))
+        case (V(n), StatementCount) => Seq(n -> "literal")
+        case (V(n), Name(pn)) => Seq(n -> (if (entityPreds(pred(pn))) "entity" else "literal"))
         case _ => Nil
       }
       (p0.s match { case V(n) => Seq(n -> "entity"); case _ => Nil }) ++ pKind ++ oKind
@@ -1501,7 +1464,6 @@ object Sparql {
 
     def pred(p: String): String = storePred(graph, p)
     def resolve(t: Term): Term = resolveTerm(graph, t)
-    def bareIri(v: String): String = v.stripPrefix(IriPfx)
 
     // BIND(const AS ?var) seeds substitute the constant into every
     // pattern position of the var IN SCOPE (the seed-item idiom of
@@ -1536,12 +1498,11 @@ object Sparql {
       * term in the graph reaches itself in zero steps) — node-set
       * sized, one distinct over two statement projections, then the
       * same bounded kg_property_path fixpoint. */
-    def pathFrame(p0: Pattern): DataFrame = {
-      val armSeqs = parsePathUnion(p0.p)
+    def pathFrame(p0: Pattern, armSeqs: Seq[Seq[PathStep]]): DataFrame = {
       val subjConst: Option[Long] = resolve(p0.s) match {
         case Num(v) => Some(v)
         case V(_)   => None
-        case Lit(v) => throw new IllegalArgumentException(s"literal subject '$v' unsupported")
+        case t => throw new IllegalArgumentException(s"literal subject '${litText(t)}' unsupported")
       }
       // a step's relation: plain (optionally inverse) predicate scans
       // bag-unioned with any nested SUB-PATH arms' (a, b) relations —
@@ -1583,7 +1544,7 @@ object Sparql {
       def zeroOrOne(e: DataFrame): DataFrame =
         e.distinct().filter(col("a") =!= col("b"))
       // one SEQUENCE arm compiled to its (a, b) pair frame; top-level
-      // alternation ([[parsePathUnion]]) is the bag union of the arms.
+      // alternation ([[arms]]) is the bag union of the arms.
       // `sc` = the subject constant, Some only for the OUTER path
       // (nested sub-path arms pass None — their subjects are interior)
       def compileSeq(steps: Seq[PathStep], sc: Option[Long]): DataFrame = {
@@ -1654,7 +1615,7 @@ object Sparql {
       resolve(p0.o) match {
         case V(n)   => cols += col("b").as(n)
         case Num(v) => acc = acc.filter(col("b") === v)
-        case Lit(v) => throw new IllegalArgumentException(s"literal path object '$v' unsupported")
+        case t => throw new IllegalArgumentException(s"literal path object '${litText(t)}' unsupported")
       }
       require(cols.nonEmpty, s"path pattern binds no variables: $p0")
       acc.select(cols.toSeq: _*)
@@ -1667,8 +1628,7 @@ object Sparql {
       * var binds the predicate NAME (string); the object var's typing
       * comes from the VALUES list or the var's other binding sites —
       * a site-free object is ambiguous and rejected loudly. */
-    def varPredFrame(p0: Pattern): DataFrame = {
-      val pv = p0.p.drop(1)
+    def varPredFrame(p0: Pattern, pv: String): DataFrame = {
       // VALUES-restricted predicate vars scan the pruned store when
       // every listed predicate is materialized there (they are — the
       // collection includes VALUES lists); unrestricted scans keep the
@@ -1692,7 +1652,7 @@ object Sparql {
               s"bind ?$n in another pattern or restrict ?$pv with a VALUES block")
         }
         case Num(v) => df = df.filter(col("o_id") === v)  // entity constant
-        case Lit(v) => df = df.filter(col("o_val") === bareIri(v))
+        case t => df = df.filter(col("o_val") === litText(t))
       }
       df.select(cols.toSeq: _*)
     }
@@ -1709,13 +1669,11 @@ object Sparql {
       * inverse rows. The predicate is anonymous (binds nothing);
       * object typing follows the varPredFrame rule — from the var's
       * OTHER binding sites, a site-free object rejects loudly. */
-    def negSetFrame(p0: Pattern): DataFrame = {
-      val inner = p0.p.drop(1).stripPrefix("(").stripSuffix(")")
-      val (invArms0, fwdArms) = inner.split('|').toSeq.map(_.trim).partition(_.startsWith("^"))
-      val invArms = invArms0.map(a => pred(a.drop(1).trim))
-      val fwdExcluded = fwdArms.map(pred)
+    def negSetFrame(p0: Pattern, fwdNames: Seq[String], invNames: Seq[String]): DataFrame = {
+      val invArms = invNames.map(pred)
+      val fwdExcluded = fwdNames.map(pred)
       val fwd =
-        if (fwdArms.isEmpty && invArms.nonEmpty) None
+        if (fwdNames.isEmpty && invArms.nonEmpty) None
         else Some(st.filter(!col("p").isin(fwdExcluded: _*))
           .select(col("s"), col("o_id"), col("o_val")))
       val inv =
@@ -1736,42 +1694,40 @@ object Sparql {
               s"bind ?$n in another pattern")
         }
         case Num(v) => df = df.filter(col("o_id") === v)
-        case Lit(v) => df = df.filter(col("o_val") === bareIri(v))
+        case t => df = df.filter(col("o_val") === litText(t))
       }
       require(cols.nonEmpty, s"pattern binds no variables: $p0")
       df.select(cols.toSeq: _*)
     }
 
-    def frame(p1: Pattern): DataFrame = {
-      // desugar whole-predicate inverse groups BEFORE dispatch: an
-      // inverted negated set `^(!(p|^q))` rewrites to `!(^p|q)`,
-      // which must route to negSetFrame, not the path parser
-      val p0 = if (p1.p.contains("^(")) p1.copy(p = desugarInverseGroups(p1.p)) else p1
-      if (p0.p.startsWith("!")) return negSetFrame(p0)
-      if (isPath(p0.p)) return pathFrame(p0)
-      if (isVarPred(p0.p)) return varPredFrame(p0)
+    def frame(p0: Pattern): DataFrame = p0.p match {
+      case NegSet(fwd, inv) => negSetFrame(p0, fwd, inv)
+      case Path(arms) => pathFrame(p0, arms)
+      case PVar(v) => varPredFrame(p0, v)
       // Wikibase META-predicate `?item wikibase:statements ?count` —
       // WDQS's per-item statement-count virtual triple (the construct
       // behind the reference's analyse-number-of-items.R inline
       // query). Compiles to ONE map-side-partial groupBy(s) census
       // over the statement store, joined into the BGP on the item var
       // — entity-count-sized, the kg_degree shuffle class.
-      if (p0.p == "wikibase:statements") {
+      case StatementCount =>
         val (iv, cv) = (resolve(p0.s), resolve(p0.o)) match {
           case (V(a), V(b)) => (a, b)
           case _ => throw new IllegalArgumentException(
             "wikibase:statements needs a variable subject and object " +
               "(?item wikibase:statements ?count)")
         }
-        return st.groupBy(col("s")).agg(count(lit(1)).as(cv))
-          .select(col("s").as(iv), col(cv))
-      }
-      val p = Pattern(resolve(p0.s), pred(p0.p), resolve(p0.o))
-      var df = storeFor(p.p).filter(col("p") === p.p)
+        st.groupBy(col("s")).agg(count(lit(1)).as(cv)).select(col("s").as(iv), col(cv))
+      case Name(n) => nameFrame(resolve(p0.s), pred(n), resolve(p0.o))
+    }
+
+    /** A fixed-predicate pattern `s p o` over the resolved terms. */
+    def nameFrame(s: Term, p: String, o: Term): DataFrame = {
+      var df = storeFor(p).filter(col("p") === p)
       val cols = scala.collection.mutable.ListBuffer[Column]()
-      df = bindSubject(p.s, df, cols)
-      p.o match {
-        case V(n) if entityPreds(p.p) =>
+      df = bindSubject(s, df, cols)
+      o match {
+        case V(n) if entityPreds(p) =>
           df = df.filter(col("o_id").isNotNull); cols += col("o_id").as(n)
         case V(n)   =>
           df = langFilter(df.filter(col("o_val").isNotNull), n); cols += col("o_val").as(n)
@@ -1779,19 +1735,17 @@ object Sparql {
         // a numeric object on a literal-valued predicate compares the
         // literal column (o_id is NULL there — comparing it would
         // silently match nothing)
-        case Num(v) if entityPreds(p.p) => df = df.filter(col("o_id") === v)
+        case Num(v) if entityPreds(p) => df = df.filter(col("o_id") === v)
         case Num(v) => df = df.filter(col("o_val") === v.toString)
         // an alias-free IRI on a literal-valued predicate compares its
         // bare text (`?link schema:isPartOf <https://www.wikidata.org/>`)
-        case Lit(v) if v.startsWith(IriPfx) && !entityPreds(p.p) =>
-          df = df.filter(col("o_val") === bareIri(v))
-        case Lit(v) if v.startsWith(IriPfx) => throw new IllegalArgumentException(
-          s"IRI <${bareIri(v)}> sits in an entity position (predicate '${p.p}') " +
+        case Iri(iri) if entityPreds(p) => throw new IllegalArgumentException(
+          s"IRI <$iri> sits in an entity position (predicate '$p') " +
             "but has no alias in the dialect map")
-        case Lit(v) if entityPreds(p.p) => throw new IllegalArgumentException(
-          s"string literal '$v' on entity-valued predicate '${p.p}' would match " +
+        case t if entityPreds(p) => throw new IllegalArgumentException(
+          s"string literal '${litText(t)}' on entity-valued predicate '$p' would match " +
             "nothing — use an entity alias")
-        case Lit(v) => df = df.filter(col("o_val") === v)
+        case t => df = df.filter(col("o_val") === litText(t))
       }
       // an ALL-CONSTANT pattern (a BIND-seeded root meeting a constant
       // class edge — time-items.rq's `?fg_item fgt:P131 fg:Q400012`
@@ -2093,14 +2047,16 @@ object Sparql {
             s"VALUES variable ?$v not bound by the pattern"))
           vars.indices.foreach { i =>
             val kinds = rows.map(_(i) match {
-              case Num(_) => "n"; case Lit(_) => "l"
+              case Num(_) => "n"
               case V(x) => throw new IllegalArgumentException(s"variable ?$x inside VALUES block")
+              case _ => "l"
             }).distinct
             require(kinds.size == 1, s"VALUES ?${vars(i)} mixes entity and literal terms")
           }
           def litOf(t: Term): Column = t match {
-            case Num(x) => lit(x); case Lit(x) => lit(bareIri(x))
-            case V(x)   => throw new IllegalArgumentException(s"variable ?$x inside VALUES block")
+            case Num(x) => lit(x); case V(x) => throw new IllegalArgumentException(
+              s"variable ?$x inside VALUES block")
+            case x => lit(litText(x))
           }
           acc = acc.filter(rows.map(r =>
             vars.zip(r).map { case (v, t) => col(v) === litOf(t) }.reduce(_ && _)
@@ -2129,12 +2085,11 @@ object Sparql {
       if (acc != null) b.binds.foreach { case (v, t0) =>
         if (!acc.columns.contains(v)) acc = acc.withColumn(v, resolve(t0) match {
           case Num(x) => lit(x)
+          case V(x)   => throw new IllegalArgumentException(s"BIND of variable ?$x unsupported")
           // a predicate-name constant surfaces as the name STRING —
           // this dialect's predicate representation (what ?rel binds
           // in the directClaim triangle)
-          case Lit(x) if x.startsWith(PredName) => lit(x.stripPrefix(PredName))
-          case Lit(x) => lit(bareIri(x))
-          case V(x)   => throw new IllegalArgumentException(s"BIND of variable ?$x unsupported")
+          case x => lit(litText(x))
         })
       }
       acc
@@ -2222,24 +2177,22 @@ object Sparql {
             s"CONSTRUCT template subject ?$n is literal-typed — subjects are entities")
           col(n)
         case Num(v) => lit(v)
-        case Lit(v) if v.startsWith(Pfx) => lit(entAlias(v.stripPrefix(Pfx)))
-        case Lit(v) => throw new IllegalArgumentException(
-          s"literal subject '$v' in CONSTRUCT template")
+        case Prefixed(n) => lit(entAlias(n))
+        case t => throw new IllegalArgumentException(
+          s"literal subject '${litText(t)}' in CONSTRUCT template")
       }
-      require(!tp.p.startsWith("?"),
-        "variable predicate in a CONSTRUCT template is unsupported")
-      val pName = if (PrefixedRe.matches(tp.p))
-        g.predAliases.getOrElse(tp.p, throw new IllegalArgumentException(
-          s"prefixed predicate '${tp.p}' has no alias in the dialect map"))
-        else tp.p
+      val pName = tp.p match {
+        case Name(n) => storePred(g, n)
+        case other => throw new IllegalArgumentException(
+          s"a CONSTRUCT template predicate must be a name (no variable or path), got $other")
+      }
       tp.o match {
         case V(n) if sel.schema(n).dataType.typeName == "long" =>
           Triples.rows(sel, sCol, lit(pName), oId = col(n))
         case V(n)   => Triples.rows(sel, sCol, lit(pName), oVal = col(n).cast("string"))
         case Num(v) => Triples.rows(sel, sCol, lit(pName), oId = lit(v).cast("long"))
-        case Lit(v) if v.startsWith(Pfx) =>
-          Triples.rows(sel, sCol, lit(pName), oId = lit(entAlias(v.stripPrefix(Pfx))))
-        case Lit(v) => Triples.rows(sel, sCol, lit(pName), oVal = lit(v))
+        case Prefixed(n) => Triples.rows(sel, sCol, lit(pName), oId = lit(entAlias(n)))
+        case t => Triples.rows(sel, sCol, lit(pName), oVal = lit(litText(t)))
       }
     }.reduce(_ unionAll _).distinct()
   }

@@ -546,7 +546,7 @@ object SparqlQueries {
 
   /** Inverse-of-sequence path text — the compiler's LAST loud reject
     * (rounds ≤11: "inverse applies to names, not sequences"), closed
-    * by [[invertPathText]]'s parse-time rewrite
+    * by the parser's inverse rewrite
     * `^(p₁/…/pₙ) = ^pₙ/…/^p₁`:
     *   - `invseq`: `^(fgt:P2/fgt:P3)` — plain inverse-of-sequence,
     *     desugars to `^fgt:P3/^fgt:P2` (region ← nation ← member);

@@ -538,7 +538,7 @@ class SparqlSpec extends SparkSpec {
     val q = Sparql.parse(
       """SELECT ?c WHERE { ?c mktsegment "A#B;C.D" . }""")
     assert(q.body.patterns == Seq(Sparql.Pattern(
-      Sparql.V("c"), "mktsegment", Sparql.Lit("A#B;C.D"))))
+      Sparql.V("c"), Sparql.Name("mktsegment"), Sparql.Lit("A#B;C.D"))))
     // numeric object on a LITERAL-valued predicate compares o_val,
     // never the (always-null) o_id
     val num = Sparql.run(spark, sf, "SELECT ?c WHERE { ?c mktsegment 42 . }")
@@ -1213,6 +1213,15 @@ class SparqlSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq.sorted
     assert(expected.nonEmpty && members(region) == expected)
     assert(members(-1L).isEmpty)
+  }
+
+  test("a malformed path fails in parse, before any compile") {
+    val empty = intercept[IllegalArgumentException](Sparql.parse(
+      "SELECT ?a ?b WHERE { ?a in_nation//in_region ?b . }"))
+    assert(empty.getMessage.contains("unsupported path segment"), empty.getMessage)
+    val open = intercept[IllegalArgumentException](Sparql.parse(
+      "SELECT ?a ?b WHERE { ?a ^(in_nation/in_region ?b . }"))
+    assert(open.getMessage.contains("unbalanced"), open.getMessage)
   }
 
   test("a PREFIX declaration may share its line with SELECT") {
