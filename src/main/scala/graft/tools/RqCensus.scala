@@ -13,13 +13,12 @@ import graft.kg.Sparql
   *   sbt 'runMain graft.tools.RqCensus <dir-with-rq-files>'
   *
   * Parse-level only (dialect maps bind at compile time): a PARSE line
-  * means the file's structure — BGPs, OPTIONAL/UNION groups, paths,
-  * label service, MINUS/NOT EXISTS, VALUES, BINDs, aggregates — is
-  * fully recognized, and running it is a matter of supplying the
-  * deployment's predicate/entity alias maps. REJECT lines fall into
-  * the documented out-of-scope classes (endpoint federation,
-  * branch-scoped keyword groups, expression BINDs beyond the
-  * IRI-CONCAT form).
+  * means the file's structure — BGPs, OPTIONAL/UNION groups, property
+  * paths (parsed with the query), label service, MINUS/NOT EXISTS,
+  * VALUES, BINDs, aggregates — is fully recognized, and running it is
+  * a matter of supplying the deployment's predicate/entity alias maps.
+  * A reject line carries the parser's message for the first construct
+  * outside the supported subset.
   */
 object RqCensus {
   def main(args: Array[String]): Unit = {
